@@ -2,7 +2,7 @@
 # deterministically failing test because the suite was never run at the
 # commit. Nothing gets snapshotted without `make preflight` green.
 
-.PHONY: test verify audit empty-sweep skew-sweep determinism bench pipeline-bench preflight
+.PHONY: test verify audit empty-sweep skew-sweep determinism bench perfbench pipeline-bench preflight
 
 test:
 	python -m pytest tests/ -q
@@ -30,6 +30,10 @@ determinism:
 
 bench:
 	python bench.py
+
+perfbench:
+	python3 perfbench/run.py --workload telemetry_etl --seed 1 --seconds 5 --trace 0
+	python3 perfbench/run.py --workload dedup_hot --seed 1 --seconds 5 --trace 0
 
 pipeline-bench:
 	python tools/pipeline_bench.py

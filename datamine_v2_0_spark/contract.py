@@ -47,12 +47,8 @@ from datamine_v2_0_spark.queries.pipelines import *  # noqa: F401,F403
 #                  (hll_portable_rollup gained period-nesting
 #                  validation and the registered query now passes
 #                  bucket_seconds; hll_portable_estimate switched to
-#                  the per-m small-register alpha constants), then the
-#                  same six auto-collapse family representatives as
-#                  round 12, because _planning_stats changed again
-#                  (the byte gate now requires every optimized-plan
-#                  leaf to be a sized relation before trusting
-#                  Catalyst sizeInBytes — round-12 ADVICE):
+#                  the per-m small-register alpha constants), then six
+#                  auto-collapse family representatives:
 #                  dedup_minhash_lsh + dedup_against (pair family),
 #                  dedup_jaccard_inverted + dedup_containment (posting
 #                  family), text_bm25 (doc/query product rule),

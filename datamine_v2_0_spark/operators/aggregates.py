@@ -163,10 +163,8 @@ def exact_percentiles_sorted(
     """
     keys = list(keys)
     if not keys:
-        # grouped-only operator (the final NULL-group right-join needs a
-        # key; this has always been the contract — the empty-keys call
-        # crashed in the join before too). Global percentiles:
-        # exact_percentiles / approx_percentiles.
+        # grouped-only operator (this has always been the contract).
+        # Global percentiles: exact_percentiles / approx_percentiles.
         raise ValueError(
             "exact_percentiles_sorted needs at least one key; "
             "use exact_percentiles for global quantiles"
@@ -179,10 +177,13 @@ def exact_percentiles_sorted(
     if two_pass == "auto":
         import os
 
-        from datamine_v2_0_spark.operators.dedup import _plan_scan_bytes
+        from datamine_v2_0_spark.operators.dedup import (
+            _parse_bytes, _plan_scan_bytes,
+        )
 
-        limit = int(
-            os.environ.get("SPARK_PCT_SORT_MAX_BYTES", PCT_SORT_MAX_BYTES)
+        limit = _parse_bytes(
+            os.environ.get("SPARK_PCT_SORT_MAX_BYTES", PCT_SORT_MAX_BYTES),
+            "SPARK_PCT_SORT_MAX_BYTES",
         )
         size = _plan_scan_bytes(src)
         use_two_pass = size is None or size > limit
@@ -194,9 +195,13 @@ def exact_percentiles_sorted(
         out = _percentiles_one_sort(src, keys, quantiles)
     # groups whose value column is entirely NULL vanished at the
     # isNotNull pre-filter; re-attach them with NULL percentiles to match
-    # exact_percentiles / PERCENTILE_CONT semantics
-    all_keys = df.select(*keys).distinct()
-    return out.join(all_keys, keys, "right")
+    # exact_percentiles / PERCENTILE_CONT semantics. groupBy keeps a
+    # NULL key as its own group, which a plain equi join would drop.
+    missing = (
+        df.groupBy(*keys).agg(F.count(value).alias("__c"))
+        .filter(F.col("__c") == 0).select(*keys)
+    )
+    return out.unionByName(missing, allowMissingColumns=True)
 
 
 def _percentiles_one_sort(src, keys, quantiles) -> DataFrame:
@@ -281,7 +286,8 @@ def _percentiles_two_pass(src, keys, quantiles, buckets) -> DataFrame:
             nb.cast("int") - F.lit(1),
         ),
     )
-    srcb = src.join(var.select(*keys, "__lo", "__hi"), keys).select(
+    # key joins are NULL-safe: a NULL group key is a group like any other
+    srcb = _join_back_nullsafe(src, var.select(*keys, "__lo", "__hi"), keys).select(
         *keys, "__v", b_expr.alias("__b")
     )
     hist = srcb.groupBy(*keys, "__b").agg(F.count(F.lit(1)).alias("__nb"))
@@ -305,7 +311,7 @@ def _percentiles_two_pass(src, keys, quantiles, buckets) -> DataFrame:
         F.explode(F.array_distinct(F.array(*rank_exprs))).alias("__r"),
     )
     # locate each target rank's bucket: preceding count < r <= through
-    located = targets.join(cum, keys).filter(
+    located = _join_back_nullsafe(targets, cum, keys).filter(
         (F.col("__r") > F.col("__cb"))
         & (F.col("__r") <= F.col("__cb") + F.col("__nb"))
     ).select(*keys, "__b", "__n", "__r", (F.col("__r") - F.col("__cb")).alias("__lr"))
@@ -313,10 +319,10 @@ def _percentiles_two_pass(src, keys, quantiles, buckets) -> DataFrame:
     # pick pass: only located buckets survive; ranking is per
     # (group, bucket) — parallel across and INSIDE groups
     needed = located.select(*keys, "__b").distinct()
-    cands = srcb.join(needed, keys + ["__b"], "left_semi")
+    cands = _join_back_nullsafe(srcb, needed, keys + ["__b"])
     w_loc = Window.partitionBy(*(keys + ["__b"])).orderBy("__v")
     ranked = cands.withColumn("__lrn", F.row_number().over(w_loc))
-    picked = ranked.join(located, keys + ["__b"]).filter(
+    picked = _join_back_nullsafe(ranked, located, keys + ["__b"]).filter(
         F.col("__lrn") == F.col("__lr")
     )
 

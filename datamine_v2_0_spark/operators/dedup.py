@@ -362,7 +362,6 @@ def minhash_near_dup_pairs(
     shingle_n: int = 3,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    dup_stats: tuple[int, float, int] | None = None,
     reliable: bool = False,
 ) -> DataFrame:
     """Banded MinHash-LSH candidates → exact n-gram Jaccard verify, with
@@ -392,15 +391,12 @@ def minhash_near_dup_pairs(
     matching the direct path, where a signature-less doc never pairs.
     Only the (inherently output-sized) fan-out scales with duplication.
 
-    ``dup_stats``: precomputed probe tuple (see :func:`dup_stats`) so
-    composed flows pay one probe across operators; ``reliable``: durable
-    lineage truncation (see :func:`_rep_groups` / ckpt.iter_checkpoint).
+    ``reliable``: durable lineage truncation (see :func:`_rep_groups` /
+    ckpt.iter_checkpoint).
     Probe results are cached per (session, plan, column): if this session OVERWRITES the files behind ``df`` and re-runs on an identical plan, call :func:`clear_dup_stats_cache` first or the auto switch plans from stale stats (plan choice only — both plans are result-exact).
     """
     df = _spread(df)
-    if _resolve_pair_collapse(
-        df, text_col, duplicate_collapse, stats=dup_stats, id_col=id_col
-    ):
+    if _resolve_pair_collapse(df, text_col, duplicate_collapse):
         return _minhash_near_dup_collapsed(
             df, text_col, id_col, threshold, num_hashes, bands,
             shingle_n, round_to, reliable,
@@ -460,46 +456,6 @@ def _minhash_near_dup_collapsed(
     return cross.unionByName(within)
 
 
-def _estimate_duplication(df: DataFrame, text_col: str, ratio: float) -> bool:
-    """One narrow scan deciding the collapse switch: raw-byte xxhash64
-    (no normalization pass) is enough for a docs-per-distinct-text ratio
-    estimate — crawl duplicates are byte-identical."""
-    probe = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(F.xxhash64(F.col(text_col))).alias("nd"),
-    ).first()
-    return probe["n"] >= ratio * max(probe["nd"], 1)
-
-
-def _dup_blowup(df: DataFrame, text_col: str) -> float:
-    """Exact candidate-pair blowup factor: Σ|group|² / n over raw-byte
-    xxhash64 duplicate groups — the expected duplicate-group size seen
-    by a random document, i.e. the factor by which exact duplication
-    multiplies per-pair candidate/verify work in a bucketed pipeline.
-
-    The docs-per-distinct RATIO cannot drive the pair-family collapse
-    switch because it is blind to group-size CONCENTRATION: a 4x
-    uniform-duplicate corpus (ratio 4.0, blowup 4 — tiny groups, the
-    direct path's per-pair work stays trivial) measured 2.1x FASTER
-    direct, while the skewed corpus (ratio 1.66, blowup 80 — one viral
-    group holding 40% of docs) measured 5x faster collapsed, and a
-    corpus with 1% of a billion docs on one viral text (ratio 1.01,
-    blowup 10^5) NEEDS the collapse while never moving the ratio.
-    Blowup orders all of these correctly; ratio orders them backwards.
-
-    One narrow shuffle of 8-byte keys (map-side combine bounds the
-    shuffle by per-partition distincts). The decision path uses this
-    EXACT probe (via ``_dup_stats``) up to SAMPLED_PROBE_MIN_N docs —
-    at measurable scales the full probe is noise next to the operator
-    (the round-5 sampled gate measured 6× slower than the probe it was
-    gating, commit 7f070f6, because it paid df.count() + a sampling
-    pass on a corpus where one exact pass was already cheap). Above the
-    cutoff the resolvers switch to :func:`_dup_stats_sampled` with an
-    at-threshold exact fallback — calibrated decision-parity in
-    tools/probe_calibration.py / SCALING.md."""
-    return _dup_stats(df, text_col)[1]
-
-
 # Session-scoped probe cache keyed on (session id, analyzed-plan
 # semantic hash, column): composed flows (bm25 inside rrf_fuse, several
 # dedup operators over the same gated corpus) each call the probe on a
@@ -513,19 +469,10 @@ def _dup_blowup(df: DataFrame, text_col: str) -> float:
 _DUP_STATS_CACHE: dict[tuple[int, int, str], tuple[int, float, int]] = {}
 _DUP_STATS_CACHE_MAX = 256
 
-# Sampled-probe results live in their own cache (same key) because the
-# value shape differs: (min_detect_cmax the draw was sized for,
-# (n, blowup_est, cmax_est)). A cached sampled entry is only reusable
-# by a caller whose detection requirement is no finer than the cached
-# draw's — _planning_stats checks that before sharing.
-_SAMPLED_STATS_CACHE: dict[
-    tuple[int, int, str], tuple[float, tuple[int, float, int]]
-] = {}
-
-# Number of probe scans actually EXECUTED this session (cache hits and
-# caller-supplied stats don't count) — instrumentation for the
-# probe-sharing contract (pytest asserts scan counts; the SCALING.md
-# round-10 table records measured per-query scan reductions).
+# Number of probe scans actually EXECUTED this session (cache hits
+# don't count) — instrumentation for the probe-sharing contract (pytest
+# asserts scan counts; the SCALING.md round-10 table records measured
+# per-query scan reductions).
 DUP_STATS_PROBE_RUNS = 0
 
 
@@ -533,20 +480,16 @@ def clear_dup_stats_cache() -> None:
     """Drop every cached probe result (e.g. after overwriting the files
     a live DataFrame reads, which the cache key cannot see)."""
     _DUP_STATS_CACHE.clear()
-    _SAMPLED_STATS_CACHE.clear()
 
 
 def dup_stats(df: DataFrame, text_col: str) -> tuple[int, float, int]:
     """Public form of the exact duplication probe: (n, blowup, cmax)
     over raw-byte xxhash64 duplicate groups of ``text_col``.
 
-    Compose-and-share contract: a pipeline running several
-    collapse-capable operators over the SAME corpus should call this
-    once and pass the tuple to each operator's ``dup_stats=`` parameter
-    — every ``duplicate_collapse='auto'`` resolution then reuses the one
-    probe instead of re-scanning the text column per operator. (Repeat
-    calls on a semantically identical DataFrame within a session hit a
-    plan-keyed cache even without the parameter.)"""
+    Every ``duplicate_collapse='auto'`` resolution plans from this one
+    scan. Calls on a semantically identical DataFrame within a session
+    hit a plan-keyed cache, so a pipeline running several
+    collapse-capable operators over the SAME corpus pays one probe."""
     return _dup_stats(df, text_col)
 
 
@@ -562,7 +505,7 @@ def _dup_stats(df: DataFrame, text_col: str) -> tuple[int, float, int]:
     being planned will itself run; the probe is noise next to the cost
     of picking the wrong plan. Results are memoized per (session,
     analyzed plan, column) so multi-operator flows pay one scan — see
-    :func:`dup_stats` for the caveat and :func:`clear_dup_stats_cache`."""
+    the cache note above and :func:`clear_dup_stats_cache`."""
     global DUP_STATS_PROBE_RUNS
     key = None
     try:
@@ -589,202 +532,6 @@ def _dup_stats(df: DataFrame, text_col: str) -> tuple[int, float, int]:
     return out
 
 
-def _dup_blowup_sampled(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    target_m: int | None = None,
-) -> float:
-    """Unbiased blowup estimate from a DETERMINISTIC member-level
-    sample: rows with pmod(xxhash64(id), K) == 0, K sized so ~target_m
-    rows survive. With per-member inclusion at rate s = 1/K,
-    E[c_s(c_s-1)] = s²·c(c-1) per group, so
-
-        blowup ≈ 1 + Σ_sample c_s(c_s-1) / (s²·n).
-
-    Detection math (why the default target_m = max(2·10⁵, 20·√n) is
-    enough at ANY corpus size): the signal is same-group sample
-    collisions, E ≈ s²·n·(blowup-1)/2 = target_m²·(blowup-1)/(2n).
-    With target_m = 20·√n that is 200·(blowup-1) collisions regardless
-    of n — the detection floor is a CONSTANT blowup ≈ 1.25, safely
-    under every family threshold, while the sample stays ≤ ~2M rows
-    even at 10¹⁰ docs (0.02%). Groups that drive a large blowup
-    contribute proportionally more collisions themselves, so
-    concentration is exactly what samples most reliably.
-
-    Id-hash selection keeps the probe layout- and seed-free (same
-    decision on every run/replica), and samples MEMBERS independently —
-    sampling whole text-groups would make the one-mega-group corpus an
-    all-or-nothing coin flip. Cost: one column scan + a shuffle of only
-    the sampled rows; small corpora (n ≤ 4·target_m) use the exact
-    probe outright."""
-    n = df.count()
-    if n == 0:
-        return 0.0
-    if target_m is None:
-        target_m = max(200_000, int(20 * n ** 0.5))
-    if n <= 4 * target_m:
-        return _dup_blowup(df, text_col)
-    k = max(2, round(n / target_m))
-    sample = df.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(k)) == 0)
-    g = sample.groupBy(F.xxhash64(F.col(text_col)).alias("__h")).agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    r = g.agg(
-        F.sum(F.col("__c") * (F.col("__c") - 1)).alias("__cc")
-    ).first()
-    cc = r["__cc"] or 0
-    s = 1.0 / k
-    return 1.0 + cc / (s * s * n)
-
-
-# --- Sampled planning probe (round 11) -------------------------------------
-#
-# Above SAMPLED_PROBE_MIN_N docs the plan-time exact probe's full scan
-# (xxhash64 of EVERY text) is the single largest planning cost left at
-# 100x scale, and the collapse decisions only need (trimmed blowup,
-# cmax) to ONE decision bit each. The sampled probe estimates both from
-# a deterministic member-level sample and decides outright when the
-# estimates sit FAR from every threshold; inside a +/-PROBE_GUARD_BAND
-# multiplicative band of any threshold it falls back to the exact probe
-# (the at-threshold fallback), so a decision flip requires the estimate
-# to be wrong by more than the guard factor. tools/probe_calibration.py
-# measures the residual flip rate at matched sampling intensity on the
-# full stress band + skew/16x replicas + 16x-scaled hot bands where the
-# sample genuinely estimates a mega-group cmax (85 corpus x rule cells,
-# 50 genuinely sampled, 20 salted draws each — PROBE_CALIB.jsonl /
-# SCALING.md): 0 flips in 1000 draws, including with the guard band
-# disabled; 340 draws landed in-band and would defer to the exact probe.
-#
-# Detectability is the sizing rule, not a fixed rate: a constant-cmax
-# ceiling (containment's 3,464) is INVISIBLE to a fixed 2M-row sample
-# at n=10^10 (0.7 expected sampled members), so target_m is bumped to
-# keep >= PROBE_MIN_HITS expected members in a threshold-sized group:
-# the pair family's sqrt(beta*n/P) threshold needs only the default
-# 20*sqrt(n) sample, while containment at n=10^10 needs a ~3% sample —
-# still a 30x cut over hashing every text, and priced honestly here
-# rather than silently undetected.
-SAMPLED_PROBE_MIN_N = 5_000_000
-PROBE_GUARD_BAND = 2.0
-PROBE_MIN_HITS = 50
-# target_m floor (the 20*sqrt(n) detection-math default's absolute
-# minimum) — module constant so the cutoff-boundary pytest can scale
-# the whole mechanism down to test-sized corpora.
-SAMPLED_PROBE_TARGET_M_FLOOR = 200_000
-
-# Executed SAMPLED probe scans this session (cache hits don't count) —
-# companion to DUP_STATS_PROBE_RUNS for the probe-count plan audit.
-DUP_STATS_SAMPLED_RUNS = 0
-
-
-def _dup_stats_sampled(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    min_detect_cmax: float,
-    target_m: int | None = None,
-    salt: str | None = None,
-) -> tuple[int, float, int]:
-    """(n, blowup_est, cmax_est) from one deterministic member-level
-    sample pass — the sampled counterpart of :func:`_dup_stats`, same
-    tuple shape so the resolvers consume either.
-
-    Estimators (inclusion rate s = 1/K, member-level id-hash sample):
-    blowup_est = 1 + (sum c_s(c_s-1)) / (s^2 n) — the COLLISION form,
-    unbiased since E[c_s(c_s-1)] = s^2 c(c-1), and its noise comes only
-    from same-group pair collisions (a sum-of-squares form would add
-    the sample-size fluctuation amplified by 1/(s^2 n), which
-    calibration measured flipping decisions at low rates; the collision
-    form's per-draw sigma is ~(blowup-1)/sqrt(collisions), pinned to a
-    constant by the 20*sqrt(n) floor below). cmax_est = max(c_s)/s
-    (multiplicative error ~1/sqrt(s*cmax), which the guard-band
-    fallback in the resolvers absorbs). ``target_m`` defaults to
-    max(floor, 20*sqrt(n)) — the blowup detectability term: collisions
-    at the spread threshold are ~200*(blowup-1) regardless of n — and
-    is raised to n*PROBE_MIN_HITS/min_detect_cmax so a group at the
-    caller's smallest decision-relevant cmax keeps >= PROBE_MIN_HITS
-    expected sampled members. ``salt`` perturbs the sampling hash —
-    calibration tooling only (tools/probe_calibration.py sweeps salts
-    to measure the flip-rate distribution); production planning is
-    salt-free so every run/replica makes the same decision."""
-    global DUP_STATS_SAMPLED_RUNS
-    if n == 0:
-        return (0, 0.0, 0)
-    if target_m is None:
-        target_m = max(SAMPLED_PROBE_TARGET_M_FLOOR, int(20 * n ** 0.5))
-    if min_detect_cmax > 0:
-        target_m = max(target_m, int(n * PROBE_MIN_HITS / min_detect_cmax) + 1)
-    if n <= 4 * target_m:
-        return _dup_stats(df, text_col)
-    k = max(2, round(n / target_m))
-    key_expr = (
-        F.col(id_col)
-        if salt is None
-        else F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))
-    )
-    sample = df.filter(F.pmod(F.xxhash64(key_expr), F.lit(k)) == 0)
-    g = sample.groupBy(F.xxhash64(F.col(text_col)).alias("__h")).agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    r = g.agg(
-        F.sum(F.col("__c") * (F.col("__c") - 1)).alias("__cc"),
-        F.max("__c").alias("__mx"),
-    ).first()
-    DUP_STATS_SAMPLED_RUNS += 1
-    s = 1.0 / k
-    cc = r["__cc"] or 0
-    mx = r["__mx"] or 0
-    blowup_est = 1.0 + cc / (s * s * n)
-    cmax_est = max(1, round(mx / s)) if mx else 0
-    return (n, blowup_est, cmax_est)
-
-
-# Plan-estimated input bytes below which the exact probe is run
-# outright, WITHOUT the standalone df.count() cutoff test (round-11
-# ADVICE: every first auto resolution on a sub-cutoff corpus paid a
-# count job whose answer the exact probe's own aggregation re-derives).
-# The exact probe's cost is the same column scan the count pays plus a
-# 16-byte/doc shuffle, so below this many scan bytes it is strictly
-# cheaper to fold n discovery into the probe. A mispredict
-# (pathologically compressible texts putting n > SAMPLED_PROBE_MIN_N
-# under the byte gate) costs one exact scan on a small-bytes corpus —
-# the round-10 price — and yields strictly MORE precise stats, never a
-# worse decision. Module constant so the cutoff-boundary pytest can
-# scale the whole mechanism down.
-EXACT_PROBE_CHEAP_BYTES = 128 * 1024 * 1024
-
-
-def _plan_leaves_sized(df: DataFrame) -> bool:
-    """True when every leaf of the optimized plan is a relation whose
-    Catalyst sizeInBytes is grounded in real data (file scans: file
-    size × compression factor; local/cached relations: materialized
-    rows). Generated leaves (Range) report 8 bytes/row regardless of
-    what later projections synthesize — a spark.range-derived 6M-doc
-    text corpus estimates ~48 MB — so the byte gate must not trust
-    them (round-12 ADVICE: such a corpus above SAMPLED_PROBE_MIN_N was
-    routed to the full exact probe; bounded plan-time cost, never a
-    wrong result, but the gate should simply not fire there)."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        k = leaves.size()
-        if k == 0:  # pragma: no cover - defensive
-            return False
-        for i in range(k):
-            name = leaves.apply(i).getClass().getSimpleName()
-            # Relations (file scan, local rows, cached) carry real sizes;
-            # LogicalRDD (createDataFrame) reports either computed stats
-            # or the defaultSizeInBytes MAX — which the <= cheap-bytes
-            # comparison rejects on its own, so trusting it is safe in
-            # both directions. Everything else (Range & friends) is
-            # generated: 8 bytes/row fantasy, ungated.
-            if "Relation" not in name and name != "LogicalRDD":
-                return False
-        return True
-    except Exception:  # pragma: no cover - Connect/analysis corner
-        return False
-
-
 def _plan_scan_bytes(df: DataFrame) -> int | None:
     """Catalyst's optimized-plan size estimate in bytes (for file-scan
     frames: total input file size × the configured compression factor),
@@ -798,64 +545,6 @@ def _plan_scan_bytes(df: DataFrame) -> int | None:
     except Exception:  # pragma: no cover - Connect/analysis corner
         return None
 
-
-def _planning_stats(
-    df: DataFrame,
-    text_col: str,
-    id_col: str | None,
-    min_detect_cmax,
-) -> tuple[tuple[int, float, int], bool]:
-    """(stats, sampled?) for an ``auto`` collapse resolution: the exact
-    probe below SAMPLED_PROBE_MIN_N docs (or when a cached exact result
-    is already free, when the plan-estimated input is small enough that
-    the exact probe costs no more than the count it would replace, or
-    when the caller has no id column to sample on), else the sampled
-    probe sized to detect the caller's thresholds. ``min_detect_cmax``
-    is a callable n -> smallest cmax the caller's rule must see (the
-    lower guard-band edge of its ceiling)."""
-    if id_col is None:
-        return _dup_stats(df, text_col), False
-    key = None
-    try:
-        key = (id(df.sparkSession), df.semanticHash(), text_col)
-    except Exception:  # pragma: no cover - Connect/analysis corner
-        pass
-    if key is not None and key in _DUP_STATS_CACHE:
-        return _DUP_STATS_CACHE[key], False
-    size = _plan_scan_bytes(df)
-    if (
-        size is not None
-        and size <= EXACT_PROBE_CHEAP_BYTES
-        and _plan_leaves_sized(df)
-    ):
-        return _dup_stats(df, text_col), False
-    n = df.count()
-    if n <= SAMPLED_PROBE_MIN_N:
-        return _dup_stats(df, text_col), False
-    detect = min_detect_cmax(n)
-    # Sampled results share across a composed flow too, but only when
-    # the cached draw was at least as precise (smaller min_detect =
-    # larger sample) as this caller needs.
-    if key is not None and key in _SAMPLED_STATS_CACHE:
-        cached_detect, est = _SAMPLED_STATS_CACHE[key]
-        if cached_detect <= detect:
-            return est, True
-    est = _dup_stats_sampled(df, text_col, id_col, n, detect)
-    if key is not None:
-        if len(_SAMPLED_STATS_CACHE) >= _DUP_STATS_CACHE_MAX:
-            _SAMPLED_STATS_CACHE.clear()
-        _SAMPLED_STATS_CACHE[key] = (detect, est)
-    return est, True
-
-
-# Historical docs-per-distinct-text ratio threshold, retained for the
-# ratio probe's tooling uses. Round 9 retired RATIO as a switch
-# statistic entirely: it is blind to group-size concentration in both
-# directions (a 4x uniform corpus has ratio 4 but cheap direct plans; a
-# 1%-viral corpus has ratio 1.01 and a quadratic direct blow-up), and
-# the stress band (tools/collapse_band.py, SCALING.md) measured it
-# mispicking on every uniform band at or below 2x.
-COLLAPSE_RATIO = 1.25
 
 # ``auto`` collapse thresholds, calibrated by tools/collapse_band.py
 # on sf0.1 across uniform (u1.5-u16) and one-viral-group (h5-h40)
@@ -977,43 +666,23 @@ def _resolve_posting_collapse(
     duplicate_collapse: str,
     stats: tuple[int, float, int] | None = None,
     cmax_ceiling: int = POSTING_COLLAPSE_CMAX,
-    id_col: str | None = None,
-    blowup_threshold: float | None = None,
+    blowup_threshold: float = POSTING_COLLAPSE_BLOWUP,
 ) -> bool:
     """``auto`` plan pick for the posting-join family: trimmed blowup
     against the measured spread crossover, cmax against the hotspot
     ceiling (per-operator — containment crosses earlier, see
     CONTAINMENT_COLLAPSE_CMAX). No docs-per-distinct ratio gate — ratio
     stays near 1 on exactly the concentrated compositions where the
-    hotspot matters. ``stats`` short-circuits the probe with a
-    caller-supplied (n, blowup, cmax) — see :func:`dup_stats`. With an
-    ``id_col`` and > SAMPLED_PROBE_MIN_N docs the probe runs SAMPLED
-    (:func:`_dup_stats_sampled`); estimates inside the guard band of
-    either threshold re-run the exact probe before deciding."""
+    hotspot matters. ``stats`` injects (n, blowup, cmax) in place of the
+    exact probe (:func:`_dup_stats`)."""
     if duplicate_collapse not in ("auto", "always", "never"):
         raise ValueError(f"duplicate_collapse: {duplicate_collapse!r}")
     if duplicate_collapse != "auto":
         return duplicate_collapse == "always"
-    if blowup_threshold is None:
-        blowup_threshold = POSTING_COLLAPSE_BLOWUP
-    if stats is not None:
-        (n, blowup, cmax), sampled = stats, False
-    else:
-        (n, blowup, cmax), sampled = _planning_stats(
-            df, text_col, id_col, lambda _n: cmax_ceiling / PROBE_GUARD_BAND
-        )
+    n, blowup, cmax = stats or _dup_stats(df, text_col)
     if n == 0:
         return False
     trimmed = blowup - cmax * cmax / n
-    if sampled:
-        G = PROBE_GUARD_BAND
-        near = (
-            blowup_threshold / G <= trimmed <= blowup_threshold * G
-            or cmax_ceiling / G <= cmax <= cmax_ceiling * G
-        )
-        if near:  # at-threshold fallback: the exact probe decides
-            n, blowup, cmax = _dup_stats(df, text_col)
-            trimmed = blowup - cmax * cmax / n
     return trimmed >= blowup_threshold or cmax >= cmax_ceiling
 
 
@@ -1078,20 +747,24 @@ _BYTE_SUFFIX = {
 }
 
 
-def _broadcast_threshold_bytes(spark) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (Spark renders
-    it as a plain count or with a b/k/m/g suffix; -1 = disabled → 0)."""
+def _parse_bytes(raw, name: str) -> int:
+    """Byte count from a plain integer or one with a b/k/m/g/t(b)
+    suffix, as Spark renders size confs (negative = disabled → 0).
+    A malformed value raises a ValueError naming ``name``."""
     import re
 
+    m = re.fullmatch(r"\s*(-?\d+)\s*([a-zA-Z]*)\s*", str(raw))
+    if not m or m.group(2).lower() not in _BYTE_SUFFIX:
+        raise ValueError(f"{name}: not a byte size: {raw!r}")
+    return max(int(m.group(1)), 0) * _BYTE_SUFFIX[m.group(2).lower()]
+
+
+def _broadcast_threshold_bytes(spark) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (-1 = disabled
+    → 0; unreadable or malformed → 0)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
     try:
-        raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        m = re.fullmatch(r"\s*(-?\d+)\s*([a-zA-Z]*)\s*", raw)
-        if not m:
-            return 0
-        n = int(m.group(1))
-        if n < 0:
-            return 0
-        return n * _BYTE_SUFFIX.get(m.group(2).lower(), 1)
+        return _parse_bytes(spark.conf.get(key), key)
     except Exception:  # pragma: no cover - Connect/conf corner
         return 0
 
@@ -1131,7 +804,6 @@ def _resolve_pair_collapse(
     cmax_threshold: float | None = None,
     beta: float = PAIR_COLLAPSE_BETA,
     stats: tuple[int, float, int] | None = None,
-    id_col: str | None = None,
     intercept: float = 0.0,
 ) -> bool:
     """``auto`` plan pick for the pair family (minhash LSH /
@@ -1139,41 +811,17 @@ def _resolve_pair_collapse(
     reaches the serial-hotspot crossover — by default the scale-aware
     sqrt(beta·n/P) break-even (beta calibrated per operator, see the
     PAIR_COLLAPSE_BETA block; P from :func:`_plan_parallelism`),
-    overridable with an explicit ``cmax_threshold``. ``stats``
-    short-circuits the probe with a caller-supplied (n, blowup, cmax).
-    With an ``id_col`` and > SAMPLED_PROBE_MIN_N docs the probe runs
-    SAMPLED — the sqrt(beta*n/P) threshold grows with n at exactly the
-    rate that keeps a threshold-sized group's expected sampled-member
-    count constant under the 20*sqrt(n) sample, so detectability holds
-    at any n (see _dup_stats_sampled); a cmax estimate inside the guard
-    band re-runs the exact probe before deciding."""
+    overridable with an explicit ``cmax_threshold``. ``stats`` injects
+    (n, blowup, cmax) in place of the exact probe (:func:`_dup_stats`)."""
     if duplicate_collapse not in ("auto", "always", "never"):
         raise ValueError(f"duplicate_collapse: {duplicate_collapse!r}")
     if duplicate_collapse != "auto":
         return duplicate_collapse == "always"
-    if stats is not None:
-        (n, _, cmax), sampled = stats, False
-    else:
-        p = _plan_parallelism(df.sparkSession)
-        (n, _, cmax), sampled = _planning_stats(
-            df,
-            text_col,
-            id_col,
-            lambda _n: (
-                cmax_threshold
-                if cmax_threshold is not None
-                else _pair_cmax_threshold(_n, p, beta, intercept)
-            )
-            / PROBE_GUARD_BAND,
-        )
+    n, _, cmax = stats or _dup_stats(df, text_col)
     if cmax_threshold is None:
         cmax_threshold = _pair_cmax_threshold(
             n, _plan_parallelism(df.sparkSession), beta, intercept
         )
-    if sampled:
-        G = PROBE_GUARD_BAND
-        if cmax_threshold / G <= cmax <= cmax_threshold * G:
-            n, _, cmax = _dup_stats(df, text_col)  # at-threshold fallback
     return cmax >= cmax_threshold
 
 
@@ -1209,7 +857,6 @@ def jaccard_pairs_inverted(
     max_shingle_freq: int | None = None,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    dup_stats: tuple[int, float, int] | None = None,
     reliable: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via an inverted-index join: explode
@@ -1239,13 +886,11 @@ def jaccard_pairs_inverted(
     duplication. ``"auto"`` probes trimmed blowup + cmax against the
     posting family's measured crossovers (POSTING_COLLAPSE_BLOWUP /
     POSTING_COLLAPSE_CMAX — the self-join grows ~trimmed², so the
-    spread threshold sits low). ``dup_stats``: precomputed probe tuple
-    (see :func:`dup_stats`); ``reliable``: durable lineage truncation.
+    spread threshold sits low). ``reliable``: durable lineage
+    truncation.
     Probe results are cached per (session, plan, column): if this session OVERWRITES the files behind ``df`` and re-runs on an identical plan, call :func:`clear_dup_stats_cache` first or the auto switch plans from stale stats (plan choice only — both plans are result-exact)."""
     df = _spread(df)
-    if _resolve_posting_collapse(
-        df, text_col, duplicate_collapse, stats=dup_stats, id_col=id_col
-    ):
+    if _resolve_posting_collapse(df, text_col, duplicate_collapse):
         return _jaccard_pairs_collapsed(
             df, text_col, id_col, shingle_n, threshold,
             max_shingle_freq, round_to, reliable,
@@ -1410,7 +1055,6 @@ def containment_pairs_inverted(
     max_shingle_freq: int | None = None,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    dup_stats: tuple[int, float, int] | None = None,
     reliable: bool = False,
 ) -> DataFrame:
     """Asymmetric n-gram containment pairs via the same inverted-index
@@ -1442,13 +1086,12 @@ def containment_pairs_inverted(
     one-sided OR threshold keeps every subset pair a mega group's
     postings touch, so the direct join crosses at cmax ≈ 3.5k where
     jaccard still wins at 4k — measured h60/h80 bracket).
-    ``dup_stats``: precomputed probe tuple (see :func:`dup_stats`);
     ``reliable``: durable lineage truncation.
     Probe results are cached per (session, plan, column): if this session OVERWRITES the files behind ``df`` and re-runs on an identical plan, call :func:`clear_dup_stats_cache` first or the auto switch plans from stale stats (plan choice only — both plans are result-exact)."""
     df = _spread(df)
     if _resolve_posting_collapse(
-        df, text_col, duplicate_collapse, stats=dup_stats,
-        cmax_ceiling=CONTAINMENT_COLLAPSE_CMAX, id_col=id_col,
+        df, text_col, duplicate_collapse,
+        cmax_ceiling=CONTAINMENT_COLLAPSE_CMAX,
     ):
         return _containment_pairs_collapsed(
             df, text_col, id_col, shingle_n, threshold,
@@ -1716,7 +1359,7 @@ def embedding_neardup_pairs(
     )
     if not exact and _resolve_pair_collapse(
         base, vec_col, duplicate_collapse, beta=EMBED_COLLAPSE_BETA,
-        id_col=id_col, intercept=EMBED_COLLAPSE_INTERCEPT,
+        intercept=EMBED_COLLAPSE_INTERCEPT,
     ):
         from datamine_v2_0_spark.operators.similarity import (
             vector_rep_groups,
@@ -2495,7 +2138,6 @@ def dedup_against(
     bands: int = 16,
     shingle_n: int = 3,
     duplicate_collapse: str = "auto",
-    dup_stats: tuple[int, float, int] | None = None,
     reliable: bool = False,
 ) -> DataFrame:
     """Cross-corpus dedup: drop ``new_df`` docs that duplicate ANY
@@ -2544,32 +2186,12 @@ def dedup_against(
         )
     if method != "near":
         raise ValueError(f"method must be 'exact' or 'near', got {method!r}")
-    # ``dup_stats``, if supplied, must be the probe of the POOLED corpora
-    # (new ∪ ref on the text column) — that is what auto probes here.
-    # The probe id is SIDE-TAGGED before pooling (round-11 ADVICE): the
-    # sampled probe selects members on a hash of the id, and the
-    # re-ingest shape this operator exists for puts the same (id, text)
-    # on both sides — untagged, such a doc's two copies enter the
-    # sample together or not at all, so its same-group collisions occur
-    # at rate s instead of s² and blowup_est/cmax_est inflate by up to
-    # the sampling factor (plan-choice only, but it defeats the
-    # calibrated decision parity). Distinct per-side prefixes
-    # decorrelate inclusion while staying deterministic and salt-free.
+    # auto probes the POOLED corpora (new ∪ ref on the text column)
     if _resolve_pair_collapse(
-        new_df.select(
-            F.concat(F.lit("n:"), F.col(id_col).cast("string")).alias("__pid"),
-            F.col(text_col),
-        ).unionAll(
-            ref_df.select(
-                F.concat(F.lit("r:"), F.col(id_col).cast("string")).alias("__pid"),
-                F.col(text_col),
-            )
-        ),
+        new_df.select(text_col).unionAll(ref_df.select(text_col)),
         text_col,
         duplicate_collapse,
         beta=AGAINST_COLLAPSE_BETA,
-        stats=dup_stats,
-        id_col="__pid",
     ):
         return _dedup_against_collapsed(
             new_df, ref_df, text_col, id_col, threshold, num_hashes,

@@ -82,8 +82,6 @@ def bm25_topk(
     b: float = 0.75,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    doc_stats: tuple[int, float, int] | None = None,
-    query_stats: tuple[int, float, int] | None = None,
 ) -> DataFrame:
     """Top-k BM25 documents per query: (query_id, doc_id, score, rank).
 
@@ -117,11 +115,9 @@ def bm25_topk(
     physical-plan choice, the exactness does not depend on which side
     of the threshold a corpus lands.
 
-    ``doc_stats`` / ``query_stats``: precomputed probe tuples (see
-    dedup.dup_stats) so composed flows — rrf_fuse calling bm25 on the
-    same corpus another operator already probed — pay one probe per
-    corpus, not one per call. Repeat auto calls on a semantically
-    identical frame also hit dedup's session probe cache — so if this
+    Auto probes go through dedup's session probe cache, so composed
+    flows — rrf_fuse calling bm25 on the same corpus another operator
+    already probed — pay one probe per corpus, not one per call. If this
     session OVERWRITES the files behind ``docs``/``queries`` and
     re-runs an identical plan, call dedup.clear_dup_stats_cache() first
     or the auto switch plans from stale stats (plan choice only — both
@@ -137,29 +133,17 @@ def bm25_topk(
     )
 
     if duplicate_collapse == "auto":
-        # Doc side is the 100 TB side: above dedup.SAMPLED_PROBE_MIN_N
-        # its probe runs sampled with the at-threshold exact fallback
-        # inside the shared resolver; the query side is small by
-        # contract (probes/eval sets) and stays on the exact probe.
-        _, blow_q, _ = (
-            query_stats if query_stats is not None
-            else _dup_stats(queries, query_text_col)
-        )
+        _, blow_q, _ = _dup_stats(queries, query_text_col)
         # The product rule trimmed_d · blow_q >= BM25_COLLAPSE_BLOWUP
         # is routed through the shared posting resolver as a doc-side
-        # trimmed threshold of BM25_COLLAPSE_BLOWUP / blow_q — the
-        # division form is the identical predicate through the
-        # resolver's ±guard band (near iff T/G <= trimmed·blow_q <=
-        # T·G), so the sampled-probe fallback logic lives in ONE place
-        # (round-11 ADVICE). blow_q = 0 only for an empty query corpus,
-        # where the result is empty under either plan: score direct.
+        # trimmed threshold of BM25_COLLAPSE_BLOWUP / blow_q. blow_q = 0
+        # only for an empty query corpus, where the result is empty
+        # under either plan: score direct.
         collapse = blow_q > 0 and _resolve_posting_collapse(
             docs,
             text_col,
             "auto",
-            stats=doc_stats,
             cmax_ceiling=POSTING_COLLAPSE_CMAX,
-            id_col=id_col,
             blowup_threshold=BM25_COLLAPSE_BLOWUP / blow_q,
         )
     elif duplicate_collapse in ("always", "never"):

@@ -259,21 +259,24 @@ def test_exact_percentiles_sorted_matches_hashmap_variant(spark):
     rows = [Row(g=g, v=float(v)) for g in ("a", "b") for v in range(1, 8)]
     rows += [Row(g="a", v=100.0), Row(g="b", v=None)]  # uneven n + a null
     rows += [Row(g="c", v=None)]  # all-NULL group -> NULL percentiles
+    rows += [Row(g=None, v=1.0), Row(g=None, v=3.0)]  # NULL group key
     df = spark.createDataFrame(rows, "g string, v double")
     qs = (0.25, 0.5, 0.75, 0.95)
     a = {r["g"]: r for r in agg.exact_percentiles(df, ["g"], "v", qs).collect()}
-    b = {
-        r["g"]: r
-        for r in agg.exact_percentiles_sorted(df, ["g"], "v", qs).collect()
-    }
-    assert set(a) == set(b) == {"a", "b", "c"}
-    for g in a:
-        for q in qs:
-            c = f"p{int(q * 100)}"
-            if a[g][c] is None:
-                assert b[g][c] is None, (g, c)
-            else:
-                assert b[g][c] == pytest.approx(a[g][c], abs=1e-9), (g, c)
+    assert a[None]["p50"] == 2.0
+    for two_pass in ("never", "always"):
+        out = agg.exact_percentiles_sorted(df, ["g"], "v", qs, two_pass=two_pass)
+        got = out.collect()
+        b = {r["g"]: r for r in got}
+        assert len(got) == len(b), two_pass  # one row per group
+        assert set(a) == set(b) == {"a", "b", "c", None}, two_pass
+        for g in a:
+            for q in qs:
+                c = f"p{int(q * 100)}"
+                if a[g][c] is None:
+                    assert b[g][c] is None, (two_pass, g, c)
+                else:
+                    assert b[g][c] == pytest.approx(a[g][c], abs=1e-9), (two_pass, g, c)
 
 
 def test_interval_contain_join(spark):
@@ -1900,32 +1903,10 @@ def _dup_corpus(spark, group_sizes):
 def test_dup_blowup_exact(spark):
     # Σ|g|²/n: groups [4,1,1,1,1] over n=8 -> (16+4)/8 = 2.5
     df = _dup_corpus(spark, [4, 1, 1, 1, 1])
-    assert dd._dup_blowup(df, "text") == pytest.approx(2.5)
+    assert dd._dup_stats(df, "text")[1] == pytest.approx(2.5)
     # unique corpus -> 1.0
     uniq = _dup_corpus(spark, [1] * 6)
-    assert dd._dup_blowup(uniq, "text") == pytest.approx(1.0)
-
-
-def test_dup_blowup_sampled_small_corpus_is_exact(spark):
-    # below 4*target_m the sampled probe delegates to the exact one
-    df = _dup_corpus(spark, [3, 3, 1, 1])
-    assert dd._dup_blowup_sampled(df, "text", "doc_id") == pytest.approx(
-        dd._dup_blowup(df, "text")
-    )
-
-
-def test_dup_blowup_sampled_detects_concentration(spark):
-    # 2000 docs, one viral group of 400 (blowup ~80.6): force the
-    # sampling path with a small target_m and require the estimate to
-    # land the posting-family decision on the right side of its
-    # crossover
-    df = _dup_corpus(spark, [400] + [1] * 1600)
-    est = dd._dup_blowup_sampled(df, "text", "doc_id", target_m=300)
-    assert est >= dd.POSTING_COLLAPSE_BLOWUP
-    # near-unique corpus: estimate stays far below the threshold
-    uniq = _dup_corpus(spark, [2] * 1000)
-    est_u = dd._dup_blowup_sampled(uniq, "text", "doc_id", target_m=300)
-    assert est_u < dd.POSTING_COLLAPSE_BLOWUP
+    assert dd._dup_stats(uniq, "text")[1] == pytest.approx(1.0)
 
 
 def test_dup_stats_exact(spark):
@@ -2014,111 +1995,36 @@ def test_dup_stats_cache_overwrite_staleness(spark, tmp_path):
     assert fresh[0] == 20 and fresh[2] == 15
 
 
-def test_sampled_probe_estimator_accuracy(spark):
-    """_dup_stats_sampled within the guard-band factor of truth across
-    independent sample draws (salts) at ~80 expected sampled members of
-    the mega group — the intensity the detectability sizing guarantees
-    (PROBE_MIN_HITS floor, tools/probe_calibration.py measures the full
-    flip-rate distribution on the stress band)."""
-    hot = _dup_corpus(spark, [400] + [1] * 1600)  # n=2000, cmax=400
-    exact_n, exact_blowup, exact_cmax = dd._dup_stats(hot, "text")
-    assert (exact_n, exact_cmax) == (2000, 400)
-    for salt in (None, "0", "1", "2"):
-        n, blowup, cmax = dd._dup_stats_sampled(
-            hot, "text", "doc_id", n=2000, min_detect_cmax=0.0,
-            target_m=400, salt=salt,
-        )
-        assert n == 2000
-        assert exact_cmax / 2 <= cmax <= exact_cmax * 2
-        assert exact_blowup / 2 <= blowup <= exact_blowup * 2
-    # the n <= 4*target_m small-corpus guard inside the estimator
-    # returns the exact probe outright
-    assert dd._dup_stats_sampled(
-        hot, "text", "doc_id", n=2000, min_detect_cmax=0.0, target_m=600,
-    ) == (exact_n, exact_blowup, exact_cmax)
-
-
-def test_sampled_probe_cutoff_and_guard_band(spark, monkeypatch):
-    """The planning cutoff boundary (round-11 verdict task 1): exact
-    probe at or below SAMPLED_PROBE_MIN_N, sampled above; a sampled
-    cmax estimate inside the guard band of the pair threshold re-runs
-    the exact probe (at-threshold fallback), outside it the sample
-    decides alone."""
-    # n=10000 so the default 20*sqrt(n) sample (2000 rows) is a real
-    # sub-sample (the estimator's n <= 4*target_m guard returns exact
-    # below ~6400 docs); the mega group samples ~80 members at s=0.2
-    hot = _dup_corpus(spark, [400] + [1] * 9600)
-    # below the cutoff: exact, no sampled scan
-    dd.clear_dup_stats_cache()
-    s_runs = dd.DUP_STATS_SAMPLED_RUNS
-    stats, sampled = dd._planning_stats(hot, "text", "doc_id", lambda n: 50.0)
-    assert not sampled and stats == dd._dup_stats(hot, "text")
-    assert dd.DUP_STATS_SAMPLED_RUNS == s_runs
-    # above the cutoff: sampled scan runs, detectability sizing keeps
-    # the 400-strong group visible within the guard factor
-    monkeypatch.setattr(dd, "SAMPLED_PROBE_MIN_N", 100)
-    monkeypatch.setattr(dd, "PROBE_MIN_HITS", 20)
-    monkeypatch.setattr(dd, "SAMPLED_PROBE_TARGET_M_FLOOR", 50)
-    monkeypatch.setattr(dd, "EXACT_PROBE_CHEAP_BYTES", -1)
-    dd.clear_dup_stats_cache()
-    stats_s, sampled = dd._planning_stats(hot, "text", "doc_id", lambda n: 200.0)
-    assert sampled and dd.DUP_STATS_SAMPLED_RUNS == s_runs + 1
-    assert stats_s[0] == 10000 and 200 <= stats_s[2] <= 800
-    # identical-plan re-probe reuses the cached sampled draw ...
-    stats_s2, sampled2 = dd._planning_stats(hot, "text", "doc_id", lambda n: 200.0)
-    assert sampled2 and stats_s2 == stats_s
-    assert dd.DUP_STATS_SAMPLED_RUNS == s_runs + 1
-    # ... but a caller needing finer detection re-samples
-    dd._planning_stats(hot, "text", "doc_id", lambda n: 150.0)
-    assert dd.DUP_STATS_SAMPLED_RUNS == s_runs + 2
-    # guard band: threshold near the estimate -> exact fallback decides
-    dd.clear_dup_stats_cache()
-    e_runs = dd.DUP_STATS_PROBE_RUNS
-    assert not dd._resolve_pair_collapse(
-        hot, "text", "auto", cmax_threshold=500.0, id_col="doc_id"
-    )  # est ~400 inside [250, 1000] -> exact probe ran, 400 < 500
-    assert dd.DUP_STATS_PROBE_RUNS == e_runs + 1
-    # threshold far above the estimate -> the sample decides alone
-    dd.clear_dup_stats_cache()
-    e_runs = dd.DUP_STATS_PROBE_RUNS
-    assert not dd._resolve_pair_collapse(
-        hot, "text", "auto", cmax_threshold=1200.0, id_col="doc_id"
-    )  # est ~400 outside [600, 2400] -> direct, no exact scan
-    assert dd.DUP_STATS_PROBE_RUNS == e_runs
-
-
-def test_byte_gate_ignores_generated_plans(spark, tmp_path):
-    """Round-12 ADVICE: Catalyst sizeInBytes prices a Range leaf at 8
-    bytes/row no matter what later projections synthesize, so a
-    spark.range-derived 6M-doc corpus reads ~48 MB and would slip under
-    EXACT_PROBE_CHEAP_BYTES. The gate now requires every optimized-plan
-    leaf to be a relation (file scan / local / cached rows) before
-    trusting the estimate."""
-    from pyspark.sql import functions as F
-
-    gen = spark.range(100).select(
-        F.col("id").alias("doc_id"), F.md5(F.col("id").cast("string")).alias("text")
-    )
-    assert not dd._plan_leaves_sized(gen)
-    p = str(tmp_path / "bg.parquet")
-    gen.write.mode("overwrite").parquet(p)
-    filed = spark.read.parquet(p)
-    assert dd._plan_leaves_sized(filed)
-    # local relations are materialized rows — also trustworthy
-    local = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    assert dd._plan_leaves_sized(local)
-
-
 def test_auto_operators_share_one_probe_per_corpus(spark):
-    """Two collapse-capable operators over the SAME corpus pay one
-    probe scan total (the round-9 verdict's composed-flow cost), via
-    the plan-keyed cache — no caller plumbing required."""
+    """The plan-keyed cache is the only probe-sharing mechanism: an auto
+    operator's first call runs exactly one probe scan per frame it
+    probes, and a repeat call — or another operator over the SAME
+    corpus — runs none."""
+    from datamine_v2_0_spark.operators.retrieval import bm25_topk
+
     df = _dup_corpus(spark, [2] * 10)
+    ref = _dup_corpus(spark, [3] * 4)
+    docs = _dup_corpus(spark, [1] * 12)
+    queries = spark.createDataFrame(
+        [(1, "group 0 body"), (2, "alpha beta gamma")], "qid long, qtext string"
+    )
     dd.clear_dup_stats_cache()
-    before = dd.DUP_STATS_PROBE_RUNS
-    dd.minhash_near_dup_pairs(df, "text", "doc_id").count()
-    dd.jaccard_pairs_inverted(df, "text", "doc_id").count()
-    assert dd.DUP_STATS_PROBE_RUNS == before + 1
+
+    def probes(build) -> int:
+        before = dd.DUP_STATS_PROBE_RUNS
+        build()
+        return dd.DUP_STATS_PROBE_RUNS - before
+
+    assert probes(lambda: dd.minhash_near_dup_pairs(df, "text", "doc_id").count()) == 1
+    assert probes(lambda: dd.jaccard_pairs_inverted(df, "text", "doc_id").count()) == 0
+    # dedup_against probes the pooled new ∪ ref corpus: one frame
+    against = lambda: dd.dedup_against(df, ref, "text", "doc_id")  # noqa: E731
+    assert probes(against) == 1
+    assert probes(against) == 0
+    # bm25 probes the doc side and the query side: two frames
+    bm25 = lambda: bm25_topk(docs, queries, "text", "doc_id", "qtext", "qid")  # noqa: E731
+    assert probes(bm25) == 2
+    assert probes(bm25) == 0
 
 
 def test_collapsed_dedup_reliable_checkpoint_parity(spark, tmp_path):

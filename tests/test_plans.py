@@ -366,8 +366,25 @@ def test_pair_stream_clustering_removes_pair_exchange(spark):
     assert "Exchange hashpartitioning(id_a" not in cplan, cplan
 
 
-def test_broadcast_threshold_bytes_parsing(spark):
+def test_broadcast_threshold_bytes_parsing(spark, monkeypatch):
+    from datamine_v2_0_spark.operators import aggregates as agg
     from datamine_v2_0_spark.operators.dedup import _broadcast_threshold_bytes
+
+    # SPARK_PCT_SORT_MAX_BYTES takes the same suffixed sizes: 256m keeps
+    # a small input on the sort layout, 0 forces the two-pass layout,
+    # and a malformed value fails loudly, naming the variable
+    df = spark.range(4).select(F.lit("a").alias("g"), F.col("id").cast("double").alias("v"))
+
+    def two_pass_picked() -> bool:
+        out = agg.exact_percentiles_sorted(df, ["g"], "v", (0.5,))
+        return "__lo" in out._jdf.queryExecution().analyzed().toString()
+
+    for raw, want in [("256m", False), ("256MB", False), ("0", True)]:
+        monkeypatch.setenv("SPARK_PCT_SORT_MAX_BYTES", raw)
+        assert two_pass_picked() == want, raw
+    monkeypatch.setenv("SPARK_PCT_SORT_MAX_BYTES", "lots")
+    with pytest.raises(ValueError, match="SPARK_PCT_SORT_MAX_BYTES"):
+        two_pass_picked()
 
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:

@@ -234,32 +234,6 @@ def test_bm25_collapsed_plan_no_cartesian(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
-def test_bm25_supplied_stats_skip_probe_and_match_auto(spark):
-    """doc_stats/query_stats short-circuit the auto probe (the
-    composed-flow probe-sharing contract) without changing the plan
-    decision or the results."""
-    from datamine_v2_0_spark.operators import dedup as dd
-
-    docs = _corpus(spark)
-    q = spark.createDataFrame([(0, "apple"), (1, "banana cherry")],
-                              ["qid", "qtext"])
-    ds = dd.dup_stats(docs, "text")
-    qs = dd.dup_stats(q, "qtext")
-    base = sorted(_run(spark, [(0, "apple"), (1, "banana cherry")]))
-    dd.clear_dup_stats_cache()
-    before = dd.DUP_STATS_PROBE_RUNS
-    out = rt.bm25_topk(
-        docs, q, "text", "doc_id", "qtext", "qid",
-        doc_stats=ds, query_stats=qs,
-    )
-    got = sorted(
-        (r["query_id"], r["doc_id"], r["score"], r["rank"])
-        for r in out.collect()
-    )
-    assert got == base
-    assert dd.DUP_STATS_PROBE_RUNS == before  # zero probe scans ran
-
-
 # ---------------------------------------------------------------------------
 # retrieval_eval (nDCG@k / MRR@k / recall@k)
 # ---------------------------------------------------------------------------

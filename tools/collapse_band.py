@@ -21,7 +21,7 @@ are exactly the ones the round-8 weak mark conflated:
 
 Per (band, operator): run duplicate_collapse='never' and '=always'
 (min of --reps, first run discarded as warm-up for the band's scan),
-record the auto probe's (ratio, blowup) and which plan auto picks, and
+record the auto probe's (blowup, trimmed, cmax) and which plan auto picks, and
 compare the two plans' (row count, order-insensitive xxhash sum).
 
 Usage: python tools/collapse_band.py [src_sf_dir] [--reps N] [--bands ...]
@@ -155,8 +155,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from datamine_v2_0_spark.operators.dedup import (
-        _dup_stats, _estimate_duplication,
-        AGAINST_COLLAPSE_BETA, BM25_COLLAPSE_BLOWUP, COLLAPSE_RATIO,
+        _dup_stats,
+        AGAINST_COLLAPSE_BETA, BM25_COLLAPSE_BLOWUP,
         CONTAINMENT_COLLAPSE_CMAX,
         PAIR_COLLAPSE_BETA, _pair_cmax_threshold,
         POSTING_COLLAPSE_BLOWUP, POSTING_COLLAPSE_CMAX,
@@ -189,14 +189,12 @@ def main() -> None:
         docs = spark.read.parquet(path)
         n, blowup, cmax = _dup_stats(docs, "text")
         trimmed = (blowup - cmax * cmax / n) if n else 0.0
-        ratio_fires = _estimate_duplication(docs, "text", COLLAPSE_RATIO)
         for op_name, op in ops:
             rec = {
                 "band": band, "op": op_name, "n_docs": n,
                 "blowup": round(blowup, 2),
                 "trimmed": round(trimmed, 2),
                 "cmax": cmax,
-                "ratio_fires": ratio_fires,
             }
             # mirror the REAL auto rules (_resolve_posting_collapse /
             # _resolve_pair_collapse / retrieval.bm25_topk)

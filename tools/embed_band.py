@@ -121,13 +121,11 @@ def main() -> None:
                 best = dt if best is None else min(best, dt)
             times[mode] = round(best, 3)
         parity = fps["never"] == fps["always"]
-        # what auto would pick at this cell (exact probe — corpus is
-        # far below the sampled cutoff)
+        # what auto would pick at this cell
         stats = dd._dup_stats(df, "embedding")
         auto_collapse = dd._resolve_pair_collapse(
             df, "embedding", "auto", beta=dd.EMBED_COLLAPSE_BETA,
-            stats=stats, id_col="vec_id",
-            intercept=dd.EMBED_COLLAPSE_INTERCEPT,
+            stats=stats, intercept=dd.EMBED_COLLAPSE_INTERCEPT,
         )
         winner = "always" if times["always"] < times["never"] else "never"
         # rule stamp (round-11 verdict "What's wrong #2"): record WHICH

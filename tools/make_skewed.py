@@ -10,11 +10,14 @@ stays engine-agreed when a single key holds 30-50% of its table:
 tie-handling, per-key window blowups, salting, duplicate-collapse and
 AQE skew-split paths all get exercised where they actually matter.
 
-Notably, the duplicate-heavy documents table pushes the docs-per-
-distinct-text ratio past the posting-join family's collapse switch
-(operators/dedup.COLLAPSE_RATIO), so bm25/jaccard/containment run
-their representative-collapse paths UNDER the oracle gate — on uniform
-sf data those paths are reachable only by explicit opt-in.
+The documents replica of sf0.01 has dup_stats (n, blowup, cmax) =
+(500, 80.6, 200): one 200-copy viral group and a trimmed blowup of
+0.6. That is below every ``duplicate_collapse='auto'`` threshold
+(posting trimmed 4.5, pair-family cmax ~474, dedup_against ~221), so
+auto picks the DIRECT plan for every collapse-capable query here
+(minhash, dedup_against, jaccard, containment, bm25, embedding). The
+collapsed plans are checked against the direct ones by the
+'always'/'never' parity tests.
 
 Hot-slice membership is modulo-on-id (deterministic, layout-free):
 

@@ -2,8 +2,8 @@
 operator bench (the 64x replica topped out at 320k docs; round 12's
 probe ran at 6M but only the PLANNING stage).
 
-Corpus: the deterministic 6M-doc corpus from tools/probe_at_scale.py.
-Two shapes:
+Corpus: a deterministic 6M-doc corpus built by :func:`build_corpus`
+(Spark expressions only — no Python UDF, no RNG). Two shapes:
   - full (6M): 120k-doc viral group + 10k x 10 pockets + unique tail —
     used for the operators whose output stays corpus-sized (exact
     dedup, quality gate, token stats).
@@ -34,6 +34,37 @@ from pyspark.sql import functions as F
 
 SRC = "/tmp/probe6m/documents.parquet"
 OUT = os.environ.get("OPS_AT_SCALE_OUT", "/root/repo/OPS_AT_SCALE_r13.json")
+
+
+def build_corpus(spark) -> None:
+    """Write the 6M-doc corpus to SRC: doc_id < 120,000 is ONE viral
+    text, the next 100,000 ids are 10,000 texts x 10 copies, and the
+    rest is a unique ~224-char hex text (7 chained md5 blocks of the
+    id)."""
+    n, g_viral, pocket_texts = 6_000_000, 120_000, 10_000
+    pocket_end = g_viral + pocket_texts * 10
+    viral = "the quick brown fox jumps over the lazy dog " * 5  # ~225 chars
+    ids = spark.range(n).select(F.col("id").alias("doc_id"))
+    uniq = F.concat(*[
+        F.md5(F.concat(F.lit(f"u{j}:"), F.col("doc_id").cast("string")))
+        for j in range(7)
+    ])  # 7 x 32 hex chars = 224
+    pocket_key = F.pmod(F.col("doc_id") - g_viral, F.lit(pocket_texts))
+    pocket = F.concat(*[
+        F.md5(F.concat(F.lit(f"p{j}:"), pocket_key.cast("string")))
+        for j in range(7)
+    ])
+    text = (
+        F.when(F.col("doc_id") < g_viral, F.lit(viral))
+        .when(F.col("doc_id") < pocket_end, pocket)
+        .otherwise(uniq)
+    )
+    (
+        ids.withColumn("text", text)
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(SRC)
+    )
 
 
 def commit_sha() -> str:
@@ -78,9 +109,6 @@ def main() -> None:
     from datamine_v2_0_spark.operators import dedup as dd
     from datamine_v2_0_spark.operators import text as tx
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from probe_at_scale import build_corpus
-
     spark = get_spark("ops-at-scale")
     if not os.path.isdir(SRC):
         build_corpus(spark)
@@ -103,15 +131,16 @@ def main() -> None:
     )
 
     if "--skip-minhash" not in sys.argv:
-        # pair-emitting near-dedup on the no-viral shape; auto probes the
-        # corpus (sampled branch: n=5.88M > 5M cutoff) and picks direct
-        # (cmax = 10 << the ~51k threshold). The generated texts are
+        # pair-emitting near-dedup on the no-viral shape; auto runs the
+        # exact probe once and picks direct (cmax = 10 << the ~51k
+        # threshold). The generated texts are
         # single 224-char tokens — unshingleable at word 3-grams — so
         # the pair test spaces them into 8-char words on the fly
         # (duplicates stay duplicates, uniques stay unique): the 10k
         # pockets of 10 then yield 10,000 x C(10,2) = 450,000 true
         # near-dup pairs for the banding + verify machinery to find.
         dd.clear_dup_stats_cache()
+        probes0 = dd.DUP_STATS_PROBE_RUNS
         wordy = no_viral.withColumn(
             "text", F.regexp_replace("text", "(.{8})", "$1 ")
         )
@@ -124,7 +153,7 @@ def main() -> None:
         results["minhash_near_dup_5.88m"] = {
             "wall_sec": dt,
             "out_rows": n_pairs,
-            "sampled_probe_ran": dd.DUP_STATS_SAMPLED_RUNS > 0,
+            "probe_runs": dd.DUP_STATS_PROBE_RUNS - probes0,
         }
         print(f"minhash_near_dup_5.88m: {dt}s, {n_pairs} pairs", flush=True)
 

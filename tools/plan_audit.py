@@ -457,15 +457,13 @@ def main() -> None:
         try:
             captured.clear()
             # probe-count audit (round-11 verdict task 6): executed
-            # duplication-probe scans (exact + sampled) during plan
+            # duplication-probe scans during plan
             # construction under a FRESH cache — composed flows that
             # share one probe per corpus show it here, not in prose
             _dd.clear_dup_stats_cache()
-            probes0 = _dd.DUP_STATS_PROBE_RUNS + _dd.DUP_STATS_SAMPLED_RUNS
+            probes0 = _dd.DUP_STATS_PROBE_RUNS
             df = fn(spark, sf_dir)
-            n_probes = (
-                _dd.DUP_STATS_PROBE_RUNS + _dd.DUP_STATS_SAMPLED_RUNS - probes0
-            )
+            n_probes = _dd.DUP_STATS_PROBE_RUNS - probes0
             p = df._jdf.queryExecution().executedPlan().toString()
             n_sub = len(captured)
             if n_sub:
@@ -550,7 +548,7 @@ def main() -> None:
         "nonzero entries are audited bounded-relation stitches (the\n"
         "_dist_prefix_sums bucket-offsets window: exactly `buckets` rows\n"
         "by construction — see GLOBAL_WIN_OK). The probes column counts\n"
-        "EXECUTED duplication-probe scans (exact + sampled) during plan\n"
+        "EXECUTED duplication-probe scans during plan\n"
         "construction under a fresh cache — the probe-sharing contract\n"
         "is one scan per corpus per composed flow: dedup_minhash_lsh /\n"
         "dedup_against / the jaccard family read 1, bm25-family queries\n"
