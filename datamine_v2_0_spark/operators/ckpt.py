@@ -21,20 +21,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# The iterative operators (connected components, PageRank) also expose
-# ``pin_partitioning=True``: the relation an iteration re-reads is
-# hash-partitioned on its join key once and persist-ed (a cached
-# InMemoryRelation keeps its output partitioning under AQE, so the
-# per-iteration join stops re-shuffling it). Deliberately OPT-IN, not
-# size-triggered: the avoided exchange only pays where it crosses a
-# network. Single-node measurements refuted an edge-count threshold —
-# at 8M edges on local[32] the pinned PageRank ran ~2x SLOWER (local
-# shuffle writes hit the page cache while the columnar cache scan and
-# the fixed partition count AQE can no longer coalesce cost real time),
-# and pinned CC was a wash at 6M pairs. On a multi-rack cluster the
-# unpinned plan re-ships the full edge table all-to-all every
-# iteration; pinning replaces that with a node-local cache read — the
-# standard GraphX/Pregel edge-placement strategy.
+# A lazy (``eager=False``) checkpoint materializes on first use, and a
+# broadcast-exchange thread doing so while the DAG scheduler visits the
+# same RDD can deadlock on Spark's checkpoint locks. Connected components
+# cuts its edge set eagerly, since its seed labels and first hop both
+# read it.
 
 
 def iter_checkpoint(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
@@ -1455,17 +1455,22 @@ def embedding_neardup_pairs(
     )
 
 
+# hops per connected-components block: the convergence check rides on
+# the block's eager checkpoint job, so a block costs one job however
+# many hops it holds; 2 keeps a dense near-dup component to one block
+_CC_BLOCK_HOPS = 2
+
+
 def _cc_hop(edges: DataFrame, lab: DataFrame) -> DataFrame:
     """One min-label propagation hop: every node adopts the minimum of
-    its own label and its 1-hop neighborhood's labels.
+    its own label and its 1-hop neighborhood's labels. Returns
+    ``(node, comp, old_comp)``, where ``old_comp`` is the node's label
+    before this hop, so ``comp < old_comp`` counts this hop's changes.
 
-    ``edges`` is the symmetrized edge set, hash-partitioned on ``dst``
-    and persisted by :func:`connected_components` — the join on ``dst``
-    reads the cache co-partitioned, so only the label table shuffles.
-    Batching several hops between convergence checks keeps the eager
-    checkpoint + changed-count (fixed-overhead JOBS per cycle) amortized
-    — an extra in-lineage hop is just one more join+groupBy in the same
-    job, and a block that changes nothing still proves convergence.
+    ``edges`` is the symmetrized edge set that
+    :func:`connected_components` cuts once with an eager checkpoint;
+    its join on ``dst`` re-shuffles that cut every hop (a checkpointed
+    LogicalRDD reports no output partitioning under AQE).
 
     PRECONDITION: every ``edges.src`` must appear in ``lab.node``
     (src ⊆ lab). The union-based fold keys the output on nbr ∪ own
@@ -1481,20 +1486,18 @@ def _cc_hop(edges: DataFrame, lab: DataFrame) -> DataFrame:
     # same exchange as the neighborhood aggregation (guide §2.4).
     # old_comp rides as max-ignoring-nulls: each node has exactly one
     # own row carrying it; neighbor rows contribute null.
-    has_old = "old_comp" in lab.columns
     comp_t = dict(lab.dtypes)["comp"]
     nbr = edges.join(
         lab.select(F.col("node").alias("dst"), F.col("comp").alias("__c")),
         "dst",
-    ).select(F.col("src").alias("node"), "__c")
-    if not has_old:
-        own = lab.select("node", F.col("comp").alias("__c"))
-        return nbr.unionAll(own).groupBy("node").agg(
-            F.min("__c").alias("comp")
-        )
-    own = lab.select("node", F.col("comp").alias("__c"), "old_comp")
-    u = nbr.withColumn("old_comp", F.lit(None).cast(comp_t)).unionByName(own)
-    return u.groupBy("node").agg(
+    ).select(
+        F.col("src").alias("node"), "__c",
+        F.lit(None).cast(comp_t).alias("old_comp"),
+    )
+    own = lab.select(
+        "node", F.col("comp").alias("__c"), F.col("comp").alias("old_comp")
+    )
+    return nbr.unionAll(own).groupBy("node").agg(
         F.min("__c").alias("comp"), F.max("old_comp").alias("old_comp")
     )
 
@@ -1504,216 +1507,82 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
-    checkpoint: bool = True,
-    steps_per_check: int = 2,
     reliable: bool = False,
-    pin_partitioning: bool = False,
 ) -> DataFrame:
     """Resolve near-duplicate candidate PAIRS into duplicate GROUPS:
     returns (node, comp) where comp is the minimum node id reachable
     through the pair graph — the canonical-representative labeling a
     dedup pipeline needs (pairs alone can't tell you which docs to keep
-    when A~B and B~C but A!~C).
+    when A~B and B~C but A!~C). Pairs with a NULL endpoint are dropped,
+    so a NULL id never becomes a labelled node; an id seen only in such
+    pairs gets no row (:func:`dedup_groups` gives it its own group).
 
-    Algorithm: iterative min-label propagation — each round every node
+    Algorithm: iterative min-label propagation — each hop every node
     adopts the minimum label in its 1-hop neighborhood, so the component
-    minimum travels one hop per round and the loop stops when no label
-    changes (or at max_iterations). Rounds needed = component diameter;
-    near-dup components are small dense clusters (diameter 1-3), so this
-    settles in 2-4 rounds.
+    minimum travels one hop per round. Hops run in blocks of two; each
+    block ends in an eager checkpoint of the label table whose job also
+    counts (``DataFrame.observe``) the labels the block's last hop
+    lowered. Zero is a fixpoint of min-propagation, so the labels are
+    exact and the loop stops. Hops needed = component diameter + 1;
+    near-dup components are small dense clusters (diameter 1-3), so
+    this settles in 1-2 blocks. A component wider than
+    ``max_iterations`` hops raises ``RuntimeError`` rather than return
+    wrong groups.
 
     The symmetrized edge set — the LARGEST relation here, touched by
-    every hop's join on ``dst`` — is computed once and served from
-    executor blocks: ``localCheckpoint`` by default (the checkpointed
-    LogicalRDD is a constant-size plan leaf; a plain ``persist`` keeps
-    the whole pair-graph subtree in the logical plan and re-pays its
-    analysis/AQE cost on every convergence-check job — measured +~1.4 s
-    per run at sf0.1). With ``pin_partitioning=True`` it is instead
-    hash-partitioned on ``dst`` and ``persist``-ed: a cached
-    ``InMemoryRelation`` is the one construct whose output partitioning
-    survives reuse under AQE (a checkpointed LogicalRDD reports
-    UnknownPartitioning when the captured plan is an un-finalized
-    AdaptiveSparkPlan, so it re-shuffles every hop). Pinned, every hop
-    shuffles only the label table — the win where that exchange is
-    an all-to-all NETWORK pass, i.e. a multi-node cluster. OPT-IN
-    because on a single node it measured a wash at 6M pairs (min-of-4
-    interleaved: 21.7 s pinned vs 25.1 s unpinned, inside noise) and the
-    fixed partition count defeats AQE's small-shuffle coalescing on
-    small graphs. With ``reliable=True`` the edge derivation is first
-    cut to a durable checkpoint so an executor loss recomputes the
-    blocks from the checkpoint rather than replaying the (possibly
-    expensive) candidate-pair job. Per-round lineage truncation of the LABEL table
-    keeps plan size constant — ``localCheckpoint`` by default (fast, but
-    unreplicated executor blocks: an executor loss mid-job fails the job
-    loudly and needs a re-run), or durable ``checkpoint`` with
-    ``reliable=True`` (needs ``setCheckpointDir``; survives executor
-    loss — see operators/ckpt). For adversarial long-chain graphs prefer
-    the alternating large-star/small-star formulation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — same join
-    machinery, O(log n) rounds."""
+    every hop's join on ``dst`` — is cut once with an eager
+    checkpoint and the hops read its blocks. A checkpoint, not
+    ``persist``: a persisted frame keeps the whole pair-graph subtree
+    in the logical plan and re-pays its analysis/AQE cost on every
+    block's job (measured +~1.4 s per run at sf0.1), while the
+    checkpointed LogicalRDD is a constant-size plan leaf. The cuts are
+    ``localCheckpoint`` by default (fast, but unreplicated executor
+    blocks: an executor loss mid-job fails the job loudly and needs a
+    re-run), or durable ``checkpoint`` with ``reliable=True`` (needs
+    ``setCheckpointDir``; survives executor loss — see operators/ckpt).
+
+    NOT LAZY: construction runs Spark jobs (the edge materialization
+    and one checkpoint job per block), so building the DataFrame
+    without executing it still pays the pair-graph and propagation
+    cost, and re-building the plan pays it again. Build once, reuse the
+    returned DataFrame."""
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
-    edges_raw = (
+    edges = iter_checkpoint(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
+        .dropna()
+        .distinct(),
+        reliable,
+        eager=True,
     )
-    if reliable:
-        edges_raw = iter_checkpoint(edges_raw, reliable)
-    spark = pairs.sparkSession
-    cached = None
-    if pin_partitioning:
-        # avoid re-shipping the edge set through an exchange every hop
-        # — an all-to-all network pass on a cluster; OPT-IN because on a
-        # single node local shuffle is page-cache cheap and the pinned
-        # cache scan measured no better (see class docstring)
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        edges = cached = edges_raw.repartition(n_shuffle, "dst").persist()
-    elif reliable:
-        # already durably checkpointed: hops re-read checkpoint blocks
-        edges = edges_raw
-    else:
-        # localCheckpoint, NOT persist: both compute once and serve the
-        # hops from executor blocks, but a persisted frame keeps its
-        # full logical subtree, so every convergence-check job pays the
-        # pair-graph subplan through analysis/AQE again — measured
-        # +~1.4 s per CC run at sf0.1 (interleaved min-of-4 A/B),
-        # while the checkpointed LogicalRDD is a constant-size leaf
-        edges = edges_raw.localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
     )
-    changed = 0
-    steps_done = 0
-    while steps_done < max_iterations:
-        block = min(max(1, steps_per_check), max_iterations - steps_done)
-        stepped = labels.select(
-            "node", "comp", F.col("comp").alias("old_comp")
+    hops = 0
+    while hops < max_iterations:
+        for _ in range(min(_CC_BLOCK_HOPS, max_iterations - hops)):
+            labels = _cc_hop(edges, labels)
+            hops += 1
+        obs = Observation()
+        labels = iter_checkpoint(
+            labels.observe(
+                obs,
+                F.count(F.when(F.col("comp") < F.col("old_comp"), 1)).alias("n"),
+            ),
+            reliable,
+            eager=True,
         )
-        for _ in range(block):
-            stepped = _cc_hop(edges, stepped)
-            steps_done += 1
-        if checkpoint:
-            stepped = iter_checkpoint(stepped, reliable, eager=True)
-        changed = stepped.filter(F.col("comp") < F.col("old_comp")).limit(1).count()
-        labels = stepped.select("node", "comp")
-        if changed == 0:
-            break
-    if checkpoint and cached is not None:
-        # every completed block cut the label lineage at an eager
-        # checkpoint, so the returned frame no longer references the
-        # edge cache — release the executor memory now (lazily; without
-        # per-block checkpoints the labels still read through the cache
-        # and it must stay)
-        cached.unpersist(blocking=False)
-    if changed != 0:
-        # silently-wrong groups would make a keep-one-per-group dedup
-        # retain duplicates; refuse instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "rounds (component diameter exceeds the budget); raise "
-            "max_iterations or switch to the large-star/small-star variant"
-        )
-    return labels
-
-
-def _star_adjacency(edges: DataFrame) -> DataFrame:
-    """Symmetrized adjacency with per-center minimum: (src, dst, m) where
-    m = min over src's closed neighborhood."""
-    adj = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    mins = adj.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("m")
-    )
-    return adj.join(mins, "src")
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 50,
-    checkpoint: bool = True,
-    reliable: bool = False,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    each round rewires edges toward neighborhood minima —
-    large-star hangs every strictly-larger neighbor off the center's
-    minimum, small-star hangs the smaller-or-equal neighbors — which
-    contracts component diameter geometrically, so convergence takes
-    O(log n) rounds regardless of shape (the min-label propagation in
-    :func:`connected_components` needs diameter rounds, fine for dense
-    near-dup clusters, unbounded for adversarial chains). At fixpoint
-    every edge points directly at its component minimum.
-
-    Each round is two grouped shuffles + a distinct; edges are
-    checkpointed per round to keep plan depth constant
-    (``localCheckpoint`` by default; ``reliable=True`` for durable
-    checkpoints that survive executor loss — see operators/ckpt).
-
-    Returns (node, comp) like :func:`connected_components`."""
-    all_nodes = (
-        pairs.select(F.col(id_a).alias("node"))
-        .union(pairs.select(F.col(id_b).alias("node")))
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    if checkpoint:
-        edges = iter_checkpoint(edges, reliable)
-    for _ in range(max_rounds):
-        # large-star: (v, m) for every neighbor v > center
-        adj = _star_adjacency(edges)
-        large = (
-            adj.filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        # small-star: (v, m) for every neighbor v <= center, plus (center, m)
-        adj2 = _star_adjacency(large)
-        small = (
-            adj2.filter(F.col("dst") <= F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(adj2.select("src", F.col("m").alias("dst")))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        if checkpoint:
-            small = iter_checkpoint(small, reliable, eager=True)
-        # fixpoint: the edge SET is unchanged. Both frames are distinct
-        # sets, so equal cardinality + one-sided inclusion ⇒ equality —
-        # two cheap counts and at most one exceptAll join per round
-        # instead of two
-        if (
-            small.count() == edges.count()
-            and small.exceptAll(edges).limit(1).count() == 0
-        ):
-            edges = small
-            break
-        edges = small
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} rounds"
-        )
-    # at fixpoint each edge is (node, component_min); minima map to
-    # themselves, and nodes whose only pairs were self-pairs (filtered
-    # from the edge set) rejoin as their own singleton component so the
-    # output covers every node that appeared in `pairs`, matching
-    # connected_components
-    nodes = edges.select(F.col("src").alias("node"), F.col("dst").alias("comp"))
-    singletons = all_nodes.withColumn("comp", F.col("node"))
-    return (
-        nodes.union(singletons)
-        .groupBy("node")
-        .agg(F.min("comp").alias("comp"))
+        if obs.get["n"] == 0:
+            return labels.select("node", "comp")
+    # silently-wrong groups would make a keep-one-per-group dedup
+    # retain duplicates; refuse instead
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iterations} "
+        "hops (component diameter exceeds the budget); raise "
+        "max_iterations"
     )
 
 
@@ -1723,22 +1592,12 @@ def dedup_groups(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "label",
 ) -> DataFrame:
     """(id, group_id) for EVERY doc: near-dup components share a group_id
     (the component's minimum id); unpaired docs group with themselves.
     Keeping ``group_id == id`` rows yields the deduplicated corpus with
-    the smallest-id representative per duplicate cluster.
-
-    ``algorithm``: 'label' (min-label propagation — diameter rounds,
-    right for dense near-dup clusters) or 'star' (large-star/small-star
-    — O(log n) rounds, right for long-chain / adversarial graphs)."""
-    if algorithm == "label":
-        comp = connected_components(pairs, id_a, id_b)
-    elif algorithm == "star":
-        comp = connected_components_star(pairs, id_a, id_b)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    the smallest-id representative per duplicate cluster."""
+    comp = connected_components(pairs, id_a, id_b)
     return (
         docs.select(F.col(id_col))
         .join(comp.withColumnRenamed("node", id_col), id_col, "left")

@@ -7,19 +7,9 @@ operator, so this is part of the beyond-reference LLM-data surface.
 PageRank follows the public formulation (Page et al. 1999; damping d,
 rank' = (1-d)/n + d * Σ_in rank/out_degree).
 
-Plan shape at scale: with ``pin_partitioning=True`` the edge table
-shuffles ONCE onto its join key and is reused every iteration
-(hash-repartitioned then persist-ed — the cached InMemoryRelation keeps
-its output partitioning under AQE, which a checkpointed LogicalRDD does
-not), so each iteration is one co-partitioned join + one aggregate — the
-standard distributed power method. Pinning is OPT-IN for network-bound
-clusters: it avoids an all-to-all exchange of the edge table per
-iteration, but on a single node the cache-scan path measured ~2x slower
-at 8M edges (local shuffle hits the page cache, and the fixed partition
-count defeats AQE's small-shuffle coalescing), so the default keeps the
-checkpoint-per-relation form. Iteration count is a parameter (fixed small k), not a
-convergence loop, so the driver never blocks on a data-dependent number
-of jobs and the oracle can replay the exact same k steps.
+Iteration count is a parameter (fixed small k), not a convergence
+loop, so the driver never blocks on a data-dependent number of jobs and
+the oracle can replay the exact same k steps.
 
 Cross-engine float parity: each iteration's ranks are floor-quantized to
 ``quantize_dp`` decimals, snapping Spark's partial-agg summation order
@@ -32,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
+
+# PageRank iterations per rank-table checkpoint (see pagerank)
+_CKPT_EVERY = 3
 
 
 def _q(c: Column, dp: int) -> Column:
@@ -138,9 +131,7 @@ def pagerank(
     damping: float = 0.85,
     quantize_dp: int = 9,
     round_to: int = 6,
-    ckpt_every: int = 3,
     reliable: bool = False,
-    pin_partitioning: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list: (node, rank).
 
@@ -177,25 +168,6 @@ def pagerank(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
         reliable,
     )
-    # With pin_partitioning, the two relations every iteration re-reads
-    # are hash-partitioned on their join keys ONCE and persist-ed: a
-    # cached InMemoryRelation is the one construct whose output
-    # partitioning survives reuse under AQE (a checkpointed LogicalRDD
-    # reports UnknownPartitioning when the captured plan is an
-    # un-finalized AdaptiveSparkPlan, which re-shuffles the edge table
-    # every iteration). Per iteration only the rank table and the
-    # contribution aggregate then shuffle; the caches recompute from the
-    # checkpointed `e` on executor loss. OPT-IN because the win exists
-    # only where the avoided exchange crosses a network: on single-node
-    # local[32] the pinned path measured ~2x SLOWER at 8M edges (min-of-4
-    # interleaved: 37.8 s pinned / 34.1 s pinned+sorted vs 17.1 s
-    # unpinned — the columnar cache scan plus the fixed partition count
-    # that AQE can no longer coalesce cost more than local shuffle
-    # writes, which hit the page cache, not a wire). On a multi-rack
-    # cluster the unpinned plan re-ships the full edge table through an
-    # all-to-all exchange every iteration; pinning replaces that with a
-    # node-local cache read — the standard GraphX/Pregel edge-placement
-    # strategy.
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -203,13 +175,8 @@ def pagerank(
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     ed = e.join(deg, "src")
-    if pin_partitioning:
-        n_shuffle = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        nodes = nodes.repartition(n_shuffle, "node").persist()
-        ed = ed.repartition(n_shuffle, "src").persist()
-    else:
-        nodes = iter_checkpoint(nodes, reliable)
-        ed = iter_checkpoint(ed, reliable)
+    nodes = iter_checkpoint(nodes, reliable)
+    ed = iter_checkpoint(ed, reliable)
 
     # n is ONE bounded driver scalar (count of the checkpointed node
     # table — the same class of 1-row collect the probe family is
@@ -257,6 +224,6 @@ def pagerank(
         # fine. Quantization stays PER ITERATION — the oracle's grid.
         # The last iteration never checkpoints (the caller's action
         # materializes it).
-        if (i + 1) % ckpt_every == 0 and i + 1 < n_iter:
+        if (i + 1) % _CKPT_EVERY == 0 and i + 1 < n_iter:
             ranks = iter_checkpoint(ranks, reliable)
     return ranks.select("node", F.round("rank", round_to).alias("rank"))

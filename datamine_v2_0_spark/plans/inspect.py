@@ -26,50 +26,6 @@ def count_exchanges(df: DataFrame) -> int:
     ).count("Exchange rangepartitioning")
 
 
-def _strip_cached_subtrees(plan: str) -> str:
-    """Drop the cached-build subtree under every InMemoryRelation line.
-
-    A plan that reads a persisted relation embeds the relation's BUILD
-    plan (including its exchanges) in the tree string, but that subtree
-    executes once at cache materialization — not on every reuse. Counting
-    those exchanges as live would double-charge every cache-reading
-    query."""
-    out: list[str] = []
-    skip_deeper_than = -1
-    for line in plan.splitlines():
-        depth = _tree_depth(line)
-        if skip_deeper_than >= 0:
-            if depth > skip_deeper_than:
-                continue
-            skip_deeper_than = -1
-        if "InMemoryRelation" in line:
-            skip_deeper_than = depth
-            continue
-        out.append(line)
-    return "\n".join(out)
-
-
-def _tree_depth(line: str) -> int:
-    """Indent depth of a Spark plan-tree line (prefix of tree-drawing
-    chars before the node name)."""
-    i = 0
-    while i < len(line) and line[i] in " :+|-*(":
-        i += 1
-    return i
-
-
-def count_live_exchanges(df: DataFrame) -> int:
-    """Like :func:`count_exchanges`, but excluding exchanges inside
-    cached-relation build plans (those run once at cache build, not per
-    query) — the number that matters for an operator that REUSES a
-    pre-partitioned persisted relation, e.g. the connected-components
-    hop or a PageRank iteration."""
-    p = _strip_cached_subtrees(executed_plan(df))
-    return p.count("Exchange hashpartitioning") + p.count(
-        "Exchange rangepartitioning"
-    )
-
-
 def has_broadcast_join(df: DataFrame) -> bool:
     """True when the plan contains a broadcast join (small-side dimension
     joins must never shuffle the big side)."""

@@ -490,10 +490,11 @@ def _union_find_groups(pairs: list[tuple[int, int]], nodes: set[int]) -> dict:
     return {n: find(n) for n in nodes}
 
 
-def test_connected_components_star_matches_union_find(spark):
-    """Large-star/small-star vs a driver-side union-find ground truth on
-    a seeded random graph, plus a 32-node chain (diameter 31 — beyond
-    the label-propagation default budget, but O(log n) rounds here)."""
+def test_connected_components_matches_union_find(spark):
+    """Min-label propagation vs a driver-side union-find ground truth on
+    a seeded random graph, a 32-node chain (diameter 31: beyond the
+    default budget, exact with 32 hops), a self-pair singleton and
+    pairs with a NULL endpoint."""
     import random
 
     rng = random.Random(7)
@@ -503,24 +504,72 @@ def test_connected_components_star_matches_union_find(spark):
     truth = _union_find_groups(edges, nodes)
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r["node"]: r["comp"]
-           for r in dd.connected_components_star(pairs).collect()}
+           for r in dd.connected_components(pairs).collect()}
     assert got == truth
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(31)], "id_a long, id_b long"
     )
-    got_chain = {r["node"]: r["comp"]
-                 for r in dd.connected_components_star(chain).collect()}
-    assert got_chain == {i: 0 for i in range(32)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dd.connected_components(chain)
+    got_chain = {r["node"]: r["comp"] for r in
+                 dd.connected_components(chain, max_iterations=32).collect()}
+    assert got_chain == _union_find_groups(
+        [(i, i + 1) for i in range(31)], set(range(32))
+    )
 
     # self-pair-only nodes stay in the output as their own singleton
-    # component (parity with connected_components)
     selfies = spark.createDataFrame(
         [(7, 7), (1, 2)], "id_a long, id_b long"
     )
     got_self = {r["node"]: r["comp"]
-                for r in dd.connected_components_star(selfies).collect()}
+                for r in dd.connected_components(selfies).collect()}
     assert got_self == {7: 7, 1: 1, 2: 1}
+
+    # a pair with a NULL endpoint is no edge: NULL is never a labelled
+    # node, and the other endpoint keeps its own group in dedup_groups
+    nulls = spark.createDataFrame(
+        [(1, 2), (None, 3), (4, None)], "id_a long, id_b long"
+    )
+    got_null = {r["node"]: r["comp"]
+                for r in dd.connected_components(nulls).collect()}
+    assert got_null == {1: 1, 2: 1}
+    docs = spark.createDataFrame(
+        [(1,), (2,), (3,), (4,), (None,)], "doc_id long"
+    )
+    groups = {r["doc_id"]: r["group_id"]
+              for r in dd.dedup_groups(docs, "doc_id", nulls).collect()}
+    assert groups == {1: 1, 2: 1, 3: 3, 4: 4, None: None}
+
+
+def test_connected_components_block_count(spark, monkeypatch):
+    """A 4-clique settles in one block: the first hop labels every node
+    with the minimum and the second hop's zero-change count, observed on
+    the block's eager checkpoint, proves the fixpoint. So two hops and
+    two eager checkpoints (edge set, one block), with no separate
+    convergence job."""
+    hops, ckpts = [], []
+    real_hop, real_ckpt = dd._cc_hop, dd.iter_checkpoint
+
+    def spy_hop(edges, lab):
+        hops.append(1)
+        return real_hop(edges, lab)
+
+    def spy_ckpt(df, reliable=False, eager=False):
+        ckpts.append(eager)
+        return real_ckpt(df, reliable, eager)
+
+    monkeypatch.setattr(dd, "_cc_hop", spy_hop)
+    monkeypatch.setattr(dd, "iter_checkpoint", spy_ckpt)
+    pairs = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)],
+        "id_a long, id_b long",
+    )
+    got = {r["node"]: r["comp"]
+           for r in dd.connected_components(pairs).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0}
+    assert len(hops) == 2
+    assert ckpts == [True, True]
 
 
 def test_connected_components_raises_when_unconverged(spark):
@@ -1874,10 +1923,6 @@ def test_iterative_ops_reliable_checkpoint_parity(spark, tmp_path):
     base = sorted(map(tuple, dd.connected_components(pairs).collect()))
     rel = sorted(map(tuple, dd.connected_components(pairs, reliable=True).collect()))
     assert base == rel
-    star = sorted(
-        map(tuple, dd.connected_components_star(pairs, reliable=True).collect())
-    )
-    assert base == star
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
     )

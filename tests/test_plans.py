@@ -94,24 +94,24 @@ def test_candidate_generation_never_all_pairs(spark):
 
 
 def test_group_resolution_plans_stay_equi_join(spark):
-    """Connected-components rounds (both algorithms) and the pruned
-    Jaccard verify must remain equi-join shaped — the iterative rewiring
-    must never degenerate to a cross product."""
+    """A connected-components hop and the pruned Jaccard verify must
+    remain equi-join shaped — the iterative propagation must never
+    degenerate to a cross product."""
     from datamine_v2_0_spark.operators import dedup as dd
     from datamine_v2_0_spark.plans import has_cartesian
+    from pyspark.sql import functions as F
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    # un-checkpointed frames keep the hop's join IN the plan;
+    # connected_components itself returns a scan of its last checkpoint,
+    # where the assertion would be vacuous
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2), (10, 11), (11, 10)],
+        "src long, dst long",
     )
-    # checkpoint=False keeps the per-round joins IN the returned lineage;
-    # with the default checkpointing the plan is truncated to a scan of
-    # the checkpointed RDD and the assertion would be vacuous
-    assert not has_cartesian(
-        dd.connected_components(pairs, checkpoint=False)
+    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
+        "comp", F.col("node")
     )
-    assert not has_cartesian(
-        dd.connected_components_star(pairs, checkpoint=False)
-    )
+    assert not has_cartesian(dd._cc_hop(edges, labels))
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     cands = dd.minhash_lsh_candidates(
@@ -120,93 +120,6 @@ def test_group_resolution_plans_stay_equi_join(spark):
     assert not has_cartesian(
         dd.ngram_jaccard_pairs(cands, docs, "text", "doc_id", threshold=0.2)
     )
-
-
-def test_cc_hop_reuses_partitioned_edge_cache(spark):
-    """The connected-components hop joins the (largest) edge relation on
-    ``dst`` every round; the edge set is hash-partitioned on ``dst`` once
-    and persisted, so each hop shuffles ONLY the label table. A
-    checkpointed edge table would re-shuffle per hop: localCheckpoint's
-    LogicalRDD reports UnknownPartitioning under AQE."""
-    from datamine_v2_0_spark.operators import dedup as dd
-    from datamine_v2_0_spark.plans.inspect import (
-        count_live_exchanges,
-        executed_plan,
-    )
-    from pyspark.sql import functions as F
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 200, 2)], "id_a long, id_b long"
-    )
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .repartition(n, "dst")
-        .persist()
-    )
-    try:
-        edges.count()
-        lab = (
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("comp", F.col("node"))
-        )
-        hop = dd._cc_hop(edges, lab)
-        plan = executed_plan(hop)
-        assert "InMemoryTableScan" in plan, plan
-        # live shuffles: labels->dst, groupBy->src, labels->node. The
-        # edge side reads the cache co-partitioned (a 4th exchange here
-        # means the cache partitioning was lost).
-        assert count_live_exchanges(hop) <= 3, plan
-    finally:
-        edges.unpersist()
-
-
-def test_cc_pinned_path_matches_default(spark):
-    """The opt-in pinned edge layout must be a pure physical choice —
-    identical (node, comp) labeling to the default path."""
-    from datamine_v2_0_spark.operators import dedup as dd
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (7, 7), (20, 21), (21, 22), (22, 23)],
-        "id_a long, id_b long",
-    )
-    base = sorted(
-        tuple(r) for r in dd.connected_components(pairs).collect()
-    )
-    pinned = sorted(
-        tuple(r)
-        for r in dd.connected_components(pairs, pin_partitioning=True).collect()
-    )
-    assert base == pinned, (base, pinned)
-
-
-def test_pagerank_iterations_reuse_partitioned_caches(spark):
-    """Each PageRank iteration re-reads the edge+degree table (join on
-    src) and the node table (join on node); both are hash-partitioned on
-    their join keys and persisted, so per-iteration live shuffles are
-    the rank table and the contribution aggregate only."""
-    from datamine_v2_0_spark.operators.graph import pagerank
-    from datamine_v2_0_spark.plans.inspect import (
-        count_live_exchanges,
-        executed_plan,
-    )
-
-    edges = spark.createDataFrame(
-        [(i, (i * 7) % 50) for i in range(200)], "src long, dst long"
-    )
-    # pin_partitioning is opt-in (a network-bound-cluster optimization);
-    # enable it here to pin the at-scale plan shape on a small fixture
-    pr = pagerank(edges, n_iter=3, ckpt_every=10, pin_partitioning=True)
-    plan = executed_plan(pr)
-    assert "InMemoryTableScan" in plan, plan
-    # 3 in-lineage iterations: ~3 live exchanges each (rank join + the
-    # contribution aggregate) + the final rank projection. Re-shuffling
-    # the cached edge+degree or node tables adds 2 per iteration and
-    # trips this bound.
-    assert count_live_exchanges(pr) <= 10, plan
 
 
 def test_corpus_curation_plans(spark):

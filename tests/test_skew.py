@@ -218,15 +218,13 @@ def test_half_hot_dedup_groups_star_graph(spark):
     from datamine_v2_0_spark.operators import dedup as dd
 
     # star: node 0 pairs with every other node -> 50%+ of all edge
-    # endpoints are one node; both CC algorithms must converge to one
+    # endpoints are one node; connected components must converge to one
     # component without an edge blow-up
     n = 4000
     pairs = spark.range(1, n).selectExpr("CAST(0 AS LONG) AS id_a", "id AS id_b")
-    for fn in (dd.connected_components, dd.connected_components_star):
-        comp = fn(pairs)
-        rows = comp.collect()
-        assert len(rows) == n
-        assert {r["comp"] for r in rows} == {0}
+    rows = dd.connected_components(pairs).collect()
+    assert len(rows) == n
+    assert {r["comp"] for r in rows} == {0}
 
 
 def test_half_hot_cpd_completes(spark, half_hot):

@@ -143,11 +143,11 @@ def dedupe_cached_subtrees(plan: str) -> str:
     A plan that reads a persisted relation embeds the relation's build
     plan (with its exchanges) under each InMemoryRelation node, but that
     subtree executes once at cache materialization — counting it per
-    reuse over-reports the live cost of operators that deliberately
-    pre-partition + persist a reused relation (connected components,
-    PageRank past the pinning threshold). Keeps one copy of each
-    DISTINCT cached subtree so an anti-pattern inside a cache build is
-    still counted (once, as it runs)."""
+    reuse over-reports the live cost of plans that read a persisted
+    frame (the ``q_dedup_groups`` memo that ``q_dedup_canonical``
+    filters). Keeps one copy of each DISTINCT cached subtree so an
+    anti-pattern inside a cache build is still counted (once, as it
+    runs)."""
     live: list[str] = []
     cached: list[str] = []
     cur: list[str] | None = None
@@ -418,7 +418,7 @@ def main() -> None:
 
     # `localCheckpoint` severs lineage, so the post-hoc plan of a
     # checkpointed query (pagerank iterations, BM25 posting build,
-    # star-CC rounds, curation barrier) audits as near-empty. Wrap it
+    # CC blocks, curation barrier) audits as near-empty. Wrap it
     # for the audit's duration: record the physical plan of every
     # DataFrame BEING checkpointed, then delegate — the audit counts
     # the union of the final plan and all severed subplans.
