@@ -2,7 +2,7 @@
 # deterministically failing test because the suite was never run at the
 # commit. Nothing gets snapshotted without `make preflight` green.
 
-.PHONY: test verify audit empty-sweep skew-sweep determinism bench perfbench pipeline-bench preflight
+.PHONY: test verify audit empty-sweep skew-sweep determinism bench perfbench perfbench-trace pipeline-bench preflight
 
 test:
 	python -m pytest tests/ -q
@@ -34,6 +34,11 @@ bench:
 perfbench:
 	python3 perfbench/run.py --workload telemetry_etl --seed 1 --seconds 5 --trace 0
 	python3 perfbench/run.py --workload dedup_hot --seed 1 --seconds 5 --trace 0
+
+# traced dedup_hot: the only run outside the tests that reads dup_stats,
+# duplicate_collapse="never" and the collapsed plans' __rep marker
+perfbench-trace:
+	python3 perfbench/run.py --workload dedup_hot --seed 1 --seconds 5 --trace 1
 
 pipeline-bench:
 	python tools/pipeline_bench.py

@@ -365,12 +365,11 @@ def minhash_near_dup_pairs(
     reliable: bool = False,
 ) -> DataFrame:
     """Banded MinHash-LSH candidates → exact n-gram Jaccard verify, with
-    the adaptive representative collapse (see
-    :func:`jaccard_pairs_inverted` — same ``duplicate_collapse``
-    contract, result-exact on every input). Unlike the posting-join
-    family, ``auto`` here collapses on the MAX-GROUP statistic
-    (``PAIR_COLLAPSE_BETA`` break-even), not the ratio or total
-    blowup: LSH banding is linear in n and in-bucket verify
+    the adaptive representative collapse (``duplicate_collapse``, see
+    :func:`_fan_out` for why the collapsed plan is result-exact). Unlike
+    the posting-join family, ``auto`` here collapses on the MAX-GROUP
+    statistic (``PAIR_COLLAPSE_BETA`` break-even), not the ratio or
+    total blowup: LSH banding is linear in n and in-bucket verify
     parallelizes across groups, so even 16x uniform duplication
     measured 1.7x faster direct — but one mega group's |g|² candidate
     pairs land in a single band bucket (one task, serial), which is
@@ -378,82 +377,45 @@ def minhash_near_dup_pairs(
     (SCALING.md, tools/collapse_band.py).
 
     Why the composed operator exists: on a duplicate-heavy corpus every
-    member of an exact-duplicate group lands in the same band buckets
-    (signatures are functions of the normalized text), so the candidate
-    set contains all |group|² member pairs AND each pays a full
-    shingle-set intersection in the verify — the skewed-replica bench
-    measured 13× time under a 1.66 docs-per-distinct corpus. Collapsed,
-    LSH + verify run on one representative per distinct text, verified
-    rep pairs fan out to member pairs (signatures and Jaccard scores
-    are text-determined, so member candidacy ⟺ rep candidacy and the
-    scores carry over), and within-group pairs are emitted in closed
-    form at Jaccard 1.0 — only for groups whose text shingles at all,
-    matching the direct path, where a signature-less doc never pairs.
-    Only the (inherently output-sized) fan-out scales with duplication.
+    member of an exact-duplicate group lands in the same band buckets,
+    so the candidate set contains all |group|² member pairs AND each
+    pays a full shingle-set intersection in the verify — the
+    skewed-replica bench measured 13× time under a 1.66
+    docs-per-distinct corpus. Collapsed, LSH + verify run on one
+    representative per distinct text and only the (inherently
+    output-sized) member fan-out scales with duplication.
 
     ``reliable``: durable lineage truncation (see :func:`_rep_groups` /
-    ckpt.iter_checkpoint).
-    Probe results are cached per (session, plan, column): if this session OVERWRITES the files behind ``df`` and re-runs on an identical plan, call :func:`clear_dup_stats_cache` first or the auto switch plans from stale stats (plan choice only — both plans are result-exact).
+    ckpt.iter_checkpoint). Probe results are cached per (session, plan,
+    column): if this session OVERWRITES the files behind ``df`` and
+    re-runs on an identical plan, call :func:`clear_dup_stats_cache`
+    first or the auto switch plans from stale stats (plan choice only —
+    both plans are result-exact).
     """
     df = _spread(df)
+    members = None
     if _resolve_pair_collapse(df, text_col, duplicate_collapse):
-        return _minhash_near_dup_collapsed(
-            df, text_col, id_col, threshold, num_hashes, bands,
-            shingle_n, round_to, reliable,
-        )
+        df, members = _rep_groups(df, text_col, id_col, reliable)
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n
     )
     out = ngram_jaccard_pairs(
         cands, df, text_col, id_col, shingle_n, threshold, reliable=reliable
-    )
-    return out.select(
-        "id_a", "id_b", F.round("jaccard", round_to).alias("jaccard")
-    )
-
-
-def _minhash_near_dup_collapsed(
-    df, text_col, id_col, threshold, num_hashes, bands, shingle_n, round_to,
-    reliable=False,
-) -> DataFrame:
-    """Representative-collapsed LSH near-dup (see minhash_near_dup_pairs)."""
-    fpmap, groups, members = _rep_groups(df, text_col, id_col, reliable)
-    reps = df.join(groups.select(F.col("__rep").alias(id_col)), id_col)
-    cands = minhash_lsh_candidates(
-        reps, text_col, id_col, num_hashes, bands, shingle_n
-    )
-    rep_pairs = ngram_jaccard_pairs(
-        cands, reps, text_col, id_col, shingle_n, threshold,
-        reliable=reliable,
     ).select("id_a", "id_b", F.round("jaccard", round_to).alias("jaccard"))
-    ma = members.select(F.col("__rep").alias("id_a"), F.col("__m").alias("__ma"))
-    mb = members.select(F.col("__rep").alias("id_b"), F.col("__m").alias("__mb"))
-    cross = rep_pairs.join(ma, "id_a").join(mb, "id_b").select(
-        F.least("__ma", "__mb").alias("id_a"),
-        F.greatest("__ma", "__mb").alias("id_b"),
-        "jaccard",
-    )
-    if threshold > 1.0:
-        return cross
-    # within-group pairs: identical texts, exact Jaccard 1.0 — emitted
-    # only when the group's text produces >=1 shingle (the direct path's
-    # all-null-signature filter drops shingle-less docs from banding)
-    # shingle-eligibility without building grams: >=1 n-gram shingle
-    # exists iff the normalized words array has >= n elements
-    elig = reps.select(
-        F.col(id_col).alias("__rep"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("__w"),
-    ).filter(F.size("__w") >= shingle_n).select("__rep")
-    m1 = members.join(elig, "__rep").select(
-        "__rep", F.col("__m").alias("id_a")
-    )
-    m2 = members.select("__rep", F.col("__m").alias("id_b"))
-    within = (
-        m1.join(m2, "__rep")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    if members is None:
+        return out
+    if threshold <= 1.0:
+        # self-pairs: a text scores Jaccard 1.0 with itself iff it has
+        # >= 1 shingle, i.e. >= n words (the direct path's all-null
+        # signature filter keeps shingle-less docs out of banding)
+        words = F.split(normalize_text(F.col(text_col)), " ")
+        out = out.unionByName(
+            df.filter(F.size(words) >= shingle_n).select(
+                F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+                F.lit(1.0).alias("jaccard"),
+            )
+        )
+    return _fan_out(out, members)
 
 
 # Session-scoped probe cache keyed on (session id, analyzed-plan
@@ -826,15 +788,20 @@ def _resolve_pair_collapse(
 
 
 def _rep_groups(df: DataFrame, text_col: str, id_col: str, reliable: bool = False):
-    """(fpmap, groups, members) for representative collapse: fpmap =
-    narrow (id, sha256-of-normalized-text), groups = one row per
-    distinct text (rep = min member id, cnt = multiplicity), members =
-    (rep, member id). Text itself never shuffles — the fingerprint map
-    is two thin columns, checkpointed because groups and the pair
-    fan-out both consume it. ``reliable`` routes every lineage
-    truncation through the durable checkpoint dir (ckpt.iter_checkpoint)
-    so the collapsed path survives executor loss like the iterative
-    operators do."""
+    """(reps, members) for representative collapse of a text corpus:
+    reps = the ``df`` rows of one representative per distinct
+    normalized text (``__rep`` = min member id) carrying the group's
+    multiplicity ``__cnt``; members = (``__rep``, ``__m``) for every
+    member with a non-NULL id — a NULL id never pairs. ``__cnt`` counts
+    NULL-id copies too, as a direct plan's document frequency does; a
+    text whose every copy has a NULL id gets no representative, so it
+    is also left out of a collapsed plan's document frequency. Only
+    representatives are shingled or signed downstream. Text itself
+    never shuffles for grouping — the fingerprint map is two thin
+    columns, checkpointed because the groups and the member map both
+    consume it. ``reliable`` routes the lineage truncation through the durable
+    checkpoint dir (ckpt.iter_checkpoint) so the collapsed plans
+    survive executor loss like the iterative operators do."""
     fpmap = iter_checkpoint(
         df.select(F.col(id_col), content_hash(F.col(text_col)).alias("__fp")),
         reliable,
@@ -842,10 +809,134 @@ def _rep_groups(df: DataFrame, text_col: str, id_col: str, reliable: bool = Fals
     groups = fpmap.groupBy("__fp").agg(
         F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__cnt")
     )
-    members = fpmap.join(groups, "__fp").select(
-        "__rep", F.col(id_col).alias("__m")
+    reps = df.join(groups.select(F.col("__rep").alias(id_col), "__cnt"), id_col)
+    members = (
+        fpmap.filter(F.col(id_col).isNotNull())
+        .join(groups, "__fp")
+        .select("__rep", F.col(id_col).alias("__m"))
     )
-    return fpmap, groups, members
+    return reps, members
+
+
+def _fan_out(
+    rep_pairs: DataFrame, members: DataFrame,
+    swap: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Expand representative pairs ``(id_a, id_b)``, ``id_a <= id_b``,
+    to member pairs ``(least, greatest)`` with ``id_a < id_b``, each
+    once, every other column carried as is. ``swap`` names two
+    direction-dependent score columns that trade places when member-id
+    order inverts the representative order (containment is asymmetric).
+
+    Why every representative-collapsed pair plan is result-exact: an
+    operator's candidacy and score are functions of the text (or
+    vector) alone — shingles, signatures, band keys and similarities
+    never read the id — so every member pair of representatives r, s
+    is a candidate and scores exactly as (r, s) does. A
+    representative's pair with itself, (r, r), stands for its
+    group's within-group pairs: identical content, scored the way the
+    direct plan scores two identical docs, and present only when the
+    direct plan would pair them at all (a text that shingles, a
+    non-zero vector). Document-frequency caps weight each
+    representative by its group's size, so they count what the direct
+    plan counts."""
+    ma = members.select(F.col("__rep").alias("id_a"), F.col("__m").alias("__ma"))
+    mb = members.select(F.col("__rep").alias("id_b"), F.col("__m").alias("__mb"))
+    fwd = F.col("__ma") < F.col("__mb")
+    cols = []
+    for c in rep_pairs.columns:
+        if c in ("id_a", "id_b"):
+            continue
+        if swap and c in swap:
+            other = swap[1] if c == swap[0] else swap[0]
+            cols.append(F.when(fwd, F.col(c)).otherwise(F.col(other)).alias(c))
+        else:
+            cols.append(F.col(c))
+    return (
+        rep_pairs.join(ma, "id_a").join(mb, "id_b")
+        # (r, r) meets each member pair twice, once per order: keep one
+        .filter((F.col("id_a") < F.col("id_b")) | fwd)
+        .select(
+            F.least("__ma", "__mb").alias("id_a"),
+            F.greatest("__ma", "__mb").alias("id_b"),
+            *cols,
+        )
+    )
+
+
+def _posting_pairs(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int,
+    max_shingle_freq: int | None, capped_sizes: bool, reps: bool,
+    reliable: bool,
+) -> DataFrame:
+    """Shared inverted-index kernel of the posting-join family:
+    (id_a, id_b, __sza, __szb, __i) per doc pair sharing >= 1 shingle,
+    ``__i`` the shared-shingle count and ``__sz*`` each doc's size —
+    over the capped universe when ``capped_sizes`` (Jaccard), else the
+    true pre-cap size (containment). ``max_shingle_freq`` drops
+    shingles whose document frequency exceeds it from the join.
+
+    ``reps``: ``df`` holds representatives (see :func:`_rep_groups`):
+    document frequency sums their ``__cnt`` multiplicity instead of
+    counting rows, and the self-join keeps ``id_a <= id_b`` so each
+    representative also pairs with itself (see :func:`_fan_out`)."""
+    # two-step projection: words materialize once, shingles build from
+    # the column (word_shingles_from_words contract). No size(__g) > 0
+    # filter — explode already emits nothing for empty/null arrays, and
+    # the filter predicate was pushdown-duplicated below the _spread
+    # exchange, re-running the whole shingle pipeline per doc in the
+    # (single-task at small inputs) scan stage.
+    weight = ["__cnt"] if reps and max_shingle_freq is not None else []
+    sh = df.select(
+        F.col(id_col), *weight,
+        F.split(normalize_text(F.col(text_col)), " ").alias("__w"),
+    ).select(
+        F.col(id_col), *weight,
+        word_shingles_from_words(F.col("__w"), shingle_n).alias("__g"),
+    )
+    size = [] if capped_sizes and max_shingle_freq is not None else [
+        F.size("__g").alias("__sz")
+    ]
+    ex = sh.select(
+        F.col(id_col), *weight, *size, F.explode("__g").alias("__s")
+    )
+    if max_shingle_freq is not None:
+        dfreq = F.sum("__cnt") if reps else F.count(F.lit(1))
+        rare = ex.groupBy("__s").agg(dfreq.alias("__df")).filter(
+            F.col("__df") <= max_shingle_freq
+        )
+        ex = ex.join(rare.select("__s"), "__s").drop(*weight)
+        if capped_sizes:
+            # per-doc sizes over the SAME capped universe as the
+            # intersection counts — uncapped sizes would bias Jaccard
+            # downward for pairs whose overlap includes capped shingles
+            sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
+            ex = ex.join(sizes, id_col)
+    # the self-join's two branches carry different aliases above the
+    # exchange, so Catalyst gets no ReusedExchange and would scan +
+    # shingle + explode the corpus TWICE (plan-audited). Materialize the
+    # posting table once — same recipe as the BM25 inverted index.
+    ex = iter_checkpoint(ex, reliable)
+    # stream side doc-clustered in the broadcast regime: the pair
+    # aggregation below then needs NO exchange (see _cluster_pair_stream)
+    a = _cluster_pair_stream(ex, id_col).select(
+        F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__s"
+    )
+    b = ex.select(
+        F.col(id_col).alias("id_b"), F.col("__sz").alias("__szb"), "__s"
+    )
+    keep = (F.col("id_a") <= F.col("id_b")) if reps else (
+        F.col("id_a") < F.col("id_b")
+    )
+    return (
+        a.join(b, "__s")
+        .filter(keep)
+        # sizes ride as grouping keys (functionally dependent on the ids,
+        # so groups are unchanged): no first() agg buffers, and in the
+        # SMJ regime the pair-exchange row narrows 7 -> 5 fields
+        .groupBy("id_a", "id_b", "__sza", "__szb")
+        .agg(F.count(F.lit(1)).alias("__i"))
+    )
 
 
 def jaccard_pairs_inverted(
@@ -874,176 +965,38 @@ def jaccard_pairs_inverted(
     docs' informative content (mixing capped intersections with uncapped
     sizes would bias every affected pair downward).
 
-    ``duplicate_collapse`` (result-exact on every input, like
-    bm25_topk's): on duplicate-heavy corpora the posting join was the
-    repo's highest scaling exponent (α 0.68 — every duplicate multiplies
-    every posting list, so join work grows ~quadratically in the
-    duplication factor). The collapsed path shingles and joins one
-    REPRESENTATIVE per distinct normalized text (multiplicity-weighted
-    document frequency for the cap), then fans representative pairs
-    back out to member pairs — the join is sized by distinct content,
-    and only the (inherently output-sized) member fan-out scales with
-    duplication. ``"auto"`` probes trimmed blowup + cmax against the
-    posting family's measured crossovers (POSTING_COLLAPSE_BLOWUP /
-    POSTING_COLLAPSE_CMAX — the self-join grows ~trimmed², so the
-    spread threshold sits low). ``reliable``: durable lineage
-    truncation.
-    Probe results are cached per (session, plan, column): if this session OVERWRITES the files behind ``df`` and re-runs on an identical plan, call :func:`clear_dup_stats_cache` first or the auto switch plans from stale stats (plan choice only — both plans are result-exact)."""
+    ``duplicate_collapse`` (result-exact on every input, see
+    :func:`_fan_out`): on duplicate-heavy corpora the posting join was
+    the repo's highest scaling exponent (α 0.68 — every duplicate
+    multiplies every posting list, so join work grows ~quadratically
+    in the duplication factor). The collapsed path shingles and joins
+    one REPRESENTATIVE per distinct normalized text, then fans
+    representative pairs back out to member pairs — the join is sized
+    by distinct content, and only the (inherently output-sized) member
+    fan-out scales with duplication. ``"auto"`` probes trimmed blowup +
+    cmax against the posting family's measured crossovers
+    (POSTING_COLLAPSE_BLOWUP / POSTING_COLLAPSE_CMAX — the self-join
+    grows ~trimmed², so the spread threshold sits low). ``reliable``:
+    durable lineage truncation. Probe results are cached per (session,
+    plan, column): if this session OVERWRITES the files behind ``df``
+    and re-runs on an identical plan, call :func:`clear_dup_stats_cache`
+    first or the auto switch plans from stale stats (plan choice only —
+    both plans are result-exact)."""
     df = _spread(df)
+    members = None
     if _resolve_posting_collapse(df, text_col, duplicate_collapse):
-        return _jaccard_pairs_collapsed(
-            df, text_col, id_col, shingle_n, threshold,
-            max_shingle_freq, round_to, reliable,
-        )
-    # two-step projection: words materialize once, shingles build from
-    # the column (word_shingles_from_words contract). No size(__g) > 0
-    # filter — explode already emits nothing for empty/null arrays, and
-    # the filter predicate was pushdown-duplicated below the _spread
-    # exchange, re-running the whole shingle pipeline per doc in the
-    # (single-task at small inputs) scan stage.
-    sh = df.select(
-        F.col(id_col),
-        F.split(normalize_text(F.col(text_col)), " ").alias("__w"),
-    ).select(
-        F.col(id_col),
-        word_shingles_from_words(F.col("__w"), shingle_n).alias("__g"),
-    )
-    if max_shingle_freq is None:
-        ex = sh.select(
-            F.col(id_col), F.size("__g").alias("__sz"), F.explode("__g").alias("__s")
-        )
-    else:
-        ex = sh.select(F.col(id_col), F.explode("__g").alias("__s"))
-        rare = ex.groupBy("__s").agg(F.count(F.lit(1)).alias("__df")).filter(
-            F.col("__df") <= max_shingle_freq
-        )
-        ex = ex.join(rare.select("__s"), "__s")
-        # per-doc sizes over the SAME capped universe as the intersection
-        # counts — uncapped sizes would bias Jaccard downward for pairs
-        # whose overlap includes capped shingles
-        sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
-        ex = ex.join(sizes, id_col)
-    # the self-join's two branches carry different aliases above the
-    # exchange, so Catalyst gets no ReusedExchange and would scan +
-    # shingle + explode the corpus TWICE (plan-audited). Materialize the
-    # posting table once — same recipe as the BM25 inverted index.
-    ex = iter_checkpoint(ex, reliable)
-    # stream side doc-clustered in the broadcast regime: the pair
-    # aggregation below then needs NO exchange (see _cluster_pair_stream)
-    a = _cluster_pair_stream(ex, id_col).select(
-        F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__s"
-    )
-    b = ex.select(
-        F.col(id_col).alias("id_b"), F.col("__sz").alias("__szb"), "__s"
-    )
-    inter = (
-        a.join(b, "__s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # sizes ride as grouping keys (functionally dependent on the ids,
-        # so groups are unchanged): no first() agg buffers, and in the
-        # SMJ regime the pair-exchange row narrows 7 -> 5 fields
-        .groupBy("id_a", "id_b", "__sza", "__szb")
-        .agg(F.count(F.lit(1)).alias("__i"))
+        df, members = _rep_groups(df, text_col, id_col, reliable)
+    inter = _posting_pairs(
+        df, text_col, id_col, shingle_n, max_shingle_freq,
+        capped_sizes=True, reps=members is not None, reliable=reliable,
     )
     j = F.col("__i") / (F.col("__sza") + F.col("__szb") - F.col("__i"))
-    return (
+    out = (
         inter.withColumn("jaccard", F.round(j, round_to))
         .filter(j >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def _jaccard_pairs_collapsed(
-    df, text_col, id_col, shingle_n, threshold, max_shingle_freq, round_to,
-    reliable=False,
-) -> DataFrame:
-    """Representative-collapsed exact Jaccard (see jaccard_pairs_inverted).
-
-    Result-exact: members of an exact-duplicate group share a shingle
-    set, so every member pair of a qualifying representative pair gets
-    the representative pair's score, within-group pairs score exactly
-    1.0 over the capped universe (emitted only when that universe is
-    non-empty — matching the direct path, where shingle-less docs never
-    join), and the df cap counts documents with multiplicity."""
-    fpmap, groups, members = _rep_groups(df, text_col, id_col, reliable)
-    # shingle ONLY representatives: one (id, text)-shuffle join replaces
-    # per-duplicate shingling (the collapsed path runs on duplicate-heavy
-    # input by construction, so rep shingling is the cheap side)
-    reps = df.join(
-        groups.select(F.col("__rep").alias(id_col), "__cnt"), id_col
-    )
-    base = reps.select(
-        F.col(id_col), "__cnt",
-        F.split(normalize_text(F.col(text_col)), " ").alias("__w"),
-    )
-    sh = base.select(
-        F.col(id_col), "__cnt",
-        word_shingles_from_words(F.col("__w"), shingle_n).alias("__g"),
-    )
-    if max_shingle_freq is None:
-        ex = sh.select(
-            F.col(id_col), F.size("__g").alias("__sz"),
-            F.explode("__g").alias("__s"),
-        )
-        # shingle-eligibility without building grams: >=1 n-gram shingle
-        # exists iff the words array has >= n elements
-        eligible = base.filter(F.size("__w") >= shingle_n).select(
-            F.col(id_col).alias("__rep")
-        )
-    else:
-        ex0 = sh.select(F.col(id_col), "__cnt", F.explode("__g").alias("__s"))
-        # document frequency counts DOCUMENTS, so weight by multiplicity
-        rare = ex0.groupBy("__s").agg(F.sum("__cnt").alias("__df")).filter(
-            F.col("__df") <= max_shingle_freq
-        )
-        ex = ex0.join(rare.select("__s"), "__s")
-        sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
-        ex = ex.drop("__cnt").join(sizes, id_col)
-        eligible = sizes.filter(F.col("__sz") > 0).select(
-            F.col(id_col).alias("__rep")
-        )
-    ex = iter_checkpoint(ex, reliable)
-    # same stream-side clustering + sizes-as-keys layout as the direct
-    # path (see jaccard_pairs_inverted / _cluster_pair_stream)
-    a = _cluster_pair_stream(ex, id_col).select(
-        F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__s"
-    )
-    b = ex.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__szb"), "__s")
-    inter = (
-        a.join(b, "__s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "__sza", "__szb")
-        .agg(F.count(F.lit(1)).alias("__i"))
-    )
-    j = F.col("__i") / (F.col("__sza") + F.col("__szb") - F.col("__i"))
-    rep_pairs = (
-        inter.withColumn("jaccard", F.round(j, round_to))
-        .filter(j >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    # fan representative pairs out to member pairs, re-normalizing the
-    # (id_a < id_b) order across interleaved member ids
-    ma = members.select(F.col("__rep").alias("id_a"), F.col("__m").alias("__ma"))
-    mb = members.select(F.col("__rep").alias("id_b"), F.col("__m").alias("__mb"))
-    cross = rep_pairs.join(ma, "id_a").join(mb, "id_b").select(
-        F.least("__ma", "__mb").alias("id_a"),
-        F.greatest("__ma", "__mb").alias("id_b"),
-        "jaccard",
-    )
-    if threshold > 1.0:
-        return cross
-    # within-group pairs: identical docs, Jaccard exactly 1.0 over a
-    # non-empty capped universe
-    m1 = members.join(eligible, "__rep").select(
-        "__rep", F.col("__m").alias("id_a")
-    )
-    m2 = members.select("__rep", F.col("__m").alias("id_b"))
-    within = (
-        m1.join(m2, "__rep")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    return out if members is None else _fan_out(out, members)
 
 
 def containment_pairs_inverted(
@@ -1078,70 +1031,33 @@ def containment_pairs_inverted(
     intersection makes capped containment a lower bound on the true
     score.
 
-    ``duplicate_collapse``: same adaptive representative collapse (and
-    the same result-exactness argument) as jaccard_pairs_inverted —
-    this operator carried the repo's second-highest scaling exponent
-    (α 0.61) on duplicate-heavy growth before the collapse — and its
-    OWN, lower hotspot ceiling (CONTAINMENT_COLLAPSE_CMAX: the
-    one-sided OR threshold keeps every subset pair a mega group's
-    postings touch, so the direct join crosses at cmax ≈ 3.5k where
-    jaccard still wins at 4k — measured h60/h80 bracket).
-    ``reliable``: durable lineage truncation.
-    Probe results are cached per (session, plan, column): if this session OVERWRITES the files behind ``df`` and re-runs on an identical plan, call :func:`clear_dup_stats_cache` first or the auto switch plans from stale stats (plan choice only — both plans are result-exact)."""
+    ``duplicate_collapse``: same adaptive representative collapse as
+    jaccard_pairs_inverted (result-exact, see :func:`_fan_out`) — this
+    operator carried the repo's second-highest scaling exponent (α 0.61)
+    on duplicate-heavy growth before the collapse — and its OWN, lower
+    hotspot ceiling (CONTAINMENT_COLLAPSE_CMAX: the one-sided OR
+    threshold keeps every subset pair a mega group's postings touch, so
+    the direct join crosses at cmax ≈ 3.5k where jaccard still wins at
+    4k — measured h60/h80 bracket). ``reliable``: durable lineage
+    truncation. Probe results are cached per (session, plan, column):
+    if this session OVERWRITES the files behind ``df`` and re-runs on an
+    identical plan, call :func:`clear_dup_stats_cache` first or the
+    auto switch plans from stale stats (plan choice only — both plans
+    are result-exact)."""
     df = _spread(df)
+    members = None
     if _resolve_posting_collapse(
         df, text_col, duplicate_collapse,
         cmax_ceiling=CONTAINMENT_COLLAPSE_CMAX,
     ):
-        return _containment_pairs_collapsed(
-            df, text_col, id_col, shingle_n, threshold,
-            max_shingle_freq, round_to, reliable,
-        )
-    # two-step words → shingles projection, no redundant size filter:
-    # same rationale as jaccard_pairs_inverted
-    sh = df.select(
-        F.col(id_col),
-        F.split(normalize_text(F.col(text_col)), " ").alias("__w"),
-    ).select(
-        F.col(id_col),
-        word_shingles_from_words(F.col("__w"), shingle_n).alias("__g"),
-    )
-    if max_shingle_freq is None:
-        ex = sh.select(
-            F.col(id_col), F.size("__g").alias("__sz"), F.explode("__g").alias("__s")
-        )
-    else:
-        ex = sh.select(
-            F.col(id_col), F.size("__g").alias("__sz"), F.explode("__g").alias("__s")
-        )
-        rare = ex.groupBy("__s").agg(F.count(F.lit(1)).alias("__df")).filter(
-            F.col("__df") <= max_shingle_freq
-        )
-        ex = ex.join(rare.select("__s"), "__s")
-    # materialize once: the aliased self-join otherwise recomputes the
-    # scan+shingle+explode per branch (no ReusedExchange; see
-    # jaccard_pairs_inverted)
-    ex = iter_checkpoint(ex, reliable)
-    # stream side doc-clustered in the broadcast regime: the pair
-    # aggregation below then needs NO exchange (see _cluster_pair_stream)
-    a = _cluster_pair_stream(ex, id_col).select(
-        F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__s"
-    )
-    b = ex.select(
-        F.col(id_col).alias("id_b"), F.col("__sz").alias("__szb"), "__s"
-    )
-    inter = (
-        a.join(b, "__s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # sizes ride as grouping keys (functionally dependent on the ids,
-        # so groups are unchanged): no first() agg buffers, and in the
-        # SMJ regime the pair-exchange row narrows 7 -> 5 fields
-        .groupBy("id_a", "id_b", "__sza", "__szb")
-        .agg(F.count(F.lit(1)).alias("__i"))
+        df, members = _rep_groups(df, text_col, id_col, reliable)
+    inter = _posting_pairs(
+        df, text_col, id_col, shingle_n, max_shingle_freq,
+        capped_sizes=False, reps=members is not None, reliable=reliable,
     )
     ca = F.col("__i") / F.col("__sza")
     cb = F.col("__i") / F.col("__szb")
-    return (
+    out = (
         inter.filter((ca >= threshold) | (cb >= threshold))
         .select(
             "id_a",
@@ -1150,108 +1066,9 @@ def containment_pairs_inverted(
             F.round(cb, round_to).alias("cont_b_in_a"),
         )
     )
-
-
-def _containment_pairs_collapsed(
-    df, text_col, id_col, shingle_n, threshold, max_shingle_freq, round_to,
-    reliable=False,
-) -> DataFrame:
-    """Representative-collapsed containment (see containment_pairs_inverted).
-
-    Exactness mirrors the Jaccard collapse, with containment's mixed
-    contract carried through: intersections over the (multiplicity-
-    weighted) capped universe, denominators the TRUE pre-cap sizes.
-    Within-group (identical-doc) pairs score capped_size / true_size in
-    both directions, emitted only when the capped universe is non-empty
-    (a doc whose every shingle is pruned has no postings in the direct
-    path either) and the score clears the threshold. The fan-out swaps
-    the direction columns when member-id order inverts the
-    representative order — containment is asymmetric."""
-    fpmap, groups, members = _rep_groups(df, text_col, id_col, reliable)
-    reps = df.join(
-        groups.select(F.col("__rep").alias(id_col), "__cnt"), id_col
-    )
-    base = reps.select(
-        F.col(id_col), "__cnt",
-        F.split(normalize_text(F.col(text_col)), " ").alias("__w"),
-    )
-    sh = base.select(
-        F.col(id_col), "__cnt",
-        word_shingles_from_words(F.col("__w"), shingle_n).alias("__g"),
-    )
-    if max_shingle_freq is None:
-        ex = sh.select(
-            F.col(id_col), F.size("__g").alias("__sz"),
-            F.explode("__g").alias("__s"),
-        )
-        # identical docs: intersection == true size in both directions;
-        # shingle-eligibility via the words array (>= n words)
-        within_rep = base.filter(F.size("__w") >= shingle_n).select(
-            F.col(id_col).alias("__rep"), F.lit(1.0).alias("__wscore")
-        )
-    else:
-        ex0 = sh.select(
-            F.col(id_col), "__cnt", F.size("__g").alias("__tsz"),
-            F.explode("__g").alias("__s"),
-        )
-        rare = ex0.groupBy("__s").agg(F.sum("__cnt").alias("__df")).filter(
-            F.col("__df") <= max_shingle_freq
-        )
-        kept = ex0.join(rare.select("__s"), "__s")
-        csz = kept.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("__csz"), F.first("__tsz").alias("__tsz")
-        )
-        # postings carry the TRUE size as denominator; the intersection
-        # count comes from the capped postings themselves
-        ex = kept.select(F.col(id_col), F.col("__tsz").alias("__sz"), "__s")
-        within_rep = csz.filter(F.col("__csz") > 0).select(
-            F.col(id_col).alias("__rep"),
-            (F.col("__csz").cast("double") / F.col("__tsz")).alias("__wscore"),
-        )
-    ex = iter_checkpoint(ex, reliable)
-    # same stream-side clustering + sizes-as-keys layout as the direct
-    # path (see jaccard_pairs_inverted / _cluster_pair_stream)
-    a = _cluster_pair_stream(ex, id_col).select(
-        F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__s"
-    )
-    b = ex.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__szb"), "__s")
-    inter = (
-        a.join(b, "__s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "__sza", "__szb")
-        .agg(F.count(F.lit(1)).alias("__i"))
-    )
-    ca = F.col("__i") / F.col("__sza")
-    cb = F.col("__i") / F.col("__szb")
-    rep_pairs = inter.filter((ca >= threshold) | (cb >= threshold)).select(
-        "id_a", "id_b",
-        F.round(ca, round_to).alias("__ca"),
-        F.round(cb, round_to).alias("__cb"),
-    )
-    ma = members.select(F.col("__rep").alias("id_a"), F.col("__m").alias("__ma"))
-    mb = members.select(F.col("__rep").alias("id_b"), F.col("__m").alias("__mb"))
-    fwd = F.col("__ma") <= F.col("__mb")
-    cross = rep_pairs.join(ma, "id_a").join(mb, "id_b").select(
-        F.least("__ma", "__mb").alias("id_a"),
-        F.greatest("__ma", "__mb").alias("id_b"),
-        F.when(fwd, F.col("__ca")).otherwise(F.col("__cb")).alias("cont_a_in_b"),
-        F.when(fwd, F.col("__cb")).otherwise(F.col("__ca")).alias("cont_b_in_a"),
-    )
-    w = F.round(F.col("__wscore"), round_to)
-    m1 = members.join(within_rep, "__rep").filter(
-        F.col("__wscore") >= threshold
-    ).select("__rep", F.col("__m").alias("id_a"), w.alias("__ws"))
-    m2 = members.select("__rep", F.col("__m").alias("id_b"))
-    within = (
-        m1.join(m2, "__rep")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.col("__ws").alias("cont_a_in_b"),
-            F.col("__ws").alias("cont_b_in_a"),
-        )
-    )
-    return cross.unionByName(within)
+    if members is None:
+        return out
+    return _fan_out(out, members, swap=("cont_a_in_b", "cont_b_in_a"))
 
 
 def _bucket_cosine_verify(threshold: float):
@@ -1326,25 +1143,21 @@ def embedding_neardup_pairs(
       probability is (1-(1-acos(s)/pi)^r)^b with r = num_planes/bands.
 
     ``duplicate_collapse`` (LSH mode): representative collapse — band
-    and verify one rep per DISTINCT vector, fan verified rep pairs out
-    to member pairs, and emit within-group pairs in closed form at
-    cosine exactly 1.0 — the pair-family hazard transplanted from the
-    text family: a g-strong identical-embedding group otherwise lands
-    whole in each of its ``bands`` buckets, so ONE task runs a serial
-    g×g verify matmul (cmax² work no executor count absorbs) and the
-    distinct shuffles the group's g² passing pairs once per band.
-    Result-exact on every input: cosine and band keys are
-    vector-determined, so member candidacy ⟺ rep candidacy and scores
-    transfer; identical non-zero vectors score bitwise 1.0 on the
-    direct path too (num == den in the same arithmetic), while an
-    all-zero group verifies NaN there and is correspondingly excluded
-    from the closed form here. ``"auto"`` (default) probes the vector
-    column (the same cached _dup_stats scan — xxhash64 hashes arrays)
-    against the measured affine crossover
+    and verify one rep per DISTINCT vector, then fan verified rep pairs
+    out to member pairs (result-exact, see :func:`_fan_out`) — the
+    pair-family hazard transplanted from the text family: a g-strong
+    identical-embedding group otherwise lands whole in each of its
+    ``bands`` buckets, so ONE task runs a serial g×g verify matmul
+    (cmax² work no executor count absorbs) and the distinct shuffles
+    the group's g² passing pairs once per band. ``"auto"`` (default)
+    probes the vector column (the same cached _dup_stats scan —
+    xxhash64 hashes arrays) against the measured affine crossover
     sqrt(EMBED_COLLAPSE_INTERCEPT + EMBED_COLLAPSE_BETA·n/P),
     calibrated from a planted-group band on the sf0.1 embeddings (see
     the constant's derivation block); the exact brute-force mode never
-    probes or collapses — it is the small-corpus oracle baseline."""
+    probes or collapses — it is the small-corpus oracle baseline.
+
+    Rows with a NULL id or a NULL vector never pair."""
     from datamine_v2_0_spark.operators.similarity import (
         banded_keys_udf,
         cosine_pairs_udf,
@@ -1353,10 +1166,11 @@ def embedding_neardup_pairs(
 
     if duplicate_collapse not in ("auto", "always", "never"):
         raise ValueError(f"duplicate_collapse: {duplicate_collapse!r}")
-    # NULL vectors can't hash into a band or verify a cosine — drop them
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), F.col(vec_col)
-    )
+    # NULL vectors can't hash into a band or verify a cosine, and a NULL
+    # id can't order a pair — drop both
+    base = df.filter(
+        F.col(vec_col).isNotNull() & F.col(id_col).isNotNull()
+    ).select(F.col(id_col), F.col(vec_col))
     if not exact and _resolve_pair_collapse(
         base, vec_col, duplicate_collapse, beta=EMBED_COLLAPSE_BETA,
         intercept=EMBED_COLLAPSE_INTERCEPT,
@@ -1365,48 +1179,28 @@ def embedding_neardup_pairs(
             vector_rep_groups,
         )
 
-        rep_base, members0 = vector_rep_groups(base, vec_col, id_col)
-        members = members0.select(
-            F.col("neighbor_id").alias("__rep"), "__m"
-        )
+        rep_base, members = vector_rep_groups(base, vec_col, id_col)
         rep_pairs = embedding_neardup_pairs(
             rep_base, vec_col, id_col, dim, threshold, num_planes,
             bands, seed, round_to, exact=False, duplicate_collapse="never",
         )
-        ma = members.select(
-            F.col("__rep").alias("id_a"), F.col("__m").alias("__ma")
-        )
-        mb = members.select(
-            F.col("__rep").alias("id_b"), F.col("__m").alias("__mb")
-        )
-        cross = rep_pairs.join(ma, "id_a").join(mb, "id_b").select(
-            F.least("__ma", "__mb").alias("id_a"),
-            F.greatest("__ma", "__mb").alias("id_b"),
-            "cos_sim",
-        )
-        if threshold > 1.0:
-            return cross
-        # within-group pairs: identical vectors, cosine exactly 1.0 —
-        # emitted only for non-zero vectors (a zero-vector group
-        # verifies NaN on the direct path and never passes)
-        nonzero = rep_base.filter(
-            F.aggregate(
-                F.col(vec_col).cast("array<double>"),
-                F.lit(0.0),
+        if threshold <= 1.0:
+            # self-pairs: identical non-zero vectors score bitwise 1.0 on
+            # the direct path (num == den in the same arithmetic); a
+            # zero vector verifies NaN there and never passes
+            sq = F.aggregate(
+                F.col(vec_col).cast("array<double>"), F.lit(0.0),
                 lambda a, x: a + x * x,
             )
-            > 0
-        ).select(F.col(id_col).alias("__rep"))
-        m1 = members.join(nonzero, "__rep").select(
-            "__rep", F.col("__m").alias("id_a")
+            rep_pairs = rep_pairs.unionByName(
+                rep_base.filter(sq > 0).select(
+                    F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+                    F.lit(1.0).alias("cos_sim"),
+                )
+            )
+        return _fan_out(
+            rep_pairs, members.withColumnRenamed("neighbor_id", "__rep")
         )
-        m2 = members.select("__rep", F.col("__m").alias("id_b"))
-        within = (
-            m1.join(m2, "__rep")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", F.lit(1.0).alias("cos_sim"))
-        )
-        return cross.unionByName(within)
     if exact:
         a = base.select(
             F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
@@ -2004,17 +1798,18 @@ def dedup_against(
     against the corpus you already trained on).
 
     ``duplicate_collapse`` (``method='near'`` only; the exact path is
-    already hash-collapsed by construction): survival is a function of
+    already hash-collapsed by construction): a match is a function of
     the normalized text alone, so on duplicate-heavy corpora the whole
     candidate+verify pipeline runs on one representative per distinct
-    text PER SIDE and the surviving representatives fan back to members
-    by fingerprint — without it, a duplicated text pays its cross-side
+    text PER SIDE and every member of a matched new-side representative
+    is removed — without it, a duplicated text pays its cross-side
     bucket product and a shingle verify per member pair for an ANY-match
     answer the first pair already settles (the skewed-replica bench
-    measured 3.8× uniform time). Result-exact on every input; ``"auto"``
-    uses the pair family's max-group probe on the pooled corpora (see
-    ``PAIR_COLLAPSE_BETA``): banding is linear in corpus size and
-    in-bucket work parallelizes across groups, so only one group's
+    measured 3.8× uniform time). Result-exact on every input (see
+    :func:`_fan_out`); ``"auto"`` uses the pair family's max-group
+    probe on the pooled corpora (see ``PAIR_COLLAPSE_BETA``): banding
+    is linear in corpus size and in-bucket work parallelizes across
+    groups, so only one group's
     serial hotspot, not uniform duplication, pays for the collapse
     machinery.
 
@@ -2029,7 +1824,8 @@ def dedup_against(
     bucket) equality — never all-pairs — and the signature UDF runs
     once over each corpus.
 
-    Returns the surviving ``new_df`` rows (original columns). Auto
+    Returns the surviving ``new_df`` rows (original columns); a doc
+    with a NULL id or a NULL text never matches, so it survives. Auto
     probe results are cached per (session, plan, column): if this
     session OVERWRITES the files behind either corpus and re-runs on an
     identical plan, call :func:`clear_dup_stats_cache` first or the
@@ -2046,22 +1842,21 @@ def dedup_against(
     if method != "near":
         raise ValueError(f"method must be 'exact' or 'near', got {method!r}")
     # auto probes the POOLED corpora (new ∪ ref on the text column)
+    new_in, ref_in, members = new_df, ref_df, None
     if _resolve_pair_collapse(
         new_df.select(text_col).unionAll(ref_df.select(text_col)),
         text_col,
         duplicate_collapse,
         beta=AGAINST_COLLAPSE_BETA,
     ):
-        return _dedup_against_collapsed(
-            new_df, ref_df, text_col, id_col, threshold, num_hashes,
-            bands, shingle_n, reliable,
-        )
+        new_in, members = _rep_groups(new_df, text_col, id_col, reliable)
+        ref_in, _ = _rep_groups(ref_df, text_col, id_col, reliable)
 
     sig_udf = minhash_text_udf(num_hashes, shingle_n)
-    tagged = new_df.select(
+    tagged = new_in.select(
         F.col(id_col), F.col(text_col), F.lit(True).alias("__is_new")
     ).unionByName(
-        ref_df.select(
+        ref_in.select(
             F.col(id_col), F.col(text_col), F.lit(False).alias("__is_new")
         )
     )
@@ -2122,10 +1917,10 @@ def dedup_against(
         )
 
     sh_new = _shingles(
-        new_df, cands.select(F.col("id_new").alias(id_col)).distinct(), "id_new"
+        new_in, cands.select(F.col("id_new").alias(id_col)).distinct(), "id_new"
     )
     sh_ref = _shingles(
-        ref_df, cands.select(F.col("id_ref").alias(id_col)).distinct(), "id_ref"
+        ref_in, cands.select(F.col("id_ref").alias(id_col)).distinct(), "id_ref"
     )
     matched = (
         cands.join(sh_new, "id_new")
@@ -2139,42 +1934,12 @@ def dedup_against(
         .select(F.col("id_new").alias(id_col))
         .distinct()
     )
+    if members is not None:
+        # matched representatives -> every member of their group
+        matched = members.join(
+            matched.select(F.col(id_col).alias("__rep")), "__rep"
+        ).select(F.col("__m").alias(id_col))
     return new_df.join(matched, id_col, "left_anti")
-
-
-def _dedup_against_collapsed(
-    new_df, ref_df, text_col, id_col, threshold, num_hashes, bands, shingle_n,
-    reliable=False,
-) -> DataFrame:
-    """Representative-collapsed cross-corpus near-dedup (see
-    dedup_against): run the candidate+verify pipeline on one
-    representative per distinct normalized text per side, then fan the
-    surviving representatives back to members by fingerprint. Exact:
-    signatures and Jaccard scores are text-determined, so a member
-    survives iff its representative does."""
-    nfp = iter_checkpoint(
-        new_df.select(
-            F.col(id_col), content_hash(F.col(text_col)).alias("__fp")
-        ),
-        reliable,
-    )
-    nrep = nfp.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-    nreps_df = new_df.join(nrep.select(F.col("__rep").alias(id_col)), id_col)
-    rreps = (
-        ref_df.select(F.col(id_col), content_hash(F.col(text_col)).alias("__fp"))
-        .groupBy("__fp")
-        .agg(F.min(id_col).alias("__rep"))
-        .select(F.col("__rep").alias(id_col))
-    )
-    rreps_df = ref_df.join(rreps, id_col)
-    surviving = dedup_against(
-        nreps_df, rreps_df, text_col, id_col, "near",
-        threshold, num_hashes, bands, shingle_n,
-        duplicate_collapse="never", reliable=reliable,
-    ).select(F.col(id_col).alias("__rep"))
-    surv_fp = nrep.join(surviving, "__rep").select("__fp")
-    keep = nfp.join(surv_fp, "__fp").select(id_col)
-    return new_df.join(keep, id_col, "left_semi")
 
 
 def _token_kgrams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:

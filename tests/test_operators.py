@@ -2105,6 +2105,84 @@ def test_collapsed_dedup_reliable_checkpoint_parity(spark, tmp_path):
     assert any(ckpt.rglob("*")), "reliable=True never wrote a durable checkpoint"
 
 
+_BASE = "the quick brown fox jumps over the lazy dog near the river"
+_QUAD = "four copies of one sentence about rivers hills and quiet valleys"
+
+
+def _null_text_corpus(spark):
+    """NULL ids inside and outside duplicate groups, NULL texts, a
+    shingle-less duplicate group and a 4-copy group with a near-dup."""
+    rows = [(1, _BASE), (None, _BASE), (5, _BASE + " x")]
+    rows += [(10 + i, _QUAD) for i in range(4)] + [(14, _QUAD + " today")]
+    rows += [(20, "hi there"), (21, "hi there")]
+    rows += [(30, None), (31, None), (None, None)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _null_vec_corpus(spark):
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    v, w = rng.standard_normal(16), rng.standard_normal(16)
+    vec = lambda x: [float(t) for t in x]  # noqa: E731
+    rows = [(1, vec(w)), (None, vec(w)), (5, vec(w + rng.standard_normal(16) * 0.01))]
+    rows += [(10 + i, vec(v)) for i in range(4)]
+    rows += [(20, [0.0] * 16), (21, [0.0] * 16), (30, None), (None, None)]
+    return spark.createDataFrame(rows, "doc_id long, embedding array<float>")
+
+
+_NULL_INPUT_OPS = {
+    "minhash": lambda s, m: dd.minhash_near_dup_pairs(
+        _null_text_corpus(s), "text", "doc_id", duplicate_collapse=m),
+    "jaccard": lambda s, m: dd.jaccard_pairs_inverted(
+        _null_text_corpus(s), "text", "doc_id", duplicate_collapse=m),
+    "containment": lambda s, m: dd.containment_pairs_inverted(
+        _null_text_corpus(s), "text", "doc_id", duplicate_collapse=m),
+    "embedding": lambda s, m: dd.embedding_neardup_pairs(
+        _null_vec_corpus(s), "embedding", "doc_id", dim=16, num_planes=16,
+        bands=8, duplicate_collapse=m),
+    "dedup_against": lambda s, m: dd.dedup_against(
+        _null_text_corpus(s),
+        s.createDataFrame([(100, _BASE), (None, _QUAD)], "doc_id long, text string"),
+        "text", "doc_id", duplicate_collapse=m),
+}
+
+
+@pytest.mark.parametrize("mode", ["never", "always"])
+@pytest.mark.parametrize("op", sorted(_NULL_INPUT_OPS))
+def test_collapse_null_inputs_match_direct(spark, op, mode):
+    """A NULL id never pairs and a NULL text never matches, on the
+    direct and the representative-collapsed plan alike."""
+    run = lambda m: sorted(map(tuple, _NULL_INPUT_OPS[op](spark, m).collect()), key=repr)  # noqa: E731
+    got = run(mode)
+    assert got == run("never")
+    if op == "dedup_against":
+        # survivors: the NULL-id copy of the matched text, the unmatched
+        # 4-copy group (its ref twin has a NULL id) and every NULL text
+        assert sorted(map(repr, (r[0] for r in got))) == sorted(map(repr, [
+            None, 10, 11, 12, 13, 14, 20, 21, 30, 31, None]))
+        return
+    assert got
+    assert all(a is not None and b is not None for a, b, *_ in got)
+    assert all(a != b for a, b, *_ in got)
+
+
+@pytest.mark.parametrize(
+    "fn", [dd.jaccard_pairs_inverted, dd.minhash_near_dup_pairs]
+)
+def test_collapsed_plan_carries_rep_marker(spark, fn):
+    """The collapsed plan names its representative column ``__rep``;
+    the benchmark's plan report tells the two plans apart by it."""
+    df = _dup_corpus(spark, [3, 1])
+
+    def analyzed(mode):
+        out = fn(df, "text", "doc_id", duplicate_collapse=mode)
+        return out._jdf.queryExecution().analyzed().toString()
+
+    assert "__rep" in analyzed("always")
+    assert "__rep" not in analyzed("never")
+
+
 def test_plan_parallelism_prefers_configured_target(spark):
     """Plan-time P must come from the configured shuffle partitioning
     (stable under dynamic allocation), never fall BELOW the live core
