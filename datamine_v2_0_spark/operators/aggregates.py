@@ -136,7 +136,10 @@ def exact_percentiles_sorted(
     degenerates (high-cardinality values).
 
     Two result-identical layouts, chosen by plan-estimated input size
-    (``two_pass='auto'``; 'always'/'never' pin a layout):
+    (``two_pass='auto'``; 'always'/'never' pin a layout). When the plan
+    statistics are unreachable (e.g. under Spark Connect), ``auto``
+    always picks two-pass, which costs about 0.5 s of extra job
+    latency on a tiny input:
 
     - **sort** (small inputs): one narrow shuffle + per-group
       row_number — one task per group, minimal job count. Optimal

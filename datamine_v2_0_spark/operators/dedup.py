@@ -793,9 +793,10 @@ def _rep_groups(df: DataFrame, text_col: str, id_col: str, reliable: bool = Fals
     normalized text (``__rep`` = min member id) carrying the group's
     multiplicity ``__cnt``; members = (``__rep``, ``__m``) for every
     member with a non-NULL id — a NULL id never pairs. ``__cnt`` counts
-    NULL-id copies too, as a direct plan's document frequency does; a
-    text whose every copy has a NULL id gets no representative, so it
-    is also left out of a collapsed plan's document frequency. Only
+    the non-NULL-id copies, as a direct plan's document frequency does
+    (:func:`_posting_pairs`): a NULL-id doc never counts there either,
+    so a text whose every copy has a NULL id, which gets no
+    representative, is left out of both plans alike. Only
     representatives are shingled or signed downstream. Text itself
     never shuffles for grouping — the fingerprint map is two thin
     columns, checkpointed because the groups and the member map both
@@ -807,7 +808,7 @@ def _rep_groups(df: DataFrame, text_col: str, id_col: str, reliable: bool = Fals
         reliable,
     )
     groups = fpmap.groupBy("__fp").agg(
-        F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__cnt")
+        F.min(id_col).alias("__rep"), F.count(id_col).alias("__cnt")
     )
     reps = df.join(groups.select(F.col("__rep").alias(id_col), "__cnt"), id_col)
     members = (
@@ -874,7 +875,9 @@ def _posting_pairs(
     ``__i`` the shared-shingle count and ``__sz*`` each doc's size —
     over the capped universe when ``capped_sizes`` (Jaccard), else the
     true pre-cap size (containment). ``max_shingle_freq`` drops
-    shingles whose document frequency exceeds it from the join.
+    shingles whose document frequency exceeds it from the join; that
+    frequency counts docs with a non-NULL id (SQL's ``COUNT(id)``),
+    since a NULL-id doc, which never pairs, never counts either.
 
     ``reps``: ``df`` holds representatives (see :func:`_rep_groups`):
     document frequency sums their ``__cnt`` multiplicity instead of
@@ -901,7 +904,7 @@ def _posting_pairs(
         F.col(id_col), *weight, *size, F.explode("__g").alias("__s")
     )
     if max_shingle_freq is not None:
-        dfreq = F.sum("__cnt") if reps else F.count(F.lit(1))
+        dfreq = F.sum("__cnt") if reps else F.count(id_col)
         rare = ex.groupBy("__s").agg(dfreq.alias("__df")).filter(
             F.col("__df") <= max_shingle_freq
         )
@@ -982,6 +985,29 @@ def jaccard_pairs_inverted(
     and re-runs on an identical plan, call :func:`clear_dup_stats_cache`
     first or the auto switch plans from stale stats (plan choice only —
     both plans are result-exact)."""
+    pairs, members = _jaccard_pairs_core(
+        df, text_col, id_col, shingle_n, threshold, max_shingle_freq,
+        round_to, duplicate_collapse, reliable,
+    )
+    return pairs if members is None else _fan_out(pairs, members)
+
+
+def _jaccard_pairs_core(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int = 3,
+    threshold: float = 0.2,
+    max_shingle_freq: int | None = None,
+    round_to: int = 6,
+    duplicate_collapse: str = "auto",
+    reliable: bool = False,
+) -> tuple[DataFrame, DataFrame | None]:
+    """:func:`jaccard_pairs_inverted` before the member fan-out:
+    ``(pairs, None)`` on the direct plan, or ``(rep_pairs, members)``
+    on the collapsed one, where ``rep_pairs`` are representative pairs
+    with ``id_a <= id_b`` and ``members`` is :func:`_rep_groups`'
+    member map."""
     df = _spread(df)
     members = None
     if _resolve_posting_collapse(df, text_col, duplicate_collapse):
@@ -996,7 +1022,47 @@ def jaccard_pairs_inverted(
         .filter(j >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out if members is None else _fan_out(out, members)
+    return out, members
+
+
+def _star_edges(pairs: DataFrame, members: DataFrame | None) -> DataFrame:
+    """Connected-components edges with the components of the fanned-out
+    pair graph, in O(Σ|g|) rows instead of O(Σ|g|²).
+
+    ``(pairs, members)`` is what :func:`_jaccard_pairs_core` returns;
+    ``pairs`` pass through unchanged when ``members`` is None (direct
+    plan). Otherwise the edges are every representative pair ``(r, s)``
+    with ``r < s``, plus one star edge ``(r, m)`` for each member
+    ``m != r`` of a representative ``r`` that appears in any
+    representative pair, its self-pair ``(r, r)`` included.
+
+    Why the components are identical: :func:`_fan_out` turns a pair
+    ``(r, s)`` into all of ``members(r) × members(s)`` and a self-pair
+    ``(r, r)`` into a clique on ``members(r)``. ``r`` is itself a
+    member of its group (the representative is the group's minimum
+    non-NULL id), so in the fanned graph a member joins a component
+    exactly when its representative has a pair, and two representatives
+    share a component exactly when a chain of representative pairs
+    links them. The star graph has the same two properties, so the same
+    components; each component's minimum id is a representative in both,
+    so :func:`connected_components` labels them alike. A representative
+    with no pair (a text that does not shingle) leaves its copies as
+    singletons in both graphs."""
+    if members is None:
+        return pairs
+    paired = pairs.select(F.col("id_a").alias("__rep")).union(
+        pairs.select(F.col("id_b").alias("__rep"))
+    )
+    star = (
+        members.join(paired, "__rep", "left_semi")
+        .filter(F.col("__m") != F.col("__rep"))
+        .select(F.col("__rep").alias("id_a"), F.col("__m").alias("id_b"))
+    )
+    return (
+        pairs.filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .union(star)
+    )
 
 
 def containment_pairs_inverted(

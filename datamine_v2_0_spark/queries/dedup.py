@@ -228,8 +228,10 @@ def clear_groups_cache() -> None:
 
 def _compute_groups(spark, sf_dir):
     df = _t(spark, sf_dir, "documents")
-    pairs = dd.jaccard_pairs_inverted(df, "text", "doc_id", threshold=0.2)
-    return dd.dedup_groups(df, "doc_id", pairs)
+    pairs, members = dd._jaccard_pairs_core(
+        df, "text", "doc_id", threshold=0.2
+    )
+    return dd.dedup_groups(df, "doc_id", dd._star_edges(pairs, members))
 
 
 def q_dedup_groups(spark, sf_dir):
@@ -237,6 +239,12 @@ def q_dedup_groups(spark, sf_dir):
     connected components; oracle = DuckDB recursive-CTE transitive
     closure over the same exact-Jaccard pair set. Every doc appears
     once; group_id = min doc_id of its component (own id if unpaired).
+
+    When the Jaccard operator collapses exact duplicates, the components
+    run over representative pairs plus one star edge (representative,
+    member) per member of a paired representative, never over the
+    fanned-out member pairs: a g-copy group costs g-1 edges instead of
+    g(g-1)/2, with the same components (operators/dedup._star_edges).
 
     Side effect: persists the result under an (applicationId, sf_dir)
     memo so

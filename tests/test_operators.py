@@ -2183,6 +2183,82 @@ def test_collapsed_plan_carries_rep_marker(spark, fn):
     assert "__rep" not in analyzed("never")
 
 
+def _group_rows(docs, pairs):
+    rows = dd.dedup_groups(docs, "doc_id", pairs).collect()
+    return sorted(map(tuple, rows), key=lambda r: [(x is None, x or 0) for x in r])
+
+
+def _star_groups(docs):
+    """The collapsed plan's star edges, the groups over them, and the
+    groups over the direct plan's pairs."""
+    pairs, members = dd._jaccard_pairs_core(
+        docs, "text", "doc_id", duplicate_collapse="always"
+    )
+    assert members is not None
+    edges = dd._star_edges(pairs, members)
+    direct = dd.jaccard_pairs_inverted(docs, "text", "doc_id", duplicate_collapse="never")
+    return edges, _group_rows(docs, edges), _group_rows(docs, direct)
+
+
+@pytest.mark.parametrize("g", [8, 64])
+def test_star_edges_linear_in_group_size(spark, g):
+    """A g-copy exact-duplicate group costs g - 1 connected-components
+    edges, not the g(g - 1)/2 member pairs, and yields the same groups."""
+    rows = [(i, _BASE) for i in range(g)]
+    rows += [(1000 + i, f"solo{i} alpha{i} beta{i} gamma{i}") for i in range(3)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    edges, star, direct = _star_groups(docs)
+    assert edges.count() == g - 1
+    assert star == direct
+    assert star == [(i, 0) for i in range(g)] + [(1000 + i, 1000 + i) for i in range(3)]
+
+
+def test_star_edge_groups_match_direct_on_edge_cases(spark):
+    """NULL ids and texts, a duplicated text too short to shingle, an
+    upper-cased copy, and a chain A~B~C (A !~ C) of three duplicated
+    texts whose groups merge only through representative pairs."""
+    w = [f"w{i}" for i in range(20)]
+    a, b, c = (" ".join(w[i:i + 12]) for i in (0, 4, 8))
+    rows = [(1, _BASE), (None, _BASE), (2, _BASE), (3, _BASE.upper())]
+    rows += [(20, "hi there"), (21, "hi there")]
+    rows += [(30, None), (31, None), (None, None)]
+    rows += [(44, a), (50, a), (45, b), (51, b), (46, c), (52, c)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    _, star, direct = _star_groups(docs)
+    assert star == direct
+    got = dict((i, g) for i, g in star if i is not None)
+    assert [got[i] for i in (1, 2, 3)] == [1, 1, 1]
+    assert (got[20], got[21]) == (20, 21)
+    assert [got[i] for i in (44, 45, 46, 50, 51, 52)] == [44] * 6
+    assert (got[30], got[31]) == (30, 31)
+    assert [r for r in star if r[0] is None] == [(None, None)] * 2
+
+
+_NULL_DF_OPS = {
+    "jaccard": lambda df, m: dd.jaccard_pairs_inverted(
+        df, "text", "doc_id", max_shingle_freq=2, duplicate_collapse=m),
+    "containment": lambda df, m: dd.containment_pairs_inverted(
+        df, "text", "doc_id", max_shingle_freq=2, duplicate_collapse=m),
+}
+
+
+@pytest.mark.parametrize("mode", ["never", "always"])
+@pytest.mark.parametrize("op", sorted(_NULL_DF_OPS))
+def test_null_id_docs_skip_document_frequency(spark, op, mode):
+    """Under ``max_shingle_freq`` a NULL-id doc counts toward no
+    shingle's document frequency, on the direct and the collapsed plan
+    alike: neither a text whose every copy has a NULL id nor the NULL-id
+    copy of a text with ids pushes a shared shingle over the cap."""
+    t, u = "a1 a2 a3 a4 a5", "e1 e2 e3 e4 e5"
+    rows = [(1, t), (2, t + " b1"), (None, t + " c1")]
+    rows += [(10, u), (None, u), (11, u + " d1")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(map(tuple, _NULL_DF_OPS[op](docs, mode).collect()))
+    # 3 shared trigrams of sizes 3 and 4
+    score = (0.75,) if op == "jaccard" else (1.0, 0.75)
+    assert got == [(1, 2, *score), (10, 11, *score)]
+
+
 def test_plan_parallelism_prefers_configured_target(spark):
     """Plan-time P must come from the configured shuffle partitioning
     (stable under dynamic allocation), never fall BELOW the live core
