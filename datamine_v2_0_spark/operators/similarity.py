@@ -373,10 +373,12 @@ def ivf_index(
             ).alias("__nvec"),
         )
     )
-    # tiny corpus: probe min(n, n_cells) with a bounded limit-count
-    # (never a full scan) and degrade gracefully (an empty/1-row ingest
-    # day is routine, not an error)
-    n_bounded = va.limit(n_cells).count()
+    # tiny corpus: probe min(n, n_cells) with a bounded take (never a
+    # full scan) and degrade gracefully (an empty/1-row ingest day is
+    # routine, not an error). Not limit().count(): Spark names a
+    # code-generated limit's counter from a JVM-global sequence, so that
+    # plan compiles a new class on every call.
+    n_bounded = len(va.select("__vid").take(n_cells))
     if n_bounded == 0:
         ct = dict(corpus.dtypes)
         cells = corpus.sparkSession.createDataFrame(
@@ -894,7 +896,7 @@ def pq_topk(
     qframe = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col)
     )
-    n_queries = qframe.limit(max_queries + 1).count()
+    n_queries = len(qframe.select(id_col).take(max_queries + 1))
     if n_queries > max_queries:
         raise ValueError(
             f"pq_topk collects the query frame driver-side to build ADC "

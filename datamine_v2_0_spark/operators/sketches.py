@@ -15,11 +15,19 @@ beyond-reference scale surface.
 
 from __future__ import annotations
 
+import sys
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from datamine_v2_0_spark.shipping import ship_by_value
+
+# the mapInPandas/applyInPandas closures call this module's kernels
+# (_mg_compress, _merge_centroids, tdigest_quantile) — ship them by value
+# so workers need no package install
+ship_by_value(sys.modules[__name__])
 
 
 def _mg_compress(counts: dict, capacity: int) -> tuple[dict, int]:

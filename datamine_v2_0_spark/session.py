@@ -111,6 +111,24 @@ def get_spark(
         # (runtimeFilter.semiJoinReduction is NOT enabled: on this Spark
         # 4.1 build it deadlocks trivial actions — verified bisect)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # Compile each generated class once per session. Spark caches
+        # Janino-compiled classes keyed by their source text: 100
+        # entries by default, split evenly over 4 LRU segments. One pass
+        # of the whole registry generates ~1,720 distinct classes, so at
+        # the default the second pass recompiled ~2,550 and the JIT
+        # warmed them up again (sf0.001, local[4]); with the two confs
+        # here it compiles a handful (SCALING.md). Sizing rule: at least
+        # 2× the registry's footprint, since one segment (25 of the 100
+        # entries) can overflow while the cache as a whole has room
+        # (dedup_exact_keep + dedup_groups + dedup_canonical, 86
+        # classes, recompiled 7-24 per repeat pass at the default).
+        # Static conf: it only takes effect when this call creates the
+        # JVM's first session.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Whole-stage class names otherwise embed the stage number AQE
+        # assigns (GeneratedIteratorForCodegenStage9 vs ...Stage15), so
+        # identical code misses the cache whenever that numbering shifts.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if driver_mem and SparkSession.getActiveSession() is None:
         builder = builder.config("spark.driver.memory", driver_mem)

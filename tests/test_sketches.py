@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -274,3 +276,50 @@ def test_cms_empty_input(spark):
     assert sketch.count() == 0
     est = sk.cms_estimate(sketch, empty, "user_id", depth=3, width=64)
     assert est.count() == 0
+
+
+def test_kernels_ship_by_value(tmp_path):
+    """The mapInPandas/applyInPandas closures call module-level kernels;
+    a worker that cannot import this package must still run them, so the
+    kernels unpickle in a process whose cwd and sys.path exclude the
+    repo."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    blob = tmp_path / "kernels.pkl"
+    blob.write_bytes(
+        cloudpickle.dumps(
+            (sk._mg_compress, sk.tdigest_sketch, sk.tdigest_quantile)
+        )
+    )
+    script = (
+        "import pickle, sys\n"
+        "import numpy as np\n"
+        "mg, td, tq = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "assert mg({'a': 5, 'b': 1, 'c': 1}, 1) == ({'a': 4}, 1)\n"
+        "assert tq(td(np.arange(101.0)), 0.5) == 50.0\n"
+        "try:\n"
+        "    import datamine_v2_0_spark\n"
+        "except ModuleNotFoundError:\n"
+        "    print('ok')\n"
+    )
+    repo = str(Path(sk.__file__).resolve().parents[2])
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and Path(p).resolve() != Path(repo)
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script, str(blob)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "ok"
