@@ -314,7 +314,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     shingle_n: int = 3,
     threshold: float = 0.0,
-    reliable: bool = False,
 ) -> DataFrame:
     """Verify candidate pairs with exact n-gram Jaccard similarity
     (JVM-side array_intersect/array_union on hashed shingle arrays —
@@ -327,7 +326,7 @@ def ngram_jaccard_pairs(
     # the candidate plan is referenced three times (both union arms and
     # the pair join) — checkpoint it so LSH candidate generation runs
     # once, not three times (it's the expensive upstream)
-    candidates = iter_checkpoint(candidates, reliable)
+    candidates = iter_checkpoint(candidates)
     cand_ids = (
         candidates.select(F.col("id_a").alias(id_col))
         .union(candidates.select(F.col("id_b").alias(id_col)))
@@ -362,7 +361,6 @@ def minhash_near_dup_pairs(
     shingle_n: int = 3,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    reliable: bool = False,
 ) -> DataFrame:
     """Banded MinHash-LSH candidates → exact n-gram Jaccard verify, with
     the adaptive representative collapse (``duplicate_collapse``, see
@@ -385,22 +383,21 @@ def minhash_near_dup_pairs(
     representative per distinct text and only the (inherently
     output-sized) member fan-out scales with duplication.
 
-    ``reliable``: durable lineage truncation (see :func:`_rep_groups` /
-    ckpt.iter_checkpoint). Probe results are cached per (session, plan,
-    column): if this session OVERWRITES the files behind ``df`` and
-    re-runs on an identical plan, call :func:`clear_dup_stats_cache`
-    first or the auto switch plans from stale stats (plan choice only —
-    both plans are result-exact).
+    Probe results are cached per (session, plan, column): if this
+    session OVERWRITES the files behind ``df`` and re-runs on an
+    identical plan, call :func:`clear_dup_stats_cache` first or the auto
+    switch plans from stale stats (plan choice only — both plans are
+    result-exact).
     """
     df = _spread(df)
     members = None
     if _resolve_pair_collapse(df, text_col, duplicate_collapse):
-        df, members = _rep_groups(df, text_col, id_col, reliable)
+        df, members = _rep_groups(df, text_col, id_col)
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n
     )
     out = ngram_jaccard_pairs(
-        cands, df, text_col, id_col, shingle_n, threshold, reliable=reliable
+        cands, df, text_col, id_col, shingle_n, threshold
     ).select("id_a", "id_b", F.round("jaccard", round_to).alias("jaccard"))
     if members is None:
         return out
@@ -742,7 +739,7 @@ def _cluster_pair_stream(ex: DataFrame, id_col: str) -> DataFrame:
     left in the posting family; partial agg combines <11% because most
     candidate pairs share exactly one shingle) disappears outright,
     replaced by one much narrower posting shuffle. The repartition must
-    come AFTER the checkpoint: a localCheckpoint leaf reports
+    come AFTER the checkpoint: a checkpointed leaf reports
     UnknownPartitioning under AQE, so partitioning established upstream
     does not survive it.
 
@@ -787,7 +784,7 @@ def _resolve_pair_collapse(
     return cmax >= cmax_threshold
 
 
-def _rep_groups(df: DataFrame, text_col: str, id_col: str, reliable: bool = False):
+def _rep_groups(df: DataFrame, text_col: str, id_col: str):
     """(reps, members) for representative collapse of a text corpus:
     reps = the ``df`` rows of one representative per distinct
     normalized text (``__rep`` = min member id) carrying the group's
@@ -800,12 +797,9 @@ def _rep_groups(df: DataFrame, text_col: str, id_col: str, reliable: bool = Fals
     representatives are shingled or signed downstream. Text itself
     never shuffles for grouping — the fingerprint map is two thin
     columns, checkpointed because the groups and the member map both
-    consume it. ``reliable`` routes the lineage truncation through the durable
-    checkpoint dir (ckpt.iter_checkpoint) so the collapsed plans
-    survive executor loss like the iterative operators do."""
+    consume it."""
     fpmap = iter_checkpoint(
-        df.select(F.col(id_col), content_hash(F.col(text_col)).alias("__fp")),
-        reliable,
+        df.select(F.col(id_col), content_hash(F.col(text_col)).alias("__fp"))
     )
     groups = fpmap.groupBy("__fp").agg(
         F.min(id_col).alias("__rep"), F.count(id_col).alias("__cnt")
@@ -868,7 +862,6 @@ def _fan_out(
 def _posting_pairs(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int,
     max_shingle_freq: int | None, capped_sizes: bool, reps: bool,
-    reliable: bool,
 ) -> DataFrame:
     """Shared inverted-index kernel of the posting-join family:
     (id_a, id_b, __sza, __szb, __i) per doc pair sharing >= 1 shingle,
@@ -919,7 +912,7 @@ def _posting_pairs(
     # exchange, so Catalyst gets no ReusedExchange and would scan +
     # shingle + explode the corpus TWICE (plan-audited). Materialize the
     # posting table once — same recipe as the BM25 inverted index.
-    ex = iter_checkpoint(ex, reliable)
+    ex = iter_checkpoint(ex)
     # stream side doc-clustered in the broadcast regime: the pair
     # aggregation below then needs NO exchange (see _cluster_pair_stream)
     a = _cluster_pair_stream(ex, id_col).select(
@@ -951,7 +944,6 @@ def jaccard_pairs_inverted(
     max_shingle_freq: int | None = None,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    reliable: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via an inverted-index join: explode
     distinct shingles, equi-join on the shingle, count shared shingles
@@ -979,15 +971,14 @@ def jaccard_pairs_inverted(
     fan-out scales with duplication. ``"auto"`` probes trimmed blowup +
     cmax against the posting family's measured crossovers
     (POSTING_COLLAPSE_BLOWUP / POSTING_COLLAPSE_CMAX — the self-join
-    grows ~trimmed², so the spread threshold sits low). ``reliable``:
-    durable lineage truncation. Probe results are cached per (session,
-    plan, column): if this session OVERWRITES the files behind ``df``
-    and re-runs on an identical plan, call :func:`clear_dup_stats_cache`
-    first or the auto switch plans from stale stats (plan choice only —
-    both plans are result-exact)."""
+    grows ~trimmed², so the spread threshold sits low). Probe results
+    are cached per (session, plan, column): if this session OVERWRITES
+    the files behind ``df`` and re-runs on an identical plan, call
+    :func:`clear_dup_stats_cache` first or the auto switch plans from
+    stale stats (plan choice only — both plans are result-exact)."""
     pairs, members = _jaccard_pairs_core(
         df, text_col, id_col, shingle_n, threshold, max_shingle_freq,
-        round_to, duplicate_collapse, reliable,
+        round_to, duplicate_collapse,
     )
     return pairs if members is None else _fan_out(pairs, members)
 
@@ -1001,7 +992,6 @@ def _jaccard_pairs_core(
     max_shingle_freq: int | None = None,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame | None]:
     """:func:`jaccard_pairs_inverted` before the member fan-out:
     ``(pairs, None)`` on the direct plan, or ``(rep_pairs, members)``
@@ -1011,10 +1001,10 @@ def _jaccard_pairs_core(
     df = _spread(df)
     members = None
     if _resolve_posting_collapse(df, text_col, duplicate_collapse):
-        df, members = _rep_groups(df, text_col, id_col, reliable)
+        df, members = _rep_groups(df, text_col, id_col)
     inter = _posting_pairs(
         df, text_col, id_col, shingle_n, max_shingle_freq,
-        capped_sizes=True, reps=members is not None, reliable=reliable,
+        capped_sizes=True, reps=members is not None,
     )
     j = F.col("__i") / (F.col("__sza") + F.col("__szb") - F.col("__i"))
     out = (
@@ -1074,7 +1064,6 @@ def containment_pairs_inverted(
     max_shingle_freq: int | None = None,
     round_to: int = 6,
     duplicate_collapse: str = "auto",
-    reliable: bool = False,
 ) -> DataFrame:
     """Asymmetric n-gram containment pairs via the same inverted-index
     join as :func:`jaccard_pairs_inverted`:
@@ -1104,22 +1093,21 @@ def containment_pairs_inverted(
     hotspot ceiling (CONTAINMENT_COLLAPSE_CMAX: the one-sided OR
     threshold keeps every subset pair a mega group's postings touch, so
     the direct join crosses at cmax ≈ 3.5k where jaccard still wins at
-    4k — measured h60/h80 bracket). ``reliable``: durable lineage
-    truncation. Probe results are cached per (session, plan, column):
-    if this session OVERWRITES the files behind ``df`` and re-runs on an
-    identical plan, call :func:`clear_dup_stats_cache` first or the
-    auto switch plans from stale stats (plan choice only — both plans
-    are result-exact)."""
+    4k — measured h60/h80 bracket). Probe results are cached per
+    (session, plan, column): if this session OVERWRITES the files behind
+    ``df`` and re-runs on an identical plan, call
+    :func:`clear_dup_stats_cache` first or the auto switch plans from
+    stale stats (plan choice only — both plans are result-exact)."""
     df = _spread(df)
     members = None
     if _resolve_posting_collapse(
         df, text_col, duplicate_collapse,
         cmax_ceiling=CONTAINMENT_COLLAPSE_CMAX,
     ):
-        df, members = _rep_groups(df, text_col, id_col, reliable)
+        df, members = _rep_groups(df, text_col, id_col)
     inter = _posting_pairs(
         df, text_col, id_col, shingle_n, max_shingle_freq,
-        capped_sizes=False, reps=members is not None, reliable=reliable,
+        capped_sizes=False, reps=members is not None,
     )
     ca = F.col("__i") / F.col("__sza")
     cb = F.col("__i") / F.col("__szb")
@@ -1367,7 +1355,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
-    reliable: bool = False,
 ) -> DataFrame:
     """Resolve near-duplicate candidate PAIRS into duplicate GROUPS:
     returns (node, comp) where comp is the minimum node id reachable
@@ -1396,10 +1383,8 @@ def connected_components(
     in the logical plan and re-pays its analysis/AQE cost on every
     block's job (measured +~1.4 s per run at sf0.1), while the
     checkpointed LogicalRDD is a constant-size plan leaf. The cuts are
-    ``localCheckpoint`` by default (fast, but unreplicated executor
-    blocks: an executor loss mid-job fails the job loudly and needs a
-    re-run), or durable ``checkpoint`` with ``reliable=True`` (needs
-    ``setCheckpointDir``; survives executor loss — see operators/ckpt).
+    durable exactly when the session has a checkpoint directory (see
+    operators/ckpt).
 
     NOT LAZY: construction runs Spark jobs (the edge materialization
     and one checkpoint job per block), so building the DataFrame
@@ -1412,9 +1397,7 @@ def connected_components(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .dropna()
-        .distinct(),
-        reliable,
-        eager=True,
+        .distinct()
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -1431,9 +1414,7 @@ def connected_components(
             labels.observe(
                 obs,
                 F.count(F.when(F.col("comp") < F.col("old_comp"), 1)).alias("n"),
-            ),
-            reliable,
-            eager=True,
+            )
         )
         if obs.get["n"] == 0:
             return labels.select("node", "comp")
@@ -1857,7 +1838,6 @@ def dedup_against(
     bands: int = 16,
     shingle_n: int = 3,
     duplicate_collapse: str = "auto",
-    reliable: bool = False,
 ) -> DataFrame:
     """Cross-corpus dedup: drop ``new_df`` docs that duplicate ANY
     ``ref_df`` doc — the incremental-ingest shape (dedup a fresh crawl
@@ -1915,8 +1895,8 @@ def dedup_against(
         duplicate_collapse,
         beta=AGAINST_COLLAPSE_BETA,
     ):
-        new_in, members = _rep_groups(new_df, text_col, id_col, reliable)
-        ref_in, _ = _rep_groups(ref_df, text_col, id_col, reliable)
+        new_in, members = _rep_groups(new_df, text_col, id_col)
+        ref_in, _ = _rep_groups(ref_df, text_col, id_col)
 
     sig_udf = minhash_text_udf(num_hashes, shingle_n)
     tagged = new_in.select(
@@ -1962,8 +1942,7 @@ def dedup_against(
     cands = iter_checkpoint(
         buckets.select(F.explode(pairs).alias("p"))
         .select("p.id_new", "p.id_ref")
-        .distinct(),
-        reliable,
+        .distinct()
     )
     # exact verify: shingle only candidate docs, per side
     def _shingles(side_df, ids, alias):
@@ -2075,7 +2054,7 @@ def duplicate_substring_spans(
     # twice (plan-audited: two Generate nodes over the corpus scan).
     # Materialize once — the same recipe as the jaccard posting table
     # and the BM25 inverted index.
-    ex = iter_checkpoint(_token_kgrams(df, text_col, id_col, k), False)
+    ex = iter_checkpoint(_token_kgrams(df, text_col, id_col, k))
     if scope == "cross":
         # "gram appears in >= 2 DISTINCT docs" == min(id) != max(id):
         # count_distinct plans as TWO aggregation exchanges (a (h, id)

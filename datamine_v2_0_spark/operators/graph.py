@@ -19,7 +19,7 @@ compound across iterations, so a hash-matched oracle holds.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
 
@@ -131,7 +131,6 @@ def pagerank(
     damping: float = 0.85,
     quantize_dp: int = 9,
     round_to: int = 6,
-    reliable: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list: (node, rank).
 
@@ -146,17 +145,13 @@ def pagerank(
     floor-quantized so the result is bit-reproducible across engines.
     The edge+degree table materializes once; iterations reuse it.
 
-    Lineage truncation uses ``localCheckpoint`` by default (fast, but
-    unreplicated executor blocks — an executor loss mid-job fails the
-    job loudly and needs a re-run); pass ``reliable=True`` for durable
-    ``checkpoint``-based truncation that survives executor loss
-    (requires ``setCheckpointDir``; see operators/ckpt).
+    Lineage cuts are durable exactly when the session has a checkpoint
+    directory (see operators/ckpt).
 
-    NOT LAZY: construction runs Spark jobs (the edge materialization
-    and a bounded ``nodes.count()`` for the 1/n seed — one driver-side
-    scalar replacing a per-iteration broadcast crossJoin), so building
-    the DataFrame without executing it still pays the edge-derivation
-    cost, and re-building the plan pays it again. Build once, reuse the
+    NOT LAZY: construction runs Spark jobs (the edge, node and degree
+    cuts, and one cut per ``_CKPT_EVERY`` iterations), so building the
+    DataFrame without executing it still pays the edge-derivation cost,
+    and re-building the plan pays it again. Build once, reuse the
     returned DataFrame.
     """
     if n_iter < 1:
@@ -165,8 +160,7 @@ def pagerank(
     # all derive from it, and the caller's edge derivation may itself be
     # a join (e.g. the co-purchase self-join) that must not run 3x
     e = iter_checkpoint(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
-        reliable,
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -175,15 +169,14 @@ def pagerank(
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     ed = e.join(deg, "src")
-    nodes = iter_checkpoint(nodes, reliable)
-    ed = iter_checkpoint(ed, reliable)
-
-    # n is ONE bounded driver scalar (count of the checkpointed node
-    # table — the same class of 1-row collect the probe family is
-    # allowlisted for). As a literal it replaces a per-iteration
+    # n is ONE driver scalar, counted by the node cut's own job
+    # (``observe``). As a literal it replaces a per-iteration
     # crossJoin(broadcast(agg)) subtree: one fewer broadcast exchange
     # and aggregate per iteration, identical double arithmetic.
-    n = float(nodes.count())
+    obs = Observation()
+    nodes = iter_checkpoint(nodes.observe(obs, F.count(F.lit(1)).alias("n")))
+    ed = iter_checkpoint(ed)
+    n = float(obs.get["n"])
     if n == 0.0:
         # empty edge list → no nodes: return the empty (node, rank)
         # frame directly (the literal 1/n below would divide by zero
@@ -225,5 +218,5 @@ def pagerank(
         # The last iteration never checkpoints (the caller's action
         # materializes it).
         if (i + 1) % _CKPT_EVERY == 0 and i + 1 < n_iter:
-            ranks = iter_checkpoint(ranks, reliable)
+            ranks = iter_checkpoint(ranks)
     return ranks.select("node", F.round("rank", round_to).alias("rank"))

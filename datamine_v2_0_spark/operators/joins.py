@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
+
 
 def equi_join(
     left: DataFrame, right: DataFrame, on: str | Sequence[str], how: str = "inner",
@@ -407,9 +409,9 @@ def fraction_of_total(
     stage parallel."""
     # two consumers (total fold + join side): materialize the grouped
     # counts once — one corpus scan, not two
-    counts = df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)
+    counts = iter_checkpoint(
+        df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+    )
     total = counts.agg(F.sum("n").alias("__total"))
     return counts.crossJoin(F.broadcast(total)).select(
         *keys,

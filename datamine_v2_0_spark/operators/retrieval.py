@@ -45,6 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
 from datamine_v2_0_spark.operators.dedup import normalize_text
 
 
@@ -170,21 +171,15 @@ def _bm25_direct(
     # across those branches (different downstream groupings), so without
     # materialization the corpus scan+tokenize+TF shuffle runs 4x (plan-
     # audited: 5 scans, 0 ReusedExchange). Build the index ONCE.
-    tf = (
-        tok.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+    tf = iter_checkpoint(
+        tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     # doc length = sum of term frequencies; re-agg of tf, not a new scan.
     # Materialized because BOTH the corpus stats and the scoring join
     # consume it — unmaterialized, each consumer re-aggregates the full
     # posting table (plan-audited: two O(postings) passes for one
     # O(docs) relation).
-    dl = (
-        tf.groupBy(id_col)
-        .agg(F.sum("tf").alias("dl"))
-        .localCheckpoint(eager=False)
-    )
+    dl = iter_checkpoint(tf.groupBy(id_col).agg(F.sum("tf").alias("dl")))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.col("dl").cast("double")).alias("avgdl"),
@@ -264,10 +259,10 @@ def _bm25_collapsed(
     # the fingerprint map is NARROW (id, 64-char hash) — text itself never
     # shuffles; checkpointed because both the group table and the final
     # fan-out consume it
-    fpmap = (
-        _spread(docs)
-        .select(F.col(id_col), content_hash(F.col(text_col)).alias("__fp"))
-        .localCheckpoint(eager=False)
+    fpmap = iter_checkpoint(
+        _spread(docs).select(
+            F.col(id_col), content_hash(F.col(text_col)).alias("__fp")
+        )
     )
     # one group row per distinct text: representative = min member id,
     # cnt = multiplicity (map-side combinable agg of two tiny columns)
@@ -282,22 +277,20 @@ def _bm25_collapsed(
     # rationale as the direct path).
     tok = _tokens(_spread(docs), text_col, id_col, "term")
     tf_all = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = (
+    tf = iter_checkpoint(
         tf_all.join(
             groups.select(F.col("__rep_id").alias(id_col), "__fp", "cnt"),
             id_col,
-        )
-        .select("__fp", "term", "tf", "cnt")
-        .localCheckpoint(eager=False)
+        ).select("__fp", "term", "tf", "cnt")
     )
     # corpus stats weight each representative by its multiplicity so
     # n_docs / avgdl / df still describe the FULL corpus. dl is
     # materialized for the same reason as the direct path: stats and
     # the scoring join both consume it.
-    dl = (
-        tf.groupBy("__fp")
-        .agg(F.sum("tf").alias("dl"), F.first("cnt").alias("cnt"))
-        .localCheckpoint(eager=False)
+    dl = iter_checkpoint(
+        tf.groupBy("__fp").agg(
+            F.sum("tf").alias("dl"), F.first("cnt").alias("cnt")
+        )
     )
     stats = dl.agg(
         F.sum("cnt").alias("n_docs"),

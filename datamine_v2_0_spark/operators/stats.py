@@ -22,6 +22,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
+
 
 def grouped_linreg(
     df: DataFrame,
@@ -76,7 +78,6 @@ def _dist_prefix_sums(
     sum_cols: Sequence[str],
     include_current: bool,
     buckets: int,
-    reliable: bool = False,
 ) -> DataFrame:
     """Distributed prefix sums over an ordered relation — the scale-safe
     replacement for ``Window.orderBy(order_col)`` with no partitionBy
@@ -105,31 +106,19 @@ def _dist_prefix_sums(
     ``quantile_bins_exact``, see its ``check_unique`` flag.
 
     Emits ``__cum_<col>`` for every ``sum_cols`` entry (inclusive or
-    exclusive of the current row per ``include_current``). Two lazy
-    checkpoints: the input relation (the range exchange's boundary-
-    sampling job would otherwise recompute the upstream aggregate — one
-    corpus scan, not two) and the bucketed relation (so both consumers,
-    cumulatives + bucket totals, see one consistent
-    ``spark_partition_id`` assignment).
-
-    Fault-tolerance caveat: ``localCheckpoint`` stores blocks
-    UNREPLICATED on executors, so losing an executor mid-job
-    (preemption, dynamic-allocation downscale) makes the job fail
-    loudly and need a re-run — it never returns wrong results. For
-    long-running cluster jobs where that retry cost matters, set
-    ``reliable=True`` to persist through ``spark.sparkContext
-    .setCheckpointDir``-backed reliable checkpoints instead (requires a
-    checkpoint dir on durable storage; slower, survives executor
-    loss)."""
-    if reliable:
-        rel = rel.checkpoint(eager=True)
-    else:
-        rel = rel.localCheckpoint(eager=False)
-    pv = (
+    exclusive of the current row per ``include_current``). Two lineage
+    cuts (:func:`~datamine_v2_0_spark.operators.ckpt.iter_checkpoint`,
+    eager, durable when the session has a checkpoint directory): the
+    input relation (the range exchange's boundary-sampling job would
+    otherwise recompute the upstream aggregate — one corpus scan, not
+    two) and the bucketed relation (so both consumers, cumulatives +
+    bucket totals, see one consistent ``spark_partition_id``
+    assignment)."""
+    rel = iter_checkpoint(rel)
+    pv = iter_checkpoint(
         rel.repartitionByRange(buckets, F.col(order_col))
         .withColumn("__bkt", F.spark_partition_id())
     )
-    pv = pv.checkpoint(eager=True) if reliable else pv.localCheckpoint(eager=False)
     end = 0 if include_current else -1
     w_in = (
         Window.partitionBy("__bkt")
@@ -340,9 +329,11 @@ def chi_square_independence(
     ).select(F.col(col_a).alias("__a"), F.col(col_b).alias("__b"))
     # three consumers (grid axes + observed left join): materialize the
     # tiny observed-cell relation once
-    observed = sub.groupBy("__a", "__b").agg(
-        F.count(F.lit(1)).cast("double").alias("__o")
-    ).localCheckpoint(eager=False)
+    observed = iter_checkpoint(
+        sub.groupBy("__a", "__b").agg(
+            F.count(F.lit(1)).cast("double").alias("__o")
+        )
+    )
     grid = (
         observed.select("__a")
         .distinct()
@@ -408,9 +399,11 @@ def cohens_kappa(
     )
     # three consumers (agreement fold + both marginals) — materialize
     # the tiny cell relation once so the corpus is scanned once
-    cells = sub.groupBy("__a", "__b").agg(
-        F.count(F.lit(1)).cast("double").alias("__o")
-    ).localCheckpoint(eager=False)
+    cells = iter_checkpoint(
+        sub.groupBy("__a", "__b").agg(
+            F.count(F.lit(1)).cast("double").alias("__o")
+        )
+    )
     stats = cells.agg(
         F.sum("__o").alias("__n"),
         F.sum(F.when(F.col("__a") == F.col("__b"), F.col("__o"))).alias(

@@ -14,6 +14,7 @@ from typing import Sequence
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
 from datamine_v2_0_spark.operators.dedup import normalize_text
 
 # Minimal high-frequency stopword profiles. Scoring = count of profile-word
@@ -376,10 +377,8 @@ def tfidf_top_terms(
     # and Catalyst gives the two branches no exchange reuse (different
     # downstream groupings; plan-audited: the corpus scan+tokenize ran
     # twice) — materialize the inverted index once, the BM25 recipe.
-    tf = (
-        tokens.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+    tf = iter_checkpoint(
+        tokens.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     total = df.select(F.countDistinct(id_col).alias("n_docs"))
@@ -818,7 +817,10 @@ def bigram_logprob(
     base = df.select(F.col(id_col), words.alias("__w")).filter(
         F.size(F.col("__w")) >= 2
     )
-    bg = (
+    # consumed by BOTH the six-window pass and the (N, V) totals —
+    # materialize the aggregated bigram table once (no exchange reuse
+    # across the branches; same recipe as the BM25/tfidf index)
+    bg = iter_checkpoint(
         base.select(
             F.col(id_col),
             F.explode(
@@ -835,10 +837,6 @@ def bigram_logprob(
         )
         .groupBy(id_col, "__w1", "__w2")
         .agg(F.count(F.lit(1)).cast("double").alias("__n"))
-        # consumed by BOTH the six-window pass and the (N, V) totals —
-        # materialize the aggregated bigram table once (no exchange
-        # reuse across the branches; same recipe as the BM25/tfidf index)
-        .localCheckpoint(eager=False)
     )
 
     def wsum(*cols: str):

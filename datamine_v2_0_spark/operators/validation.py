@@ -17,6 +17,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
 from datamine_v2_0_spark.operators.joins import asof_nearest_join, overlap_join
 
 
@@ -158,12 +159,14 @@ def candidate_clustering(
     candidate, and the hit rate. Interval join per key — broadcast the
     windows side when small; candidates never collect."""
     near = F.expr(f"INTERVAL {int(near_seconds)} SECONDS")
-    tw = truth_windows.select(
-        F.monotonically_increasing_id().alias("__wid"),
-        *[F.col(c).alias(f"__k_{i}") for i, (_, c) in enumerate(keys)],
-        F.col(win_start).alias("__ws"),
-        F.col(win_end).alias("__we"),
-    ).localCheckpoint(eager=False)  # __wid must be stable across reuse
+    tw = iter_checkpoint(  # __wid must be stable across reuse
+        truth_windows.select(
+            F.monotonically_increasing_id().alias("__wid"),
+            *[F.col(c).alias(f"__k_{i}") for i, (_, c) in enumerate(keys)],
+            F.col(win_start).alias("__ws"),
+            F.col(win_end).alias("__we"),
+        )
+    )
     cond = None
     for i, (cand_col, _) in enumerate(keys):
         c = candidates[cand_col] == tw[f"__k_{i}"]

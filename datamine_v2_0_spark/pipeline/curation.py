@@ -27,7 +27,7 @@ canonical-match their exchanges after per-branch column pruning — so
 with ``barrier=None`` the scan+gate+dedup prefix executes twice. At
 test scale that is two cheap scans; on a 100 TB run pass
 ``barrier='checkpoint'`` (or ``'table'`` with a staging path) and the
-deduped survivors materialize once.
+deduped survivors materialize once, while the DataFrame is built.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from datamine_v2_0_spark.operators import dedup as dd
 from datamine_v2_0_spark.operators import text as tx
+from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
 
 
 def curate_corpus(
@@ -58,8 +59,10 @@ def curate_corpus(
 
     - ``None`` (default): fully lazy — the prefix runs twice; fine when
       the gated scan is cheap relative to the shuffles.
-    - ``'checkpoint'``: lazy ``localCheckpoint`` — materializes on first
-      use to executor-local storage and every later branch reads the
+    - ``'checkpoint'``: a lineage cut (``ckpt.iter_checkpoint``) —
+      materializes the prefix once while the DataFrame is built, to
+      executor-local storage (or durably, when the session has a
+      checkpoint directory), and every later branch reads the
       checkpoint, not the lineage. The right default on a live cluster.
     - ``'table'``: write the deduped survivors to ``staging_path`` as
       parquet and re-read — the durable form for multi-job pipelines
@@ -80,7 +83,7 @@ def curate_corpus(
 
     deduped = dd.exact_dedup(gated, text_col, id_col)
     if barrier == "checkpoint":
-        deduped = deduped.localCheckpoint(eager=False)
+        deduped = iter_checkpoint(deduped)
     elif barrier == "table":
         deduped.write.mode("overwrite").parquet(staging_path)
         deduped = deduped.sparkSession.read.parquet(staging_path)

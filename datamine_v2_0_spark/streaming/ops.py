@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
+
 
 def streaming_tumbling_agg(
     stream: DataFrame,
@@ -121,7 +123,7 @@ def foreach_batch_upsert(
             )
         # break lineage from the files about to be overwritten —
         # executor-side materialization, never a driver collect
-        merged = merged.localCheckpoint(eager=True)
+        merged = iter_checkpoint(merged)
         # stage-then-swap, NOT a direct overwrite: overwrite deletes the
         # target before writing, so a crash in between makes the next
         # retry's existence check read "first batch" and silently rebuild

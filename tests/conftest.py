@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import sys
 from pathlib import Path
 
@@ -27,3 +28,24 @@ def spark(tmp_path_factory):
         extra_conf={"spark.sql.warehouse.dir": str(warehouse)},
     )
     yield spark
+
+
+@pytest.fixture
+def durable_checkpoints(spark, tmp_path):
+    """Context manager giving the shared session a checkpoint directory,
+    so every lineage cut made inside it is durable
+    (operators/ckpt.iter_checkpoint); on exit the previous setting
+    returns and later cuts are local again. Yields the directory."""
+
+    @contextlib.contextmanager
+    def durable():
+        sc = spark.sparkContext
+        prev = sc.getCheckpointDir()
+        path = tmp_path / "ckpt"
+        sc.setCheckpointDir(str(path))
+        try:
+            yield path
+        finally:
+            sc.setCheckpointDir(prev)
+
+    return durable

@@ -416,23 +416,24 @@ def test_ks_empty_group_null_not_ansi_error(spark):
     assert r.p_approx is None
 
 
-def test_dist_prefix_sums_reliable_checkpoint(spark, tmp_path):
-    """The reliable=True fault-tolerance path (round-6 advice: lazy
-    localCheckpoint blocks are unreplicated, executor loss kills the
-    job) must produce identical cumulatives through a durable
-    checkpoint dir."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_dist_prefix_sums_reliable_checkpoint(spark, durable_checkpoints):
+    """The durable fault-tolerance path (round-6 advice: localCheckpoint
+    blocks are unreplicated, executor loss kills the job) must produce
+    identical cumulatives through the session's checkpoint dir."""
     rows = [(float(i), i % 3 + 1) for i in range(50)]
     df = spark.createDataFrame(rows, "v double, c int")
-    base = stats._dist_prefix_sums(
-        df, "v", ["c"], include_current=True, buckets=4
-    )
-    rel = stats._dist_prefix_sums(
-        df, "v", ["c"], include_current=True, buckets=4, reliable=True
-    )
-    a = sorted((r["v"], r["__cum_c"]) for r in base.collect())
-    b = sorted((r["v"], r["__cum_c"]) for r in rel.collect())
+
+    def run():
+        out = stats._dist_prefix_sums(
+            df, "v", ["c"], include_current=True, buckets=4
+        )
+        return sorted((r["v"], r["__cum_c"]) for r in out.collect())
+
+    a = run()
+    with durable_checkpoints() as ckpt:
+        b = run()
     assert a == b
+    assert any(ckpt.rglob("*")), "no durable checkpoint was written"
 
 
 def test_mann_whitney_single_value_null_z_not_error(spark):
