@@ -5,16 +5,16 @@ and ``pd.qcut`` (quantile bins) for EDA feature bucketing
 (``STEP 3 - EDA Analysis/database_pipeline.py:386-393,431-436,454-459,520-522``).
 
 Scale notes: fixed-width/explicit-edge binning is pure arithmetic (codegen,
-map-only). Exact quantile binning needs a total order (NTILE) — fine for
-reports, hostile at 100 TB; the approx variant computes boundaries once
-via sketch and bins map-side, which is the scale default.
+map-only). Exact quantile binning needs a total order (NTILE), which
+``quantile_bins_exact`` computes from distributed prefix sums rather than
+one global sort.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -125,34 +125,3 @@ def quantile_bins_exact(
         .withColumn(out, (bucket - 1).cast("int"))
         .drop("__ord", "__one", "__cum___one", "__n")
     )
-
-
-def quantile_bins_approx(
-    df: DataFrame, col: str, nbins: int, out: str, accuracy: int = 10000
-) -> DataFrame:
-    """Scale path: one sketch pass for the boundaries, then map-side
-    explicit binning (values at a boundary go to the lower bin, qcut-ish)."""
-    if nbins < 1:
-        raise ValueError("nbins must be >= 1")
-    if nbins == 1:
-        return df.withColumn(
-            out,
-            F.when(F.col(col).isNotNull(), F.lit(0)).cast("int"),
-        )
-    probs = [i / nbins for i in range(1, nbins)]
-    edges = df.select(
-        F.percentile_approx(col, probs, accuracy).alias("e")
-    ).first()["e"]
-    if edges is None:
-        # empty / all-NULL input: no boundaries — every non-null value
-        # (there are none) would be bin 0; keep the NULL-in/NULL-out rule
-        return df.withColumn(
-            out, F.when(F.col(col).isNotNull(), F.lit(0)).cast("int")
-        )
-    expr = F.lit(0)
-    for i, e in enumerate(edges):
-        expr = F.when(F.col(col) > F.lit(float(e)), F.lit(i + 1)).otherwise(expr)
-    # NULL in -> NULL out (the fold base would otherwise conflate NULLs
-    # with real lowest-quantile rows; fixed_width/explicit both NULL)
-    expr = F.when(F.col(col).isNotNull(), expr)
-    return df.withColumn(out, expr.cast("int"))

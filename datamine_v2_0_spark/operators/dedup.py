@@ -81,7 +81,7 @@ def word_shingles_from_words(words: Column, n: int = 3) -> Column:
     column: sliding windows via transform(sequence(...)).
 
     ``words`` MUST be a projected column (same contract as
-    :func:`hashed_shingles_from_words` / :func:`minhash_signature`):
+    :func:`hashed_shingles_from_words`):
     the transform lambda references ``words`` per gram index, and an
     inline expression there re-evaluates its whole subtree — for the
     normalize+split pipeline that measured ~28 ms/doc (one regexp +
@@ -103,18 +103,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     project the words array first and call
     :func:`word_shingles_from_words` on the column."""
     return word_shingles_from_words(F.split(normalize_text(col), " "), n)
-
-
-def _rehash(i: int):
-    # i-th MinHash function: xxhash64 of (base_hash, i) — fixed-width
-    # native hashing of an 8-byte value, no per-function pass over the
-    # text, and no long arithmetic (ANSI mode throws on wraparound).
-    return lambda h: F.xxhash64(h, F.lit(i))
-
-
-def shingle_hashes(shingles: Column) -> Column:
-    """Base 64-bit hash per distinct shingle (computed once per doc)."""
-    return F.transform(shingles, lambda s: F.xxhash64(s))
 
 
 def word_hashes(col: Column) -> Column:
@@ -139,23 +127,6 @@ def hashed_shingles_from_words(wh: Column, n: int = 3) -> Column:
         idx, lambda i: F.xxhash64(*[F.get(wh, i + j) for j in range(n)])
     )
     return F.array_distinct(grams)
-
-
-def minhash_signature(hashes: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature from precomputed shingle hashes: per hash function
-    i, min over shingles of ``xxhash64(h, i)``. Empty sets → nulls.
-
-    Callers MUST materialize ``hashes`` as its own projected column first
-    (e.g. ``.select(..., shingle_hashes(...).alias("__h"))``): referencing
-    an inline expression here would duplicate the whole shingle pipeline
-    into each of the num_hashes branches (Catalyst's CollapseProject keeps
-    a multiply-referenced non-cheap alias materialized, so the two-step
-    select is what makes this single-pass)."""
-    sigs = [
-        F.array_min(F.transform(hashes, _rehash(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
 
 
 def minhash_text_udf(num_hashes: int = 64, shingle_n: int = 3):
@@ -1463,59 +1434,21 @@ def canonical_ids(groups: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return groups.filter(F.col("group_id") == F.col(id_col)).select(id_col)
 
 
-def portable_shingle_hash(s: Column) -> Column:
-    """60-bit shingle hash any ANSI-SQL engine can reproduce bit-for-bit:
-    the first 15 hex chars of md5, parsed base 16 (fits a signed 64-bit
-    int, so no ANSI overflow on either side). The xxhash64 path is faster
-    and preferred at scale; this one exists so SimHash outputs are
-    oracle-checkable against an independent SQL engine."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+# SimHash signature width: the md5-60 shingle family (15 hex chars)
+SIMHASH_BITS = 60
 
 
-def simhash_from_hashes(hashes: Column, n_bits: int = 64) -> Column:
-    """SimHash over the low ``n_bits`` of a precomputed array<long> of
-    shingle hashes, fully JVM-side: per bit position, sum sign
-    contributions and take the majority sign. Expressed with aggregate()
-    — no Python UDF. Empty/NULL hash arrays yield signature 0.
-
-    Project the hash array into its own column first so the shingle
-    transform is evaluated once, not n_bits times."""
-    def _bit_vote(bit: int):
-        # closure factory, not a default-arg lambda (arity matters — see
-        # _salted_hash): aggregate's merge fn must be exactly 2-arg
-        def merge(acc, h):
-            set_bit = F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1
-            return acc + F.when(set_bit, 1).otherwise(-1)
-
-        return merge
-
-    bits = []
-    for bit in range(n_bits):
-        # +1 if bit set else -1, summed across shingles
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), _bit_vote(bit))
-        bits.append(F.when(vote > 0, F.lit(1).cast("long")).otherwise(F.lit(0)))
-    expr = F.lit(0).cast("long")
-    for bit, bcol in enumerate(bits):
-        expr = expr + F.shiftleft(bcol, bit)
-    return expr
-
-
-def simhash_text_udf(shingle_n: int = 2, portable: bool = False):
+def simhash_text_udf(shingle_n: int = 2):
     """Fused text→SimHash pandas UDF: normalize, shingle, hash, and the
-    full n_bits bit-vote inside one Arrow batch.
+    full 60-bit vote inside one Arrow batch — one (shingles × bits)
+    numpy matrix op per doc instead of one interpreted ``aggregate()``
+    fold per bit (measured ~15 s for 5k docs at sf0.1 in the fold form).
 
-    The Column-algebra form (:func:`simhash_from_hashes`) folds the hash
-    array once PER BIT — 60-64 interpreted ``aggregate()`` passes per
-    doc, measured ~15 s for 5k docs at sf0.1 — where numpy does the
-    whole vote as one (shingles × bits) matrix op. Same recipe as
-    :func:`minhash_text_udf`.
-
-    ``portable=True`` reproduces :func:`portable_shingle_hash`
-    bit-for-bit (first 15 md5 hex chars, base 16 — the oracle-checkable
-    family); the default uses the kernel's own deterministic crc32/
-    splitmix shingle family (fast scale path — families are not
-    comparable to each other). Docs too short to shingle return NULL;
-    callers decide whether that means "drop" or "signature 0".
+    The shingle hash is the first 15 hex chars of md5, base 16 (60 bits,
+    always non-negative), so any ANSI-SQL engine reproduces the
+    signature bit-for-bit and the SimHash queries are oracle-checked.
+    Docs too short to shingle return NULL; callers decide whether that
+    means "drop" or "signature 0".
 
     Like :func:`minhash_text_udf`, the returned UDF is marked
     ``asNondeterministic()`` to pin one evaluation per row (the kernel
@@ -1523,18 +1456,8 @@ def simhash_text_udf(shingle_n: int = 2, portable: bool = False):
     join condition or grouping key (Spark restricts nondeterministic
     expressions to Project/Filter/Aggregate/Window)."""
     import hashlib
-    import zlib
 
-    n_bits = 60 if portable else 64
-    C2 = np.uint64(0xBF58476D1CE4E5B9)
-    C3 = np.uint64(0x94D049BB133111EB)
-    wmul = (C2 * np.arange(1, shingle_n + 1, dtype=np.uint64)) | np.uint64(1)
-    bit_idx = np.arange(n_bits, dtype=np.uint64)
-
-    def _mix(z: np.ndarray) -> np.ndarray:
-        z = (z ^ (z >> np.uint64(30))) * C2
-        z = (z ^ (z >> np.uint64(27))) * C3
-        return z ^ (z >> np.uint64(31))
+    bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
     @pandas_udf("long")
     def _sig(texts: pd.Series) -> pd.Series:
@@ -1545,38 +1468,25 @@ def simhash_text_udf(shingle_n: int = 2, portable: bool = False):
             .str.strip()
         )
         out = []
-        with np.errstate(over="ignore"):
-            for doc in norm:
-                words = doc.split(" ") if doc else []
-                if len(words) < shingle_n:
-                    out.append(None)
-                    continue
-                if portable:
-                    grams = {
-                        " ".join(words[i : i + shingle_n])
-                        for i in range(len(words) - shingle_n + 1)
-                    }
-                    h = np.array(
-                        [
-                            int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                            for g in grams
-                        ],
-                        dtype=np.uint64,
-                    )
-                else:
-                    wh = np.array(
-                        [zlib.crc32(w.encode("utf-8")) for w in words],
-                        dtype=np.uint64,
-                    )
-                    k = len(wh) - shingle_n + 1
-                    g = np.zeros(k, dtype=np.uint64)
-                    for j in range(shingle_n):
-                        g += wh[j : j + k] * wmul[j]
-                    h = np.unique(_mix(g))
-                bits = (h[:, None] >> bit_idx) & np.uint64(1)
-                votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-                sig = int(((votes > 0).astype(np.uint64) << bit_idx).sum())
-                out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
+        for doc in norm:
+            words = doc.split(" ") if doc else []
+            if len(words) < shingle_n:
+                out.append(None)
+                continue
+            grams = {
+                " ".join(words[i : i + shingle_n])
+                for i in range(len(words) - shingle_n + 1)
+            }
+            h = np.array(
+                [
+                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
+                    for g in grams
+                ],
+                dtype=np.uint64,
+            )
+            bits = (h[:, None] >> bit_idx) & np.uint64(1)
+            votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
+            out.append(int(((votes > 0).astype(np.uint64) << bit_idx).sum()))
         return pd.Series(out, dtype="object")
 
     # same single-evaluation pin as minhash_text_udf: drop_empty filters
@@ -1591,7 +1501,6 @@ def simhash_candidates(
     id_col: str,
     max_hamming: int = 3,
     shingle_n: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs: band the signature into
     ``max_hamming + 1`` block keys; by pigeonhole, any pair within
@@ -1600,28 +1509,23 @@ def simhash_candidates(
     come from an equi join on (block index, block value), never
     all-pairs — then an exact ``bit_count(xor)`` verify. Fully JVM-side.
 
-    ``portable=True`` uses the SQL-reproducible 60-bit md5 signature
-    family (see :func:`simhash_signatures`) so the pair output is
-    oracle-checkable; default is the faster 64-bit xxhash64 family.
-
     Returns (id_a, id_b, hamming) with id_a < id_b."""
-    n_bits = 60 if portable else 64
     n_blocks = max_hamming + 1
-    if not 1 <= n_blocks <= n_bits:
-        raise ValueError(f"max_hamming must be in [0, {n_bits - 1}]")
-    width = n_bits // n_blocks
+    if not 1 <= n_blocks <= SIMHASH_BITS:
+        raise ValueError(f"max_hamming must be in [0, {SIMHASH_BITS - 1}]")
+    width = SIMHASH_BITS // n_blocks
     # drop docs too short to shingle: their empty hash set gives simhash 0,
     # and left in they'd all join into one hamming-0 clique — the same
     # quadratic tiny-doc blowup the MinHash path filters above
     sigs = simhash_signatures(
-        df, text_col, id_col, shingle_n, drop_empty=True, portable=portable
+        df, text_col, id_col, shingle_n, drop_empty=True
     )
 
     def _block(i: int) -> Column:
         # block i covers bits [i*width, ...); the last block takes the
-        # remaining high bits so all n_bits are covered
+        # remaining high bits so all SIMHASH_BITS are covered
         shift = i * width
-        w = n_bits - shift if i == n_blocks - 1 else width
+        w = SIMHASH_BITS - shift if i == n_blocks - 1 else width
         if n_blocks == 1:  # single block = the whole signature
             return F.col("simhash")
         # mask also clears the sign-extension bits of the arithmetic shift
@@ -1686,7 +1590,6 @@ def simhash_signatures(
     id_col: str,
     shingle_n: int = 2,
     drop_empty: bool = False,
-    portable: bool = False,
 ) -> DataFrame:
     """(id, simhash) table; near-dups = signatures within small Hamming
     distance, found by banding the bits into max_hamming+1 block keys
@@ -1696,16 +1599,11 @@ def simhash_signatures(
     shingle_n words) — they all share simhash 0 and have no meaningful
     similarity to anything.
 
-    ``portable=True`` uses the md5-based 60-bit
-    :func:`portable_shingle_hash` family over string shingles, making
-    the whole signature reproducible in any ANSI-SQL engine (the oracle
-    path); the default is the kernel's fast deterministic crc32/splitmix
-    family. Signatures from the two families are not comparable to each
-    other. Both run through the fused Arrow kernel
-    (:func:`simhash_text_udf`) — one vectorized vote instead of one
-    interpreted fold per bit."""
+    Signatures come from the fused Arrow kernel
+    (:func:`simhash_text_udf`): 60-bit md5 shingle hashes, reproducible
+    bit-for-bit in any ANSI-SQL engine."""
     df = _spread(df)
-    sig = simhash_text_udf(shingle_n, portable)
+    sig = simhash_text_udf(shingle_n)
     out = df.select(F.col(id_col), sig(F.col(text_col)).alias("__sig"))
     if drop_empty:
         out = out.filter(F.col("__sig").isNotNull())
@@ -1774,56 +1672,6 @@ def remove_common_units(
         (F.col("__n_units") - F.coalesce("__n_kept", F.lit(0)))
         .cast("long")
         .alias("n_removed"),
-    )
-
-
-def dedup_paragraph_occurrences(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    sep: str = r"\n\n",
-    joiner: str = "\n\n",
-) -> DataFrame:
-    """Corpus-wide keep-first paragraph dedup (the RefinedWeb/CCNet
-    boilerplate scrub at occurrence granularity): every repeated
-    paragraph keeps ONLY its first occurrence in (doc, position) order;
-    later copies are cut out of their documents and the documents are
-    reassembled in original paragraph order. Complements
-    `remove_common_units`, which drops units by corpus FREQUENCY — this
-    one preserves a single canonical copy.
-
-    Plan shape at scale: posexplode → one exchange on the paragraph
-    content (window rank-1; group sizes = duplication counts, AQE
-    handles boilerplate skew) → one exchange back on the doc id for
-    ordered reassembly. Two shuffles total, no joins, single
-    computation of the input. Whitespace-only paragraphs are dropped;
-    docs with no surviving paragraph are excluded.
-
-    Returns (id, text) with the cleaned text.
-    """
-    from pyspark.sql import Window
-
-    paras = F.split(F.col(text_col), sep)
-    exploded = df.select(
-        F.col(id_col), F.posexplode(paras).alias("__pos", "__para")
-    ).filter(F.trim("__para") != "")
-    w = Window.partitionBy("__para").orderBy(F.col(id_col).asc(), F.col("__pos").asc())
-    kept = exploded.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") == 1
-    )
-    return (
-        kept.groupBy(id_col)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("__pos", "__para"))
-                    ),
-                    lambda s: s["__para"],
-                ),
-                joiner,
-            ).alias(text_col)
-        )
     )
 
 

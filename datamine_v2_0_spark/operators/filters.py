@@ -71,12 +71,6 @@ def deterministic_sample(df: DataFrame, key: str, modulus: int, keep: int = 0) -
     return df.filter(F.pmod(F.col(key), F.lit(modulus)) == keep)
 
 
-def random_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """P10: Bernoulli sample — scan-level, no global sort (replaces
-    ``ORDER BY RANDOM() LIMIT n``, which is a full shuffle at scale)."""
-    return df.sample(fraction=fraction, seed=seed)
-
-
 def sample_to_token_budget(
     df: DataFrame,
     stratum_col: str,
@@ -318,7 +312,7 @@ def stratified_sample_exact_k(
     """Exactly min(k, n_s) rows per stratum, deterministically: rank
     rows inside each stratum by a seeded portable hash of their id and
     keep the k smallest. Unlike fraction sampling (`weighted_mix`,
-    `random_sample`) the per-stratum count is EXACT — the eval-set /
+    ``df.sample``) the per-stratum count is EXACT — the eval-set /
     demonstration-set construction where "about k" isn't acceptable.
 
     Stable under corpus growth in distribution (a new row displaces one

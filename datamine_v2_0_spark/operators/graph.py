@@ -36,13 +36,6 @@ def _q(c: Column, dp: int) -> Column:
     return F.floor(c * scale + F.lit(0.5)) / scale
 
 
-def out_degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """(node, out_deg) over a directed edge list — one hash aggregate."""
-    return edges.groupBy(F.col(src).alias("node")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-
-
 def co_purchase_edges(
     df: DataFrame,
     group_col: str,

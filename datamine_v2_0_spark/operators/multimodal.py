@@ -257,68 +257,6 @@ def extract_media_features(
     return df.mapInPandas(_extract, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("payload", ArrayType(DoubleType())),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame,
-    target_w: int,
-    target_h: int = 1,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    type_col: str = "media_type",
-) -> DataFrame:
-    """mapInPandas resize: decode → resample to (target_h, target_w) →
-    re-emit, the standard image-normalization stage before embedding.
-
-    The decode is the stub path (payload bytes as a 1-D gray signal) and
-    the resample is a real ``np.interp`` — with PIL/opencv present only
-    the decode line changes; the Spark plumbing (schema, Arrow batches,
-    blob-in/array-out) is the production shape. Output payload is the
-    resampled float array (what a model stage consumes), not re-encoded
-    bytes."""
-    n_out = target_w * target_h
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mtype, payload in zip(
-                pdf[id_col], pdf[type_col], pdf[payload_col]
-            ):
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
-                payload = payload or b""
-                arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-                if arr.size == 0:
-                    out = np.zeros(n_out)
-                else:
-                    xp = np.linspace(0.0, 1.0, arr.size)
-                    xq = np.linspace(0.0, 1.0, n_out)
-                    out = np.interp(xq, xp, arr)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "media_type": mtype,
-                        "payload": [round(float(v), 6) for v in out],
-                        "width": target_w,
-                        "height": target_h,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

@@ -205,25 +205,6 @@ def semantic_neardup_pairs(
     )
 
 
-def semantic_dedup_keep(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_clusters: int,
-    threshold: float,
-    n_iter: int = 0,
-) -> DataFrame:
-    """The SemDeDup drop rule: within every near-duplicate pair, drop the
-    higher id (keep the first-seen document). Returns the kept rows of
-    `df`. Anti join against the distinct id_b side of the pair table —
-    the same keep-lowest convention as `dedup.exact_dedup`."""
-    pairs = semantic_neardup_pairs(
-        df, vec_col, id_col, n_clusters, threshold, n_iter=n_iter
-    )
-    drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drops, id_col, "left_anti")
-
-
 def decontaminate_by_embedding(
     train: DataFrame,
     eval_df: DataFrame,

@@ -5,7 +5,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
@@ -30,11 +29,3 @@ def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """O2: top-k — Spark plans TakeOrderedAndProject (no global sort
     materialization), safe at any scale for small k."""
     return df.orderBy(*order).limit(k)
-
-
-def sort_within_partitions(df: DataFrame, partition_col: str, order_cols: Sequence[str]) -> DataFrame:
-    """O1 at scale: the reference's final ``ORDER BY device_id, timestamp``
-    materialization is replaced by repartition-by-key + in-partition sort —
-    a global sort of 100 TB is never the right plan (04_final_assembly.sql:28,
-    deviation documented in SURVEY.md §2.6)."""
-    return df.repartition(partition_col).sortWithinPartitions(*order_cols)

@@ -84,54 +84,6 @@ def vector_rep_groups(df: DataFrame, vec_col: str, id_col: str):
     return rep_corpus, members
 
 
-def ann_operating_point(
-    n_corpus: int,
-    *,
-    bands: int = 8,
-    target_bucket_rows: int = 16384,
-    target_cell_rows: int = 4096,
-) -> dict:
-    """Corpus-size-aware parameter shapes for the ANN tiers.
-
-    The round-13 scale finding (ANN_AT_SCALE_r13.json; ANN.md
-    "1.05M-vector execution") is that every tier's knobs must GROW with
-    the corpus or recall/latency silently degrades — the certified
-    small-scale defaults are fixture shapes, not production shapes.
-    This pure helper encodes the measured rules; it reduces to the
-    certified defaults at fixture sizes and to the measured good
-    operating points at 1.05M vectors:
-
-    - **LSH**: expected rows per band bucket is ``n / 2^(planes/bands)``,
-      so bits-per-band tracks ``log2(n / target_bucket_rows)``. At
-      1.05M the 3-bit fixture shape degenerates to ~131k-row buckets
-      (27-79 s per 21-query batch) while 6 bits answers in 4-12 s at
-      0.70-0.93 recall@10; at n=2,000 the rule returns the certified
-      24-plane/8-band shape.
-    - **PQ**: ``rerank_from = max(100, n // 1000)`` — the ADC
-      shortlist's noise floor grows with n (measured at 1.05M:
-      depth 100 reads 0.80 recall@10, 400 reads 0.92, 1000 reads 0.99).
-    - **IVF**: cells sized to ~``target_cell_rows`` rows
-      (``n_cells = clamp(n / 4096, 8, 4096)``); ``nprobe = n_cells/4``
-      read 0.90 recall@10 at the measured 1.05M point (64 of 256
-      cells); ``nprobe = n_cells`` stays the certified-exact point.
-
-    Callers pass ``n_corpus`` explicitly (a known table size or a cheap
-    ``count()``) — the helper runs no Spark job itself.
-    """
-    import math
-
-    n = max(1, int(n_corpus))
-    bits = 3
-    if n > target_bucket_rows:
-        bits = max(3, int(round(math.log2(n / target_bucket_rows))))
-    n_cells = int(min(4096, max(8, round(n / target_cell_rows))))
-    return {
-        "lsh": {"num_planes": bands * bits, "bands": bands, "probe": 1},
-        "pq": {"rerank_from": max(100, n // 1000)},
-        "ivf": {"n_cells": n_cells, "nprobe": max(1, n_cells // 4)},
-    }
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -325,10 +277,10 @@ def ivf_index(
     (one full pass to assign cells — the dominant term at 1M+ vectors,
     measured 10-100x the per-batch query cost in ANN_AT_SCALE_r13), so
     a pipeline that answers many query batches builds it ONCE —
-    ``save_ivf_index`` writes ``cells`` partitioned BY cell, after which
-    ``ivf_query`` over the loaded index scans only the probed cells'
-    partitions (Spark prunes cell directories via dynamic partition
-    pruning on the broadcast probe join). ``ivf_topk`` remains the
+    written partitioned BY cell, ``cells`` read back lets ``ivf_query``
+    scan only the probed cells' partitions (Spark prunes cell
+    directories via dynamic partition pruning on the broadcast probe
+    join). ``ivf_topk`` remains the
     one-shot composition ``ivf_query(*ivf_index(...), ...)`` and is
     unchanged result-wise.
 
@@ -450,7 +402,7 @@ def ivf_query(
 ) -> DataFrame:
     """QUERY phase of the IVF index: each query probes its ``nprobe``
     nearest centroids and scores only same-cell candidates. ``cells``
-    and ``centroids`` come from ``ivf_index`` (or ``load_ivf_index``);
+    and ``centroids`` come from ``ivf_index``;
     per-batch cost is ~``nprobe / n_cells`` of the corpus — independent
     of how many batches reuse the index, which is the whole point of
     the split (ANN_AT_SCALE_r13: the 1.05M-vector index builds+persists
@@ -460,7 +412,7 @@ def ivf_query(
 
     The probe join is an equi join on the cell id with the exploded
     query probes broadcast: at scale ``cells`` is stored partitioned by
-    cell (``save_ivf_index``), so the scan prunes to the probed cells'
+    cell, so the scan prunes to the probed cells'
     directories. ``nprobe >= n_cells`` probes every cell, which is
     provably exact (the cells partition the corpus)."""
     if len(centroids) == 0:
@@ -507,47 +459,6 @@ def ivf_query(
     )
 
 
-def save_ivf_index(
-    cells: DataFrame, centroids: np.ndarray, path: str, mode: str = "overwrite"
-) -> None:
-    """Persist an ``ivf_index`` result: ``cells`` partitioned BY cell
-    (so a later ``ivf_query`` scan prunes to the probed cells'
-    directories — the query-cost-independent-of-corpus-size layout) and
-    the centroid matrix as a tiny ``(cell, centroid)`` parquet.
-
-    The write repartitions by cell first: a partitionBy over the raw
-    assignment output writes (upstream tasks x cells) files — measured
-    8,192 files / ~39 KB each for the 317 MB, 256-cell index at 1.05M
-    vectors (ANN_AT_SCALE_r13), and at production scale
-    (thousands of tasks x thousands of cells) a small-files explosion
-    that throttles both the namenode and every later probe scan. One
-    hash shuffle on the cell id lands each cell in exactly one task →
-    exactly one file per cell."""
-    spark = cells.sparkSession
-    cells.repartition(F.col("cell")).write.mode(mode).partitionBy(
-        "cell"
-    ).parquet(f"{path}/cells")
-    cent = spark.createDataFrame(
-        [(i, [float(v) for v in row]) for i, row in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    )
-    cent.coalesce(1).write.mode(mode).parquet(f"{path}/centroids")
-
-
-def load_ivf_index(spark, path: str) -> tuple[DataFrame, np.ndarray]:
-    """Load a ``save_ivf_index`` layout back as ``(cells, centroids)``."""
-    cells = spark.read.parquet(f"{path}/cells")
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    if not rows:
-        width = 0
-    else:
-        width = len(rows[0]["centroid"])
-    C = np.array([r["centroid"] for r in rows], dtype=np.float64).reshape(
-        len(rows), width
-    )
-    return cells, C
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -571,7 +482,7 @@ def ivf_topk(
     (build: fit + full-corpus cell assignment) and ``ivf_query``
     (probe: broadcast equi join on the cell id, never all-pairs);
     pipelines that answer many query batches should call the two halves
-    directly and reuse (or ``save_ivf_index``) the index — at 1M+
+    directly and reuse (or persist) the index — at 1M+
     vectors the build is 10-100x the per-batch query cost.
 
     ``nprobe = n_cells`` probes every cell, which is provably exact
@@ -600,21 +511,6 @@ def ivf_topk(
         nprobe=nprobe,
         round_to=round_to,
     )
-
-
-def hyperplane_signature(
-    vec: Column, planes: np.ndarray
-) -> Column:
-    """Sign-bit LSH signature: one bit per hyperplane, packed into a long.
-    `planes` is (num_planes<=63, dim)."""
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(v)) for v in p])
-        bit = F.when(dot(vec, plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig + F.shiftleft(bit, i)
-    return sig
 
 
 def make_hyperplanes(dim: int, num_planes: int = 12, seed: int = 42) -> np.ndarray:

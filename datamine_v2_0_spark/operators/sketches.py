@@ -311,19 +311,15 @@ def merge_tdigests(
 # ---------------------------------------------------------------------------
 
 
-def _cms_cell(key_str: "F.Column", j: int, width: int, portable: bool):
+def _cms_cell(key_str: "F.Column", j: int, width: int):
     """Cell index of ``key`` in sketch row ``j``: hash(j ':' key) mod width.
 
-    ``portable=True`` uses the 60-bit md5-prefix family (first 15 hex
-    chars of md5, base 16 — always non-negative, so ``%`` and ``pmod``
-    agree), reproducible bit-for-bit in any ANSI SQL engine — the same
-    family that makes the portable SimHash oracle-checkable.
-    ``portable=False`` uses xxhash64 (faster; sign handled via pmod)."""
+    The hash is the 60-bit md5-prefix family (first 15 hex chars of md5,
+    base 16 — always non-negative, so ``%`` and ``pmod`` agree),
+    reproducible bit-for-bit in any ANSI SQL engine — the same family
+    that makes SimHash oracle-checkable."""
     salted = F.concat(F.lit(f"{j}:"), key_str)
-    if portable:
-        h = F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(salted)
+    h = F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("long")
     return F.pmod(h, F.lit(width)).cast("int")
 
 
@@ -333,7 +329,6 @@ def cms_sketch(
     depth: int = 3,
     width: int = 512,
     weight_col: str | None = None,
-    portable: bool = True,
 ) -> DataFrame:
     """Count-min sketch of ``key_col`` frequencies (optionally weighted):
     returns the full sketch table ``(row int, cell int, total long)`` with
@@ -354,8 +349,8 @@ def cms_sketch(
     and with prob >= 1 - exp(-depth) the overcount is <= e/width * N
     (N = total weight). Zero-count keys estimate 0 only if one of their
     cells is untouched; collisions are data-dependent but fully
-    deterministic given the seeded hash family, so the portable variant
-    is hash-checkable against an independent SQL engine AT production
+    deterministic given the seeded hash family, so the sketch is
+    hash-checkable against an independent SQL engine AT production
     width (collisions and all), not just at a collision-free operating
     point.
 
@@ -394,7 +389,7 @@ def cms_sketch(
     else:
         w = F.lit(1).cast("long")
         key_filter = F.col(key_col).isNotNull()
-    cells = F.array(*[_cms_cell(k, j, width, portable) for j in range(depth)])
+    cells = F.array(*[_cms_cell(k, j, width) for j in range(depth)])
     return (
         df.filter(key_filter)
         .select(F.posexplode(cells).alias("row", "cell"), w.alias("__w"))
@@ -404,8 +399,8 @@ def cms_sketch(
 
 
 def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum of two sketches built with the SAME (depth, width,
-    portable) parameters — the CMS merge is associative and lossless
+    """Cell-wise sum of two sketches built with the SAME (depth, width)
+    parameters — the CMS merge is associative and lossless
     (merge-then-estimate == estimate-on-union, exactly), so partition /
     day sketches roll up without rescanning raw data."""
     return (
@@ -421,7 +416,6 @@ def cms_estimate(
     key_col: str,
     depth: int = 3,
     width: int = 512,
-    portable: bool = True,
 ) -> DataFrame:
     """Point-estimate each key in ``keys`` against a sketch built by
     :func:`cms_sketch` with the same parameters: est = min over the
@@ -432,7 +426,7 @@ def cms_estimate(
     the sketch side and the keys side streams — estimation over any
     number of probe keys is a map-side join plus a depth-row min."""
     k = F.col(key_col).cast("string")
-    cells = F.array(*[_cms_cell(k, j, width, portable) for j in range(depth)])
+    cells = F.array(*[_cms_cell(k, j, width) for j in range(depth)])
     q = keys.filter(F.col(key_col).isNotNull()).select(
         key_col, F.posexplode(cells).alias("row", "cell")
     )

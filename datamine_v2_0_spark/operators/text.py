@@ -100,18 +100,6 @@ def quality_score(col: Column) -> Column:
     return F.round((length_term + sw_term + punct_pen) / 3.0, 6)
 
 
-def lang_scores(col: Column) -> list[Column]:
-    out = []
-    for lang, words in _LANG_PROFILES.items():
-        pattern = r"\b(" + "|".join(words) + r")\b"
-        out.append(
-            F.coalesce(F.regexp_count(F.lower(col), F.lit(pattern)), F.lit(0)).alias(
-                f"score_{lang}"
-            )
-        )
-    return out
-
-
 def lang_id(col: Column) -> Column:
     """Argmax language over the stopword profiles; 'und' when no profile
     matches at all."""

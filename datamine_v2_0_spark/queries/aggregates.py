@@ -930,7 +930,7 @@ def q_agg_cms_counts(spark, sf_dir):
     from datamine_v2_0_spark.operators import sketches as sk
 
     ev = _t(spark, sf_dir, "events")
-    sketch = sk.cms_sketch(ev, "user_id", depth=3, width=512, portable=True)
+    sketch = sk.cms_sketch(ev, "user_id", depth=3, width=512)
     keys = ev.select("user_id").distinct()
     return sk.cms_estimate(sketch, keys, "user_id", depth=3, width=512)
 

@@ -138,7 +138,7 @@ def q_dedup_simhash(spark, sf_dir):
     """Per-doc SimHash signatures in the portable (SQL-reproducible)
     md5-60-bit family; docs too short to shingle sign as 0."""
     return dd.simhash_signatures(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", portable=True
+        _t(spark, sf_dir, "documents"), "text", "doc_id"
     )
 
 SQL_DEDUP_SIMHASH = _SQL_SIMHASH_SIGS + """
@@ -153,8 +153,7 @@ def q_dedup_simhash_pairs(spark, sf_dir):
     (banding is recall-lossless by pigeonhole, so the outputs must be
     identical, not just similar)."""
     out = dd.simhash_candidates(
-        _t(spark, sf_dir, "documents"), "text", "doc_id",
-        max_hamming=3, portable=True,
+        _t(spark, sf_dir, "documents"), "text", "doc_id", max_hamming=3
     )
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 

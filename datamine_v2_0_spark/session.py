@@ -87,7 +87,9 @@ def get_spark(
         # Explode itself already emits nothing for empty/null arrays, so
         # the rule only ever helps when the generator input is a stored
         # column AND empties are common enough to prune below a join —
-        # no such path exists in this engine. Env-overridable.
+        # no such path exists in this engine. Env-overridable. README,
+        # "Operator-authoring note: InferFiltersFromGenerate is
+        # excluded", says when an operator should re-enable it.
         .config(
             "spark.sql.optimizer.excludedRules",
             os.environ.get(

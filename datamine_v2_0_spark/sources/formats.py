@@ -1,4 +1,4 @@
-"""Additional native file formats: ORC, line-text, binary blobs, Avro.
+"""Additional native file formats: ORC, line-text, binary blobs.
 
 Widens the S-family (SURVEY §2.1) beyond CSV/Parquet/JSONL with the
 remaining formats a large-scale corpus pipeline ingests:
@@ -9,9 +9,9 @@ remaining formats a large-scale corpus pipeline ingests:
   ``whole_files=True``) with file provenance for traceability.
 - binaryFile: opaque image/audio/video payloads + metadata — the scan
   side of the multimodal operators (`operators/multimodal.py`).
-- Avro: row-oriented interchange; requires the spark-avro datasource
-  (not bundled in this container), so it is capability-gated rather
-  than stubbed.
+
+Avro is not offered: the reference never reads or writes it, and Spark
+reads it only through the separate spark-avro datasource jar.
 
 Scale notes: binaryFile scans put whole blobs in rows — cap
 ``spark.sql.files.maxPartitionBytes`` (or pass ``path_glob``) so a
@@ -100,63 +100,3 @@ def read_binary_files(
     if max_bytes is not None:
         df = df.filter(F.col("length") <= F.lit(max_bytes))
     return df
-
-
-def avro_supported(spark: SparkSession) -> bool:
-    """True when the spark-avro datasource is on the classpath (it is a
-    separate artifact, not bundled with pyspark)."""
-    # probe the datasource registry itself — some avro CLASSES ship with
-    # core Spark, so Class.forName is a false positive; only a lookup
-    # through the DataSource resolution path tells the truth
-    try:
-        spark.read.format("avro").load("file:///__avro_probe_nonexistent__")
-        return True
-    except Exception as e:
-        return "Failed to find data source" not in str(e)
-
-
-def read_avro(
-    spark: SparkSession, path: str, allow_fallback: bool = True
-) -> DataFrame:
-    """Avro source: native spark-avro datasource when the jar is on the
-    classpath (the scale path — JVM decode, block-splittable), else the
-    pure-Python OCF fallback (`sources/avro_py.py`, flat-primitive
-    records decoded in parallel via mapInPandas)."""
-    if avro_supported(spark):
-        return spark.read.format("avro").load(path)
-    if not allow_fallback:
-        raise RuntimeError(
-            "spark-avro datasource not on the classpath; add the "
-            "org.apache.spark:spark-avro artifact or allow_fallback=True"
-        )
-    from datamine_v2_0_spark.sources.avro_py import read_avro_py
-
-    return read_avro_py(spark, path)
-
-
-def write_avro(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    allow_fallback: bool = True,
-) -> None:
-    """Avro sink: native datasource when present, else the pure-Python
-    OCF writer (one deflate-coded container file per partition, encoded
-    on the executors)."""
-    if avro_supported(df.sparkSession):
-        df.write.mode(mode).format("avro").save(path)
-        return
-    if not allow_fallback:
-        raise RuntimeError(
-            "spark-avro datasource not on the classpath; add the "
-            "org.apache.spark:spark-avro artifact or allow_fallback=True"
-        )
-    import shutil
-
-    from datamine_v2_0_spark.sources.avro_py import write_avro_py
-
-    if mode == "overwrite":
-        shutil.rmtree(path, ignore_errors=True)
-    elif mode != "append":
-        raise ValueError("fallback writer supports overwrite/append")
-    write_avro_py(df, path)

@@ -74,17 +74,6 @@ def test_fraction_of_total_broadcast_form(spark):
     assert got == {"a": (6, 60.0), "b": (3, 30.0), "c": (1, 10.0)}
 
 
-def test_quantile_bins_approx_monotone(spark):
-    df = spark.createDataFrame([Row(i=i, x=float(i)) for i in range(1000)])
-    out = bn.quantile_bins_approx(df, "x", 4, "q")
-    rows = out.orderBy("x").collect()
-    bins = [r["q"] for r in rows]
-    assert bins == sorted(bins)          # monotone in x
-    assert set(bins) == {0, 1, 2, 3}
-    counts = {b: bins.count(b) for b in set(bins)}
-    assert all(abs(c - 250) < 30 for c in counts.values()), counts
-
-
 def test_tfidf_ranks_distinctive_terms(spark):
     docs = [
         Row(doc_id=1, text="apple apple apple banana the the"),

@@ -1,15 +1,12 @@
-"""ORC / line-text / binaryFile / Avro-gate sources (SURVEY §2.1 widening)."""
+"""ORC / line-text / binaryFile sources (SURVEY §2.1 widening)."""
 from __future__ import annotations
 
 import gzip
 
-import pytest
 from pyspark.sql import functions as F
 
 from datamine_v2_0_spark.plans.inspect import pushed_filters, read_schema
 from datamine_v2_0_spark.sources.formats import (
-    avro_supported,
-    read_avro,
     read_binary_files,
     read_orc_pruned,
     read_text_lines,
@@ -95,196 +92,3 @@ def test_binary_files_feed_multimodal_decode(spark, tmp_path):
     assert r["n_bytes"] == len(ppm)
     # first 8 raster values of the decoded 2x2 RGB image
     assert r["features"] == [255.0, 0.0, 0.0, 0.0, 255.0, 0.0, 0.0, 0.0]
-
-
-def test_avro_gate(spark, tmp_path):
-    """Roundtrip works on EVERY classpath: native datasource when the
-    jar is present, pure-Python OCF fallback otherwise; and the strict
-    allow_fallback=False mode still raises the clear jar error."""
-    from datamine_v2_0_spark.sources.formats import write_avro
-
-    df = spark.range(3)
-    write_avro(df, str(tmp_path / "avro"))
-    assert read_avro(spark, str(tmp_path / "avro")).count() == 3
-    if not avro_supported(spark):
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            read_avro(
-                spark, str(tmp_path / "avro"), allow_fallback=False
-            )
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            write_avro(
-                spark.range(3),
-                str(tmp_path / "avro2"),
-                allow_fallback=False,
-            )
-
-
-def test_avro_py_roundtrip_all_primitives(spark, tmp_path):
-    """Pure-Python OCF fallback: write from executors, read back, full
-    value + schema parity including NULLs, bytes, and both codecs."""
-    import pandas as pd
-
-    from datamine_v2_0_spark.sources import avro_py as av
-
-    pdf = pd.DataFrame(
-        {
-            "i": pd.array([1, None, 3], dtype="Int64"),
-            "d": [1.5, float("nan"), -2.25],
-            "s": ["a", None, "ü€"],
-            "b": [b"\x00\xff", None, b""],
-            "f": [True, None, False],
-        }
-    )
-    df = spark.createDataFrame(
-        pdf, "i long, d double, s string, b binary, f boolean"
-    ).repartition(3)
-    for codec in ("null", "deflate"):
-        out = str(tmp_path / f"avro_{codec}")
-        files = av.write_avro_py(df, out, codec=codec)
-        assert sum(n for _, n in files) == 3
-        back = av.read_avro_py(spark, out)
-        assert back.schema == df.schema
-        got = sorted(
-            [tuple(r) for r in back.collect()],
-            key=lambda t: (t[0] is None, t[0]),
-        )
-        want = sorted(
-            [tuple(r) for r in df.collect()],
-            key=lambda t: (t[0] is None, t[0]),
-        )
-        # NaN compares unequal to itself — compare elementwise
-        for g, w in zip(got, want):
-            for a, b in zip(g, w):
-                if isinstance(a, float) and a != a:
-                    assert isinstance(b, float) and b != b
-                else:
-                    assert a == b
-
-
-def test_avro_py_blocks_and_scale_shape(spark, tmp_path):
-    """Multi-block files (records_per_block < rows) and one file per
-    input partition."""
-    from datamine_v2_0_spark.sources import avro_py as av
-
-    df = spark.range(0, 10_000, 1, 4).selectExpr(
-        "id", "CAST(id % 7 AS DOUBLE) AS v", "CONCAT('r', id) AS s"
-    )
-    out = str(tmp_path / "avro_blocks")
-    files = av.write_avro_py(df, out, records_per_block=512)
-    assert len(files) == 4 and sum(n for _, n in files) == 10_000
-    back = av.read_avro_py(spark, out)
-    assert back.count() == 10_000
-    assert back.agg({"id": "sum"}).first()[0] == sum(range(10_000))
-
-
-def test_avro_formats_facade_falls_back(spark, tmp_path):
-    from datamine_v2_0_spark.sources import formats as fm
-
-    df = spark.range(0, 100).selectExpr("id", "CAST(id AS STRING) AS s")
-    out = str(tmp_path / "avro_facade")
-    fm.write_avro(df, out)
-    assert fm.read_avro(spark, out).count() == 100
-
-
-def test_avro_py_rejects_nested(spark):
-    from datamine_v2_0_spark.sources import avro_py as av
-
-    df = spark.range(3).selectExpr("id", "ARRAY(id) AS a")
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="flat-primitive"):
-        av.spark_schema_to_avro(df.schema)
-
-
-def test_avro_py_big_int_ids_with_nulls_lossless(spark, tmp_path):
-    """Regression: Arrow->pandas turns nullable long columns with a NULL
-    in the batch into float64, silently rounding ids above 2^53 — the
-    writer must transport them losslessly."""
-    from datamine_v2_0_spark.sources import avro_py as av
-
-    big = 9007199254740993  # 2^53 + 1: not representable in float64
-    df = spark.createDataFrame(
-        [(big,), (None,), (big + 2,)], "id long"
-    ).coalesce(1)
-    out = str(tmp_path / "avro_big")
-    av.write_avro_py(df, out)
-    got = sorted(
-        (r.id for r in av.read_avro_py(spark, out).collect()),
-        key=lambda x: (x is None, x),
-    )
-    assert got == [big, big + 2, None]
-
-
-def test_avro_py_empty_dataframe_roundtrip(spark, tmp_path):
-    """An empty write must still produce a readable, schema-bearing
-    dataset (and overwrite must not leave the directory unreadable)."""
-    from datamine_v2_0_spark.sources import avro_py as av
-    from datamine_v2_0_spark.sources import formats as fm
-
-    df = spark.range(10).selectExpr("id", "CAST(id AS STRING) AS s")
-    empty = df.filter("id < 0")
-    out = str(tmp_path / "avro_empty")
-    files = av.write_avro_py(empty, out)
-    assert files and files[0][1] == 0
-    back = av.read_avro_py(spark, out)
-    # reader surfaces everything nullable (like parquet readers);
-    # compare names + types
-    assert back.count() == 0
-    assert [(f.name, f.dataType) for f in back.schema.fields] == [
-        (f.name, f.dataType) for f in empty.schema.fields
-    ]
-    # facade overwrite with an empty frame keeps the dataset readable
-    out2 = str(tmp_path / "avro_ow")
-    fm.write_avro(df, out2)
-    fm.write_avro(empty, out2)  # overwrite with nothing
-    assert fm.read_avro(spark, out2).count() == 0
-
-
-def test_avro_py_null_double_becomes_nan_documented(spark, tmp_path):
-    """NULL in a nullable double column arrives at the kernel as NaN
-    (Arrow float64 limitation) and round-trips as NaN — documented."""
-    from datamine_v2_0_spark.sources import avro_py as av
-
-    df = spark.createDataFrame([(1.5,), (None,)], "d double").coalesce(1)
-    out = str(tmp_path / "avro_nan")
-    av.write_avro_py(df, out)
-    vals = [r.d for r in av.read_avro_py(spark, out).collect()]
-    assert [v for v in vals if v is not None and v == v] == [1.5]
-    assert sum(1 for v in vals if v is None or v != v) == 1
-
-
-def test_avro_py_header_larger_than_probe(spark, tmp_path):
-    """Regression (round-6 advice): read_avro_py probed only the first
-    64 KiB for the header; a header whose metadata exceeds that
-    truncated mid-varint with an opaque EOFError. The probe now extends
-    until the header parses. Zero data blocks = a valid empty file."""
-    import io
-    import json as _json
-
-    from datamine_v2_0_spark.sources import avro_py as A
-
-    avsc = {
-        "type": "record",
-        "name": "r",
-        "fields": [{"name": "x", "type": ["null", "long"]}],
-    }
-    meta = {
-        "avro.schema": _json.dumps(avsc).encode(),
-        "avro.codec": b"null",
-        "pad": b"x" * (1 << 17),  # 128 KiB of metadata > the 64 KiB probe
-    }
-    out = bytearray(A._MAGIC)
-    A._write_long(out, len(meta))
-    for k, v in meta.items():
-        kb = k.encode()
-        A._write_long(out, len(kb))
-        out += kb
-        A._write_long(out, len(v))
-        out += v
-    A._write_long(out, 0)
-    out += b"S" * 16  # sync marker
-    p = tmp_path / "big_header.avro"
-    p.write_bytes(bytes(out))
-    df = A.read_avro_py(spark, str(p))
-    assert df.columns == ["x"]
-    assert df.count() == 0

@@ -52,12 +52,6 @@ def test_pagerank_dangling_leaks_mass(spark):
     assert sum(got.values()) < 1.0
 
 
-def test_out_degrees(spark):
-    e = _edges(spark, [(0, 1), (0, 2), (1, 2)])
-    got = {r["node"]: r["out_deg"] for r in gr.out_degrees(e).collect()}
-    assert got == {0: 2, 1: 1}
-
-
 def test_pagerank_rejects_zero_iters(spark):
     e = _edges(spark, [(0, 1)])
     with pytest.raises(ValueError):

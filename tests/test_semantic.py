@@ -103,23 +103,6 @@ def test_pairs_subset_of_exact_and_found_within_cluster(emb):
     assert len(g) > 0
 
 
-def test_keep_rule_drops_higher_id(emb):
-    kept = sem.semantic_dedup_keep(
-        emb, "embedding", "vec_id", n_clusters=5, threshold=0.3, n_iter=0
-    )
-    pairs = sem.semantic_neardup_pairs(
-        emb, "embedding", "vec_id", n_clusters=5, threshold=0.3, n_iter=0
-    )
-    kept_ids = {r.vec_id for r in kept.select("vec_id").collect()}
-    drop_ids = {r.id_b for r in pairs.select("id_b").collect()}
-    all_ids = {r.vec_id for r in emb.select("vec_id").collect()}
-    assert kept_ids == all_ids - drop_ids
-    # lowest id of any duplicate pair always survives unless itself an
-    # id_b of an earlier duplicate
-    a_only = {r.id_a for r in pairs.collect()} - drop_ids
-    assert a_only <= kept_ids
-
-
 def test_assignment_plan_has_no_exchange(emb):
     """The centroid argmax is a pure projection: inlined literals, no
     join, no shuffle in the assignment subplan."""
@@ -198,10 +181,6 @@ def test_many_singleton_clusters_share_one_task(spark):
         pairs = sem.semantic_neardup_pairs(
             df, "embedding", "vec_id", n_clusters=n, threshold=0.99
         ).collect()
-        kept = sem.semantic_dedup_keep(
-            df, "embedding", "vec_id", n_clusters=n, threshold=0.99
-        ).count()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert pairs == []
-    assert kept == n

@@ -210,29 +210,21 @@ def test_cms_merge_equals_direct(spark, events):
 
 def test_cms_weighted_and_fast_path(spark, events):
     ev = events.withColumn("w", (F.col("event_id") % 5 + 1).cast("long"))
-    for portable in (True, False):
-        sketch = sk.cms_sketch(
-            ev, "user_id", depth=3, width=32, weight_col="w", portable=portable
-        )
-        total = sketch.filter(F.col("row") == 0).agg(F.sum("total")).collect()[0][0]
-        want = ev.agg(F.sum("w")).collect()[0][0]
-        assert total == want  # row 0 cells partition the total weight
-        exact = {
-            r.user_id: r.s
-            for r in ev.groupBy("user_id").agg(F.sum("w").alias("s")).collect()
-        }
-        est = {
-            r.user_id: r.est
-            for r in sk.cms_estimate(
-                sketch,
-                ev.select("user_id").distinct(),
-                "user_id",
-                depth=3,
-                width=32,
-                portable=portable,
-            ).collect()
-        }
-        assert all(est[k] >= exact[k] for k in exact)
+    sketch = sk.cms_sketch(ev, "user_id", depth=3, width=32, weight_col="w")
+    total = sketch.filter(F.col("row") == 0).agg(F.sum("total")).collect()[0][0]
+    want = ev.agg(F.sum("w")).collect()[0][0]
+    assert total == want  # row 0 cells partition the total weight
+    exact = {
+        r.user_id: r.s
+        for r in ev.groupBy("user_id").agg(F.sum("w").alias("s")).collect()
+    }
+    est = {
+        r.user_id: r.est
+        for r in sk.cms_estimate(
+            sketch, ev.select("user_id").distinct(), "user_id", depth=3, width=32
+        ).collect()
+    }
+    assert all(est[k] >= exact[k] for k in exact)
 
 
 def test_cms_weight_preconditions(spark):

@@ -22,6 +22,7 @@ from datamine_v2_0_spark.sources.parquet_io import (
     list_partitions,
     read_parquet_pruned,
     write_parquet_partitioned,
+    write_table_idempotent,
 )
 from datamine_v2_0_spark.sources.values_io import rows_as_view
 from pyspark.sql import types as T
@@ -162,6 +163,21 @@ def test_rows_as_view(spark):
     )
     assert df.count() == 2
     assert spark.sql("SELECT SUM(v) AS s FROM tmp_vals").first()["s"] == 3
+
+
+def test_write_table_idempotent_skips_unless_recreate(spark):
+    """S14: a re-run leaves an existing table alone; ``recreate=True``
+    replaces it."""
+    first = spark.createDataFrame([(1,), (2,)], "v int")
+    second = spark.createDataFrame([(9,)], "v int")
+    try:
+        write_table_idempotent(first, "s14_idem")
+        write_table_idempotent(second, "s14_idem")
+        assert sorted(r.v for r in spark.table("s14_idem").collect()) == [1, 2]
+        write_table_idempotent(second, "s14_idem", recreate=True)
+        assert [r.v for r in spark.table("s14_idem").collect()] == [9]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS s14_idem")
 
 
 def test_label_studio_task_writer_rejects_filename_collision(spark, tmp_path):
