@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
@@ -65,8 +65,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     second exchange; the window pays the same hash exchange once and
     its sort-within-partition is over tiny per-hash groups. AQE handles
     bucket skew (e.g. empty docs)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("__h").orderBy(F.col(id_col).asc())
     return (
         df.withColumn("__h", content_hash(F.col(text_col)))
@@ -334,51 +332,37 @@ def minhash_near_dup_pairs(
     duplicate_collapse: str = "auto",
 ) -> DataFrame:
     """Banded MinHash-LSH candidates → exact n-gram Jaccard verify, with
-    the adaptive representative collapse (``duplicate_collapse``, see
-    :func:`_fan_out` for why the collapsed plan is result-exact). Unlike
-    the posting-join family, ``auto`` here collapses on the MAX-GROUP
-    statistic (``PAIR_COLLAPSE_BETA`` break-even), not the ratio or
-    total blowup: LSH banding is linear in n and in-bucket verify
-    parallelizes across groups, so even 16x uniform duplication
-    measured 1.7x faster direct — but one mega group's |g|² candidate
-    pairs land in a single band bucket (one task, serial), which is
-    where the 40%-viral corpus measured 5x collapse-wins
-    (SCALING.md, tools/collapse_band.py).
+    heavy duplicate groups routed through one representative
+    (``duplicate_collapse``, see :func:`_rep_groups`; result-exact by
+    :func:`_fan_out`'s argument).
 
-    Why the composed operator exists: on a duplicate-heavy corpus every
-    member of an exact-duplicate group lands in the same band buckets,
-    so the candidate set contains all |group|² member pairs AND each
-    pays a full shingle-set intersection in the verify — the
-    skewed-replica bench measured 13× time under a 1.66
-    docs-per-distinct corpus. Collapsed, LSH + verify run on one
-    representative per distinct text and only the (inherently
-    output-sized) member fan-out scales with duplication.
-
-    Probe results are cached per (session, plan, column): if this
-    session OVERWRITES the files behind ``df`` and re-runs on an
-    identical plan, call :func:`clear_dup_stats_cache` first or the auto
-    switch plans from stale stats (plan choice only — both plans are
-    result-exact).
+    Why the routing exists: every member of an exact-duplicate group
+    lands in the same band buckets, so a g-copy group puts g² candidate
+    pairs into ONE bucket (one task, serial) and each pays a full
+    shingle-set intersection in the verify. Routed, LSH and verify see
+    one representative for the group and only the (inherently
+    output-sized) member fan-out scales with its size.
     """
     df = _spread(df)
-    members = None
-    if _resolve_pair_collapse(df, text_col, duplicate_collapse):
-        df, members = _rep_groups(df, text_col, id_col)
+    df, members = _rep_groups(
+        df, text_col, id_col,
+        _min_copies(duplicate_collapse),
+    )
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n
     )
     out = ngram_jaccard_pairs(
         cands, df, text_col, id_col, shingle_n, threshold
     ).select("id_a", "id_b", F.round("jaccard", round_to).alias("jaccard"))
-    if members is None:
-        return out
-    if threshold <= 1.0:
-        # self-pairs: a text scores Jaccard 1.0 with itself iff it has
-        # >= 1 shingle, i.e. >= n words (the direct path's all-null
-        # signature filter keeps shingle-less docs out of banding)
+    if members is not None and threshold <= 1.0:
+        # self-pairs of heavy representatives: a text scores Jaccard 1.0
+        # with itself iff it has >= 1 shingle, i.e. >= n words (the
+        # all-null signature filter keeps shingle-less docs out of banding)
         words = F.split(normalize_text(F.col(text_col)), " ")
         out = out.unionByName(
-            df.filter(F.size(words) >= shingle_n).select(
+            df.join(_heavy_reps(members, id_col).select(id_col), id_col, "left_semi")
+            .filter(F.size(words) >= shingle_n)
+            .select(
                 F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
                 F.lit(1.0).alias("jaccard"),
             )
@@ -386,64 +370,11 @@ def minhash_near_dup_pairs(
     return _fan_out(out, members)
 
 
-# Session-scoped probe cache keyed on (session id, analyzed-plan
-# semantic hash, column): composed flows (bm25 inside rrf_fuse, several
-# dedup operators over the same gated corpus) each call the probe on a
-# semantically identical frame, and without the cache each call pays a
-# full scan of the text column. Safety: a stale entry (the one hazard —
-# an external process overwriting the parquet files behind an identical
-# plan mid-session) can only mis-CHOOSE a plan, never change a result —
-# both physical plans are result-exact on every input by construction.
-# Bounded; cleared wholesale rather than LRU-tracked (the probe is
-# cheap enough that a rare full re-probe beats per-hit bookkeeping).
-_DUP_STATS_CACHE: dict[tuple[int, int, str], tuple[int, float, int]] = {}
-_DUP_STATS_CACHE_MAX = 256
-
-# Number of probe scans actually EXECUTED this session (cache hits
-# don't count) — instrumentation for the probe-sharing contract (pytest
-# asserts scan counts; the SCALING.md round-10 table records measured
-# per-query scan reductions).
-DUP_STATS_PROBE_RUNS = 0
-
-
-def clear_dup_stats_cache() -> None:
-    """Drop every cached probe result (e.g. after overwriting the files
-    a live DataFrame reads, which the cache key cannot see)."""
-    _DUP_STATS_CACHE.clear()
-
-
 def dup_stats(df: DataFrame, text_col: str) -> tuple[int, float, int]:
-    """Public form of the exact duplication probe: (n, blowup, cmax)
-    over raw-byte xxhash64 duplicate groups of ``text_col``.
-
-    Every ``duplicate_collapse='auto'`` resolution plans from this one
-    scan. Calls on a semantically identical DataFrame within a session
-    hit a plan-keyed cache, so a pipeline running several
-    collapse-capable operators over the SAME corpus pays one probe."""
-    return _dup_stats(df, text_col)
-
-
-def _dup_stats(df: DataFrame, text_col: str) -> tuple[int, float, int]:
-    """Exact (n, blowup, cmax) over raw-byte xxhash64 duplicate groups:
-    blowup = Σ|group|²/n (total candidate-work multiplier), cmax = the
-    largest group (the single-task hotspot — all of one group's
-    candidate pairs land in ONE bucket of a bucketed pipeline, so cmax²
-    bounds the serial work no amount of executors parallelizes away).
-
-    One narrow shuffle of (8-byte key, count) pairs with map-side
-    combine — ~16 bytes/doc, vs the ≥ full-text shuffle the operator
-    being planned will itself run; the probe is noise next to the cost
-    of picking the wrong plan. Results are memoized per (session,
-    analyzed plan, column) so multi-operator flows pay one scan — see
-    the cache note above and :func:`clear_dup_stats_cache`."""
-    global DUP_STATS_PROBE_RUNS
-    key = None
-    try:
-        key = (id(df.sparkSession), df.semanticHash(), text_col)
-    except Exception:  # pragma: no cover - Connect/analysis corner
-        pass
-    if key is not None and key in _DUP_STATS_CACHE:
-        return _DUP_STATS_CACHE[key]
+    """(n, blowup, cmax) of ``text_col``'s raw-byte xxhash64 duplicate
+    groups: n rows, blowup = Σ|group|²/n (the candidate-work multiplier
+    of a plan that does not route duplicates) and cmax = the largest
+    group. A plain aggregate (one job per call); no operator reads it."""
     g = df.groupBy(F.xxhash64(F.col(text_col)).alias("__h")).agg(
         F.count(F.lit(1)).alias("__c")
     )
@@ -452,14 +383,8 @@ def _dup_stats(df: DataFrame, text_col: str) -> tuple[int, float, int]:
         F.sum("__c").alias("__n"),
         F.max("__c").alias("__mx"),
     ).first()
-    DUP_STATS_PROBE_RUNS += 1
     n = r["__n"] or 0
-    out = (n, (r["__ss"] / n) if n else 0.0, r["__mx"] or 0)
-    if key is not None:
-        if len(_DUP_STATS_CACHE) >= _DUP_STATS_CACHE_MAX:
-            _DUP_STATS_CACHE.clear()
-        _DUP_STATS_CACHE[key] = out
-    return out
+    return n, (r["__ss"] / n) if n else 0.0, r["__mx"] or 0
 
 
 def _plan_scan_bytes(df: DataFrame) -> int | None:
@@ -476,190 +401,14 @@ def _plan_scan_bytes(df: DataFrame) -> int | None:
         return None
 
 
-# ``auto`` collapse thresholds, calibrated by tools/collapse_band.py
-# on sf0.1 across uniform (u1.5-u16) and one-viral-group (h5-h40)
-# duplication shapes (SCALING.md stress-band table). Duplication hurts
-# the direct plans through two INDEPENDENT mechanisms, so the switch
-# needs two statistics from the exact probe (_dup_stats):
-#
-#   trimmed blowup = (Σ|g|² - cmax²)/n — the work multiplier from
-#   duplication SPREAD ACROSS the corpus (every duplicated text
-#   lengthens its posting lists / multiplies its bucket pairs, and the
-#   work parallelizes, so it prices TOTAL extra work). The single
-#   largest group is excluded: its cost is localized (only its own
-#   text's lists/buckets grow) and is priced separately by cmax.
-#
-#   cmax — the largest duplicate group: its |g|² candidate pairs land
-#   on one join key / one band bucket, i.e. a serial hotspot no
-#   executor count absorbs.
-#
-# posting-join self-join (jaccard/containment inverted index): direct
-# work grows ~trimmed² (every duplicate lengthens lists on BOTH join
-# sides) — measured direct-wins 2-3x at trimmed 2, tie at 4, collapse-
-# wins 4.7x/29x at 8/16. A lone mega group measured CHEAP direct at
-# cmax 1000 (its pairs spread over its ~50 shingle keys), so the
-# hotspot ceiling sits high.
-POSTING_COLLAPSE_BLOWUP = 4.5
-# bm25 (doc-side × query-side posting join): the spread multiplier is
-# the PRODUCT of doc-side trimmed blowup and query-side FULL blowup
-# (any duplicated probe re-pays every matched list — a query-side mega
-# group is a global multiplier, not a localized hotspot) — measured at
-# constant probes: tie at doc-blowup 4, collapse-wins 1.7x at 8.
-BM25_COLLAPSE_BLOWUP = 6.0
-# pair family (minhash LSH, dedup_against): spread duplication measured
-# direct-wins at EVERY uniform band through blowup 16 (in-bucket verify
-# is vectorized and parallelizes across groups; the collapse fan-out
-# joins cost more than it saves), so the pair family has NO spread
-# threshold — only the mega-group hotspot flips it: one group's pairs
-# expand inside ONE band bucket = one task.
-#
-# Hotspot ceilings. The pair-family crossover is NOT a constant cmax:
-# the break-even is serial hotspot work (∝ cmax², one band bucket =
-# one task) against the per-core share of the collapse overhead
-# (∝ n / parallelism P), i.e. collapse iff
-#
-#     cmax ≥ sqrt(PAIR_COLLAPSE_BETA · n / P).
-#
-# PAIR_COLLAPSE_BETA is calibrated from the measured single-node
-# crossover — the h20/h40 bracket (direct wins at cmax 1000, loses
-# 1.8x at 2000 → crossover ≈ 1500 at n = 5000 docs, P = 32 cores):
-# 1500² · 32 / 5000 = 14,400. The same formula reproduces every other
-# measured cell: sf0.01 skew (n=500, P=32 → threshold 474; measured
-# direct-wins at cmax 200 ✓) and all uniform bands (cmax ≤ 16 ≪
-# threshold ✓). On a 1000-executor cluster P grows, the threshold
-# falls as sqrt(1/P), and a mega group that would stall one task while
-# thousands idle collapses much earlier — exactly the scale behavior a
-# fixed constant cannot express. PAIR_COLLAPSE_CMAX_MIN floors the
-# formula so trivial corpora never collapse on noise-level cmax.
-# minhash: bracket h20 (direct-wins at cmax 1000) / h40 (loses 1.8x at
-# 2000) → crossover ≈ 1500 → beta = 1500²·32/5000.
-PAIR_COLLAPSE_BETA = 14_400
-# dedup_against pays a smaller collapse overhead (survival fans out by
-# fingerprint — no member-pair fan-out joins), so its crossover sits
-# lower: bracket h10 (direct-wins at cmax 500) / h20 (loses 1.7x at
-# 1000) → crossover ≈ 700 → beta = 700²·32/5000. The formula then
-# reproduces its sf0.01-skew reading too (threshold 221, measured
-# direct-wins at cmax 200).
-AGAINST_COLLAPSE_BETA = 3_136
-# embedding_neardup_pairs: same serial-hotspot mechanism on vectors —
-# a g-strong identical-embedding group is one g×g verify matmul in one
-# bucket task plus g² passing pairs shuffled once per band. Round 10
-# calibrated a single sqrt(beta·n/P) beta from ONE n (2000 → beta
-# 3,841); round 11 added two more n points (tools/embed_band.py,
-# EMBED_BAND.jsonl — uniquified 4x backgrounds so replica duplication
-# doesn't confound the planted hotspot) and the single-beta form broke:
-# measured crossover brackets at P=32 are
-#     n=500:  g* in (200, 300)    [direct 0.88 vs 0.96 at 200]
-#     n=2000: g* in (300, 500)    [direct 0.92 vs 1.19 at 300]
-#     n=8000: g* in (500, 800)    [collapse 1.65 vs 1.91 at 800]
-# i.e. g* grows ~n^0.34 here, not sqrt(n) — no single beta satisfies
-# all three brackets (the n=500 lower bound and n=8000 upper bound
-# pinch at exactly 2,560). The affine model
-#     g*² = EMBED_COLLAPSE_INTERCEPT + EMBED_COLLAPSE_BETA · n/P
-# fits all three with margin (intercept = the FIXED collapse overhead —
-# the rep-group build + fan-out join stages cost ~constant wall-clock
-# at small n — in hotspot-pair units; beta = the per-core linear
-# fan-out work): fit through the n=500/n=8000 bracket centers gives
-# intercept 37,400 / beta 1,448 and predicts g*(n=2000) = 358, inside
-# its bracket. At cluster scale the beta term dominates and the
-# sqrt(1/P) earlier-collapse-on-bigger-clusters behavior is retained;
-# at small n the threshold floors at sqrt(intercept) ≈ 193 instead of
-# the old form's coincidental 245.
-EMBED_COLLAPSE_BETA = 1_448
-EMBED_COLLAPSE_INTERCEPT = 37_400
-PAIR_COLLAPSE_CMAX_MIN = 64
-# posting hotspot: a mega group's posting pairs spread over its own
-# ~doc-length distinct shingle keys, so the serial fraction is far
-# smaller and the ceiling sits much higher than the pair family's.
-# Round-10 grounding (verdict task 6): the h80 cell (n=5000, cmax=4000,
-# trimmed 0.2) measured jaccard DIRECT still winning 8.8 s vs 14.5 s —
-# the 10,000 ceiling for jaccard/bm25 remains extrapolated, but the
-# measured direct-wins floor moved 2000 → 4000 (COLLAPSE_BAND.jsonl).
-POSTING_COLLAPSE_CMAX = 10_000
-# Containment crosses EARLIER than jaccard — the same h80 cell measured
-# collapse winning 2.1x (direct 23.9 s vs 11.2 s) while the h60 cell
-# (cmax=3000) still favored direct (6.6 vs 10.5): containment's
-# one-sided OR threshold keeps every subset pair a mega group's
-# postings touch, so its direct join output-amplifies faster in cmax.
-# Bracket (3000 direct-wins, 4000 collapse-wins) → geometric-mean
-# crossover sqrt(3000·4000) ≈ 3,464. One bracket cell cannot fix the
-# functional form (constant vs sqrt(n)-scaled), so this is a constant
-# within the measured bracket, re-derivable from COLLAPSE_BAND.jsonl.
-CONTAINMENT_COLLAPSE_CMAX = 3_464
-
-
-
-
-def _resolve_posting_collapse(
-    df,
-    text_col,
-    duplicate_collapse: str,
-    stats: tuple[int, float, int] | None = None,
-    cmax_ceiling: int = POSTING_COLLAPSE_CMAX,
-    blowup_threshold: float = POSTING_COLLAPSE_BLOWUP,
-) -> bool:
-    """``auto`` plan pick for the posting-join family: trimmed blowup
-    against the measured spread crossover, cmax against the hotspot
-    ceiling (per-operator — containment crosses earlier, see
-    CONTAINMENT_COLLAPSE_CMAX). No docs-per-distinct ratio gate — ratio
-    stays near 1 on exactly the concentrated compositions where the
-    hotspot matters. ``stats`` injects (n, blowup, cmax) in place of the
-    exact probe (:func:`_dup_stats`)."""
-    if duplicate_collapse not in ("auto", "always", "never"):
-        raise ValueError(f"duplicate_collapse: {duplicate_collapse!r}")
-    if duplicate_collapse != "auto":
-        return duplicate_collapse == "always"
-    n, blowup, cmax = stats or _dup_stats(df, text_col)
-    if n == 0:
-        return False
-    trimmed = blowup - cmax * cmax / n
-    return trimmed >= blowup_threshold or cmax >= cmax_ceiling
-
-
-# The parallelism the pair-family betas were calibrated at. The
-# beta·n/P term models the CLUSTER regime — per-core fan-out work
-# dominating the collapse plan's cost, so more executors collapse
-# earlier. BELOW the calibration parallelism that premise inverts: a
-# P=8 embed band (SCALING.md round 11) measured collapse winning at
-# EVERY planted size down to g=400 while the n/P form predicts the
-# crossover should RISE to 632 — with few cores the DIRECT plan's
-# parallel candidate work slows as 1/P while the collapsed plan is
-# fixed-stage-overhead-bound and stays flat. Clamping P up to the
-# calibration point keeps the threshold at its measured-P level on
-# smaller sessions (collapse-leaning — the safe direction given the
-# unbounded hotspot cost vs the bounded collapse overhead; the clamp
-# reproduces all four measured P=8 cells) and leaves cluster-scale
-# behavior unchanged.
-PAIR_CALIBRATION_P = 32
-
-
-def _pair_cmax_threshold(
-    n: int, parallelism: int, beta: float = PAIR_COLLAPSE_BETA,
-    intercept: float = 0.0,
-) -> float:
-    """Scale-aware pair-family hotspot crossover (see the
-    PAIR_COLLAPSE_BETA block): sqrt(intercept + beta · n / P), floored,
-    with P clamped up to PAIR_CALIBRATION_P (the n/P model is for the
-    at-or-above-calibration regime; see that constant's block). The
-    intercept is 0 for the text family; the embedding family's
-    measured fixed collapse overhead makes it affine (see the
-    EMBED_COLLAPSE_INTERCEPT block)."""
-    p = max(parallelism, PAIR_CALIBRATION_P)
-    return max(PAIR_COLLAPSE_CMAX_MIN, (intercept + beta * n / p) ** 0.5)
-
-
 def _plan_parallelism(spark) -> int:
-    """Target parallelism P for plan-time cost decisions.
-
-    The instantaneous ``sparkContext.defaultParallelism`` is wrong under
-    dynamic allocation: before executors register it can be tiny, which
-    INFLATES the sqrt(beta·n/P) hotspot threshold and leaves a
-    mega-group corpus on the direct plan that will later stall one task
-    on the full cluster. Use the configured shuffle partitioning — the
-    stable statement of intended parallelism, and the partition count
-    the planned operator's own shuffles will actually run at — and take
-    the max with defaultParallelism so an interactive local session
-    with shuffle.partitions lowered still sees its real core count."""
+    """Target parallelism P of :func:`_spread`: the configured shuffle
+    partitioning — the stable statement of intended parallelism, and
+    the partition count the operator's own shuffles will run at (the
+    instantaneous ``sparkContext.defaultParallelism`` is tiny before
+    dynamic allocation registers executors) — maxed with
+    defaultParallelism so an interactive local session with
+    shuffle.partitions lowered still sees its real core count."""
     sc = spark.sparkContext
     try:
         conf_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -727,90 +476,125 @@ def _cluster_pair_stream(ex: DataFrame, id_col: str) -> DataFrame:
     return ex
 
 
-def _resolve_pair_collapse(
-    df,
-    text_col,
-    duplicate_collapse: str,
-    cmax_threshold: float | None = None,
-    beta: float = PAIR_COLLAPSE_BETA,
-    stats: tuple[int, float, int] | None = None,
-    intercept: float = 0.0,
-) -> bool:
-    """``auto`` plan pick for the pair family (minhash LSH /
-    dedup_against): collapse iff the largest exact-duplicate group
-    reaches the serial-hotspot crossover — by default the scale-aware
-    sqrt(beta·n/P) break-even (beta calibrated per operator, see the
-    PAIR_COLLAPSE_BETA block; P from :func:`_plan_parallelism`),
-    overridable with an explicit ``cmax_threshold``. ``stats`` injects
-    (n, blowup, cmax) in place of the exact probe (:func:`_dup_stats`)."""
-    if duplicate_collapse not in ("auto", "always", "never"):
+# The group size H from which duplicate_collapse="auto" routes an exact
+# duplicate group through one representative (see _rep_groups). Fixed,
+# with no corpus statistic: routing a g-copy group removes its duplicate
+# work (~g² posting-join rows per shingle, g² candidate pairs in one LSH
+# bucket) for ~g member-map and fan-out rows, so only small groups stay
+# direct. Corpora of uniform g-copy groups measured the posting join
+# tied at g = 4 and 4.7x faster routed at g = 8 on a 32-core host
+# (COLLAPSE_BAND.jsonl); SCALING.md "One routed plan per operator" has
+# the band of every operator on a 4-core host.
+_MIN_COPIES = 8
+
+
+def _min_copies(duplicate_collapse: str) -> int | None:
+    """The routing threshold H that ``duplicate_collapse`` sets:
+    ``_MIN_COPIES`` for "auto", 2 (every duplicate group) for "always",
+    None (no group, no routing stage) for "never"."""
+    modes = {"auto": _MIN_COPIES, "always": 2, "never": None}
+    if duplicate_collapse not in modes:
         raise ValueError(f"duplicate_collapse: {duplicate_collapse!r}")
-    if duplicate_collapse != "auto":
-        return duplicate_collapse == "always"
-    n, _, cmax = stats or _dup_stats(df, text_col)
-    if cmax_threshold is None:
-        cmax_threshold = _pair_cmax_threshold(
-            n, _plan_parallelism(df.sparkSession), beta, intercept
+    return modes[duplicate_collapse]
+
+
+def _rep_groups(
+    df: DataFrame, key_col: str, id_col: str, min_copies: int | None,
+    fingerprint=content_hash,
+):
+    """(routed, members): the routing stage every collapse-capable
+    operator runs inside its plan.
+
+    Rows with a NULL id are dropped (a NULL id never pairs or ranks).
+    The rest are grouped by ``fingerprint(key_col)`` — the sha256 of
+    the normalized text, or ``F.xxhash64`` of an embedding. A group of
+    at least ``min_copies`` copies is heavy: ``routed`` keeps only its
+    representative (the min id), and ``members`` maps the
+    representative to every copy as (``__rep``, ``__m``, ``__cnt`` =
+    the group size). Every other row stands for itself and has no
+    member row. ``min_copies=None`` routes nothing: ``routed`` is the
+    non-NULL-id rows and ``members`` is None.
+
+    One window over the thin (id, fingerprint) pairs counts the groups.
+    The member map is cut (one eager job): the routing, the self-pairs
+    and the fan-out read it in different jobs. The non-representative copies — heavy groups only, few on all
+    but duplicate-dominated corpora — leave by a left anti join, which
+    keeps ``df``'s size estimate; an outer join would estimate the
+    product of both sides and turn every later join of the operator
+    into a sort-merge join."""
+    df = df.filter(F.col(id_col).isNotNull())
+    if min_copies is None:
+        return df, None
+    w = Window.partitionBy("__fp")
+    members = iter_checkpoint(
+        df.select(
+            F.col(id_col).alias("__m"), fingerprint(F.col(key_col)).alias("__fp")
         )
-    return cmax >= cmax_threshold
+        .select(
+            "__m",
+            F.min("__m").over(w).alias("__rep"),
+            F.count(F.lit(1)).over(w).alias("__cnt"),
+        )
+        .filter(F.col("__cnt") >= min_copies)
+    )
+    copies = members.filter(F.col("__m") != F.col("__rep"))
+    routed = df.join(copies.select(F.col("__m").alias(id_col)), id_col, "left_anti")
+    return routed, members
 
 
-def _rep_groups(df: DataFrame, text_col: str, id_col: str):
-    """(reps, members) for representative collapse of a text corpus:
-    reps = the ``df`` rows of one representative per distinct
-    normalized text (``__rep`` = min member id) carrying the group's
-    multiplicity ``__cnt``; members = (``__rep``, ``__m``) for every
-    member with a non-NULL id — a NULL id never pairs. ``__cnt`` counts
-    the non-NULL-id copies, as a direct plan's document frequency does
-    (:func:`_posting_pairs`): a NULL-id doc never counts there either,
-    so a text whose every copy has a NULL id, which gets no
-    representative, is left out of both plans alike. Only
-    representatives are shingled or signed downstream. Text itself
-    never shuffles for grouping — the fingerprint map is two thin
-    columns, checkpointed because the groups and the member map both
-    consume it."""
-    fpmap = iter_checkpoint(
-        df.select(F.col(id_col), content_hash(F.col(text_col)).alias("__fp"))
+def _heavy_reps(members: DataFrame, id_col: str) -> DataFrame:
+    """(``id_col``, ``__cnt``): one row per heavy representative."""
+    return members.filter(F.col("__m") == F.col("__rep")).select(
+        F.col("__rep").alias(id_col), "__cnt"
     )
-    groups = fpmap.groupBy("__fp").agg(
-        F.min(id_col).alias("__rep"), F.count(id_col).alias("__cnt")
+
+
+def _member_ids(
+    df: DataFrame, members: DataFrame, col: str, out: str | None = None,
+) -> DataFrame:
+    """One row per document that ``df``'s routed id ``col`` stands for
+    (see :func:`_rep_groups`): every copy of a heavy representative,
+    the id itself otherwise, in ``col`` or, if given, a new column
+    ``out``."""
+    m = members.select(F.col("__rep").alias(col), F.col("__m").alias("__mid"))
+    return (
+        df.join(m, col, "left")
+        .withColumn(out or col, F.coalesce("__mid", col))
+        .drop("__mid")
     )
-    reps = df.join(groups.select(F.col("__rep").alias(id_col), "__cnt"), id_col)
-    members = (
-        fpmap.filter(F.col(id_col).isNotNull())
-        .join(groups, "__fp")
-        .select("__rep", F.col(id_col).alias("__m"))
-    )
-    return reps, members
 
 
 def _fan_out(
-    rep_pairs: DataFrame, members: DataFrame,
+    pairs: DataFrame, members: DataFrame | None,
     swap: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Expand representative pairs ``(id_a, id_b)``, ``id_a <= id_b``,
-    to member pairs ``(least, greatest)`` with ``id_a < id_b``, each
-    once, every other column carried as is. ``swap`` names two
-    direction-dependent score columns that trade places when member-id
-    order inverts the representative order (containment is asymmetric).
+    """Expand pairs ``(id_a, id_b)``, ``id_a <= id_b``, of a routed
+    corpus to pairs of the documents they stand for, ``(least,
+    greatest)`` with ``id_a < id_b``, each once, every other column
+    carried as is. A pair with no heavy representative passes through
+    the two left joins unchanged; ``members`` None returns ``pairs``.
+    ``swap`` names two direction-dependent score columns that trade
+    places when member-id order inverts the pair's order (containment
+    is asymmetric).
 
-    Why every representative-collapsed pair plan is result-exact: an
-    operator's candidacy and score are functions of the text (or
-    vector) alone — shingles, signatures, band keys and similarities
-    never read the id — so every member pair of representatives r, s
-    is a candidate and scores exactly as (r, s) does. A
-    representative's pair with itself, (r, r), stands for its
+    Why the routed plan is result-exact: an operator's candidacy and
+    score are functions of the text (or vector) alone — shingles,
+    signatures, band keys and similarities never read the id — so every
+    copy of a representative r pairs with a document x exactly as r
+    does. A representative's pair with itself, (r, r), stands for its
     group's within-group pairs: identical content, scored the way the
     direct plan scores two identical docs, and present only when the
     direct plan would pair them at all (a text that shingles, a
-    non-zero vector). Document-frequency caps weight each
-    representative by its group's size, so they count what the direct
-    plan counts."""
-    ma = members.select(F.col("__rep").alias("id_a"), F.col("__m").alias("__ma"))
-    mb = members.select(F.col("__rep").alias("id_b"), F.col("__m").alias("__mb"))
+    non-zero vector). Document-frequency caps weight a representative by
+    its group size, so they count what the direct plan counts."""
+    if members is None:
+        return pairs
+    out = _member_ids(
+        _member_ids(pairs, members, "id_a", "__ma"), members, "id_b", "__mb"
+    )
     fwd = F.col("__ma") < F.col("__mb")
     cols = []
-    for c in rep_pairs.columns:
+    for c in pairs.columns:
         if c in ("id_a", "id_b"):
             continue
         if swap and c in swap:
@@ -819,9 +603,8 @@ def _fan_out(
         else:
             cols.append(F.col(c))
     return (
-        rep_pairs.join(ma, "id_a").join(mb, "id_b")
         # (r, r) meets each member pair twice, once per order: keep one
-        .filter((F.col("id_a") < F.col("id_b")) | fwd)
+        out.filter((F.col("id_a") < F.col("id_b")) | fwd)
         .select(
             F.least("__ma", "__mb").alias("id_a"),
             F.greatest("__ma", "__mb").alias("id_b"),
@@ -832,20 +615,17 @@ def _fan_out(
 
 def _posting_pairs(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int,
-    max_shingle_freq: int | None, capped_sizes: bool, reps: bool,
+    max_shingle_freq: int | None, capped_sizes: bool,
+    members: DataFrame | None,
 ) -> DataFrame:
-    """Shared inverted-index kernel of the posting-join family:
+    """Shared inverted-index kernel of the posting-join family over a
+    routed corpus and its member map (see :func:`_rep_groups`):
     (id_a, id_b, __sza, __szb, __i) per doc pair sharing >= 1 shingle,
     ``__i`` the shared-shingle count and ``__sz*`` each doc's size —
     over the capped universe when ``capped_sizes`` (Jaccard), else the
     true pre-cap size (containment). ``max_shingle_freq`` drops
-    shingles whose document frequency exceeds it from the join; that
-    frequency counts docs with a non-NULL id (SQL's ``COUNT(id)``),
-    since a NULL-id doc, which never pairs, never counts either.
-
-    ``reps``: ``df`` holds representatives (see :func:`_rep_groups`):
-    document frequency sums their ``__cnt`` multiplicity instead of
-    counting rows, and the self-join keeps ``id_a <= id_b`` so each
+    shingles whose document frequency exceeds it from the join; a heavy
+    representative counts for its whole group there. A heavy
     representative also pairs with itself (see :func:`_fan_out`)."""
     # two-step projection: words materialize once, shingles build from
     # the column (word_shingles_from_words contract). No size(__g) > 0
@@ -853,26 +633,27 @@ def _posting_pairs(
     # the filter predicate was pushdown-duplicated below the _spread
     # exchange, re-running the whole shingle pipeline per doc in the
     # (single-task at small inputs) scan stage.
-    weight = ["__cnt"] if reps and max_shingle_freq is not None else []
     sh = df.select(
-        F.col(id_col), *weight,
+        F.col(id_col),
         F.split(normalize_text(F.col(text_col)), " ").alias("__w"),
     ).select(
-        F.col(id_col), *weight,
+        F.col(id_col),
         word_shingles_from_words(F.col("__w"), shingle_n).alias("__g"),
     )
     size = [] if capped_sizes and max_shingle_freq is not None else [
         F.size("__g").alias("__sz")
     ]
-    ex = sh.select(
-        F.col(id_col), *weight, *size, F.explode("__g").alias("__s")
-    )
+    ex = sh.select(F.col(id_col), *size, F.explode("__g").alias("__s"))
+    heavy = None if members is None else _heavy_reps(members, id_col)
     if max_shingle_freq is not None:
-        dfreq = F.sum("__cnt") if reps else F.count(id_col)
-        rare = ex.groupBy("__s").agg(dfreq.alias("__df")).filter(
+        weighted, copies = ex, F.lit(1)
+        if heavy is not None:
+            weighted = ex.join(heavy, id_col, "left")
+            copies = F.coalesce("__cnt", F.lit(1))
+        rare = weighted.groupBy("__s").agg(F.sum(copies).alias("__df")).filter(
             F.col("__df") <= max_shingle_freq
         )
-        ex = ex.join(rare.select("__s"), "__s").drop(*weight)
+        ex = ex.join(rare.select("__s"), "__s")
         if capped_sizes:
             # per-doc sizes over the SAME capped universe as the
             # intersection counts — uncapped sizes would bias Jaccard
@@ -892,17 +673,27 @@ def _posting_pairs(
     b = ex.select(
         F.col(id_col).alias("id_b"), F.col("__sz").alias("__szb"), "__s"
     )
-    keep = (F.col("id_a") <= F.col("id_b")) if reps else (
-        F.col("id_a") < F.col("id_b")
-    )
-    return (
+    pairs = (
         a.join(b, "__s")
-        .filter(keep)
+        .filter(F.col("id_a") < F.col("id_b"))
         # sizes ride as grouping keys (functionally dependent on the ids,
         # so groups are unchanged): no first() agg buffers, and in the
         # SMJ regime the pair-exchange row narrows 7 -> 5 fields
         .groupBy("id_a", "id_b", "__sza", "__szb")
         .agg(F.count(F.lit(1)).alias("__i"))
+    )
+    if heavy is None:
+        return pairs
+    own = (
+        ex.join(heavy.select(id_col), id_col, "left_semi")
+        .groupBy(id_col, "__sz")
+        .agg(F.count(F.lit(1)).alias("__i"))
+    )
+    return pairs.unionByName(
+        own.select(
+            F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+            F.col("__sz").alias("__sza"), F.col("__sz").alias("__szb"), "__i",
+        )
     )
 
 
@@ -935,23 +726,18 @@ def jaccard_pairs_inverted(
     :func:`_fan_out`): on duplicate-heavy corpora the posting join was
     the repo's highest scaling exponent (α 0.68 — every duplicate
     multiplies every posting list, so join work grows ~quadratically
-    in the duplication factor). The collapsed path shingles and joins
-    one REPRESENTATIVE per distinct normalized text, then fans
-    representative pairs back out to member pairs — the join is sized
-    by distinct content, and only the (inherently output-sized) member
-    fan-out scales with duplication. ``"auto"`` probes trimmed blowup +
-    cmax against the posting family's measured crossovers
-    (POSTING_COLLAPSE_BLOWUP / POSTING_COLLAPSE_CMAX — the self-join
-    grows ~trimmed², so the spread threshold sits low). Probe results
-    are cached per (session, plan, column): if this session OVERWRITES
-    the files behind ``df`` and re-runs on an identical plan, call
-    :func:`clear_dup_stats_cache` first or the auto switch plans from
-    stale stats (plan choice only — both plans are result-exact)."""
+    in the duplication factor). The plan routes every exact-duplicate
+    group of at least H copies through one REPRESENTATIVE (see
+    :func:`_rep_groups`; "auto" H = ``_MIN_COPIES``, "always" 2,
+    "never" no routing), shingles and joins the routed corpus, then
+    fans pairs of representatives back out to member pairs — the join
+    is sized by distinct content, and only the (inherently
+    output-sized) member fan-out scales with duplication."""
     pairs, members = _jaccard_pairs_core(
         df, text_col, id_col, shingle_n, threshold, max_shingle_freq,
         round_to, duplicate_collapse,
     )
-    return pairs if members is None else _fan_out(pairs, members)
+    return _fan_out(pairs, members)
 
 
 def _jaccard_pairs_core(
@@ -965,17 +751,14 @@ def _jaccard_pairs_core(
     duplicate_collapse: str = "auto",
 ) -> tuple[DataFrame, DataFrame | None]:
     """:func:`jaccard_pairs_inverted` before the member fan-out:
-    ``(pairs, None)`` on the direct plan, or ``(rep_pairs, members)``
-    on the collapsed one, where ``rep_pairs`` are representative pairs
-    with ``id_a <= id_b`` and ``members`` is :func:`_rep_groups`'
-    member map."""
-    df = _spread(df)
-    members = None
-    if _resolve_posting_collapse(df, text_col, duplicate_collapse):
-        df, members = _rep_groups(df, text_col, id_col)
+    ``(pairs, members)`` — pairs of the routed corpus, ``id_a <= id_b``,
+    and :func:`_rep_groups`' member map (None under "never")."""
+    df, members = _rep_groups(
+        _spread(df), text_col, id_col,
+        _min_copies(duplicate_collapse),
+    )
     inter = _posting_pairs(
-        df, text_col, id_col, shingle_n, max_shingle_freq,
-        capped_sizes=True, reps=members is not None,
+        df, text_col, id_col, shingle_n, max_shingle_freq, True, members,
     )
     j = F.col("__i") / (F.col("__sza") + F.col("__szb") - F.col("__i"))
     out = (
@@ -991,22 +774,23 @@ def _star_edges(pairs: DataFrame, members: DataFrame | None) -> DataFrame:
     pair graph, in O(Σ|g|) rows instead of O(Σ|g|²).
 
     ``(pairs, members)`` is what :func:`_jaccard_pairs_core` returns;
-    ``pairs`` pass through unchanged when ``members`` is None (direct
-    plan). Otherwise the edges are every representative pair ``(r, s)``
-    with ``r < s``, plus one star edge ``(r, m)`` for each member
-    ``m != r`` of a representative ``r`` that appears in any
-    representative pair, its self-pair ``(r, r)`` included.
+    ``pairs`` pass through unchanged when ``members`` is None ("never").
+    Otherwise the edges are every routed pair ``(r, s)`` with ``r < s``,
+    plus one star edge ``(r, m)`` for each member ``m != r`` of a heavy
+    representative ``r`` that appears in any pair, its self-pair
+    ``(r, r)`` included.
 
     Why the components are identical: :func:`_fan_out` turns a pair
-    ``(r, s)`` into all of ``members(r) × members(s)`` and a self-pair
-    ``(r, r)`` into a clique on ``members(r)``. ``r`` is itself a
-    member of its group (the representative is the group's minimum
-    non-NULL id), so in the fanned graph a member joins a component
-    exactly when its representative has a pair, and two representatives
-    share a component exactly when a chain of representative pairs
-    links them. The star graph has the same two properties, so the same
-    components; each component's minimum id is a representative in both,
-    so :func:`connected_components` labels them alike. A representative
+    ``(r, s)`` into all of ``members(r) × members(s)`` (a light
+    document's members are itself) and a self-pair ``(r, r)`` into a
+    clique on ``members(r)``. ``r`` is itself a member of its group
+    (the representative is the group's minimum non-NULL id), so in the
+    fanned graph a member joins a component exactly when its
+    representative has a pair, and two routed documents share a
+    component exactly when a chain of routed pairs links them. The star
+    graph has the same two properties, so the same components; each
+    component's minimum id is a routed document in both, so
+    :func:`connected_components` labels them alike. A representative
     with no pair (a text that does not shingle) leaves its copies as
     singletons in both graphs."""
     if members is None:
@@ -1057,28 +841,16 @@ def containment_pairs_inverted(
     intersection makes capped containment a lower bound on the true
     score.
 
-    ``duplicate_collapse``: same adaptive representative collapse as
-    jaccard_pairs_inverted (result-exact, see :func:`_fan_out`) — this
-    operator carried the repo's second-highest scaling exponent (α 0.61)
-    on duplicate-heavy growth before the collapse — and its OWN, lower
-    hotspot ceiling (CONTAINMENT_COLLAPSE_CMAX: the one-sided OR
-    threshold keeps every subset pair a mega group's postings touch, so
-    the direct join crosses at cmax ≈ 3.5k where jaccard still wins at
-    4k — measured h60/h80 bracket). Probe results are cached per
-    (session, plan, column): if this session OVERWRITES the files behind
-    ``df`` and re-runs on an identical plan, call
-    :func:`clear_dup_stats_cache` first or the auto switch plans from
-    stale stats (plan choice only — both plans are result-exact)."""
-    df = _spread(df)
-    members = None
-    if _resolve_posting_collapse(
-        df, text_col, duplicate_collapse,
-        cmax_ceiling=CONTAINMENT_COLLAPSE_CMAX,
-    ):
-        df, members = _rep_groups(df, text_col, id_col)
+    ``duplicate_collapse``: the same routing of heavy duplicate groups
+    as :func:`jaccard_pairs_inverted` (result-exact, see
+    :func:`_fan_out`) — this operator carried the repo's second-highest
+    scaling exponent (α 0.61) on duplicate-heavy growth before it."""
+    df, members = _rep_groups(
+        _spread(df), text_col, id_col,
+        _min_copies(duplicate_collapse),
+    )
     inter = _posting_pairs(
-        df, text_col, id_col, shingle_n, max_shingle_freq,
-        capped_sizes=False, reps=members is not None,
+        df, text_col, id_col, shingle_n, max_shingle_freq, False, members,
     )
     ca = F.col("__i") / F.col("__sza")
     cb = F.col("__i") / F.col("__szb")
@@ -1091,8 +863,6 @@ def containment_pairs_inverted(
             F.round(cb, round_to).alias("cont_b_in_a"),
         )
     )
-    if members is None:
-        return out
     return _fan_out(out, members, swap=("cont_a_in_b", "cont_b_in_a"))
 
 
@@ -1167,20 +937,16 @@ def embedding_neardup_pairs(
       (num_planes, bands): for pair similarity s the per-pair miss
       probability is (1-(1-acos(s)/pi)^r)^b with r = num_planes/bands.
 
-    ``duplicate_collapse`` (LSH mode): representative collapse — band
-    and verify one rep per DISTINCT vector, then fan verified rep pairs
-    out to member pairs (result-exact, see :func:`_fan_out`) — the
-    pair-family hazard transplanted from the text family: a g-strong
-    identical-embedding group otherwise lands whole in each of its
-    ``bands`` buckets, so ONE task runs a serial g×g verify matmul
-    (cmax² work no executor count absorbs) and the distinct shuffles
-    the group's g² passing pairs once per band. ``"auto"`` (default)
-    probes the vector column (the same cached _dup_stats scan —
-    xxhash64 hashes arrays) against the measured affine crossover
-    sqrt(EMBED_COLLAPSE_INTERCEPT + EMBED_COLLAPSE_BETA·n/P),
-    calibrated from a planted-group band on the sf0.1 embeddings (see
-    the constant's derivation block); the exact brute-force mode never
-    probes or collapses — it is the small-corpus oracle baseline.
+    ``duplicate_collapse`` (LSH mode): identical-vector groups of at
+    least H copies route through one representative (see
+    :func:`_rep_groups`, fingerprint ``xxhash64`` of the vector; "auto"
+    H = ``_MIN_COPIES``): band and verify the routed vectors, then
+    fan verified pairs out to member pairs (result-exact, see
+    :func:`_fan_out`) — without it a g-strong identical-embedding group
+    lands whole in each of its ``bands`` buckets, so ONE task runs a
+    serial g×g verify matmul and the distinct shuffles the group's g²
+    passing pairs once per band. The exact brute-force mode never
+    routes — it is the small-corpus oracle baseline.
 
     Rows with a NULL id or a NULL vector never pair."""
     from datamine_v2_0_spark.operators.similarity import (
@@ -1189,43 +955,12 @@ def embedding_neardup_pairs(
         make_hyperplanes,
     )
 
-    if duplicate_collapse not in ("auto", "always", "never"):
-        raise ValueError(f"duplicate_collapse: {duplicate_collapse!r}")
+    min_copies = _min_copies(duplicate_collapse)
     # NULL vectors can't hash into a band or verify a cosine, and a NULL
     # id can't order a pair — drop both
     base = df.filter(
         F.col(vec_col).isNotNull() & F.col(id_col).isNotNull()
     ).select(F.col(id_col), F.col(vec_col))
-    if not exact and _resolve_pair_collapse(
-        base, vec_col, duplicate_collapse, beta=EMBED_COLLAPSE_BETA,
-        intercept=EMBED_COLLAPSE_INTERCEPT,
-    ):
-        from datamine_v2_0_spark.operators.similarity import (
-            vector_rep_groups,
-        )
-
-        rep_base, members = vector_rep_groups(base, vec_col, id_col)
-        rep_pairs = embedding_neardup_pairs(
-            rep_base, vec_col, id_col, dim, threshold, num_planes,
-            bands, seed, round_to, exact=False, duplicate_collapse="never",
-        )
-        if threshold <= 1.0:
-            # self-pairs: identical non-zero vectors score bitwise 1.0 on
-            # the direct path (num == den in the same arithmetic); a
-            # zero vector verifies NaN there and never passes
-            sq = F.aggregate(
-                F.col(vec_col).cast("array<double>"), F.lit(0.0),
-                lambda a, x: a + x * x,
-            )
-            rep_pairs = rep_pairs.unionByName(
-                rep_base.filter(sq > 0).select(
-                    F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
-                    F.lit(1.0).alias("cos_sim"),
-                )
-            )
-        return _fan_out(
-            rep_pairs, members.withColumnRenamed("neighbor_id", "__rep")
-        )
     if exact:
         a = base.select(
             F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
@@ -1234,44 +969,60 @@ def embedding_neardup_pairs(
             F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")
         )
         pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    else:
-        # verify INSIDE the bucket: each (band, key) group runs one
-        # vectorized kernel (normalized matmul screen with an ulp margin,
-        # then the exact per-pair einsum recompute — bit-identical to
-        # cosine_pairs_udf) and emits only the pairs clearing the
-        # threshold. The previous form expanded every in-bucket
-        # combination into (id_a, id_b) rows, distinct-ed them, and
-        # re-joined the vectors twice: at a high-recall operating point
-        # (few planes per band => big buckets) the candidate table is
-        # quadratic in bucket size — measured 50M pair rows for 5k
-        # vectors at 32/16 — while the passing set is 1000× smaller.
-        # Emitting post-verify pairs keeps the shuffle linear
-        # (bands × corpus vector rows in, passing pairs out).
-        keys = banded_keys_udf(make_hyperplanes(dim, num_planes, seed), bands)
-        banded = base.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__vec"),
-            F.posexplode(keys(F.col(vec_col))).alias("__band", "__key"),
-        )
-        id_type = dict(df.dtypes)[id_col]
-        verify = _bucket_cosine_verify(threshold)
-        pairs_v = banded.groupBy("__band", "__key").applyInPandas(
-            verify, schema=f"id_a {id_type}, id_b {id_type}, __cos double"
-        )
-        # the same pair from different bands carries the identical double
-        # (same arithmetic on the same vectors), so distinct dedups bands
+        pair_cos = cosine_pairs_udf()
         return (
-            pairs_v.distinct()
-            .select("id_a", "id_b", F.round("__cos", round_to).alias("cos_sim"))
+            pairs.withColumn("__cos", pair_cos(F.col("__va"), F.col("__vb")))
+            .filter(F.col("__cos") >= threshold)
+            .select(
+                "id_a", "id_b", F.round("__cos", round_to).alias("cos_sim")
+            )
         )
-    pair_cos = cosine_pairs_udf()
-    return (
-        pairs.withColumn("__cos", pair_cos(F.col("__va"), F.col("__vb")))
-        .filter(F.col("__cos") >= threshold)
-        .select(
-            "id_a", "id_b", F.round("__cos", round_to).alias("cos_sim")
-        )
+    base, members = _rep_groups(base, vec_col, id_col, min_copies, F.xxhash64)
+    # verify INSIDE the bucket: each (band, key) group runs one
+    # vectorized kernel (normalized matmul screen with an ulp margin,
+    # then the exact per-pair einsum recompute — bit-identical to
+    # cosine_pairs_udf) and emits only the pairs clearing the
+    # threshold. The previous form expanded every in-bucket
+    # combination into (id_a, id_b) rows, distinct-ed them, and
+    # re-joined the vectors twice: at a high-recall operating point
+    # (few planes per band => big buckets) the candidate table is
+    # quadratic in bucket size — measured 50M pair rows for 5k
+    # vectors at 32/16 — while the passing set is 1000× smaller.
+    # Emitting post-verify pairs keeps the shuffle linear
+    # (bands × corpus vector rows in, passing pairs out).
+    keys = banded_keys_udf(make_hyperplanes(dim, num_planes, seed), bands)
+    banded = base.select(
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).alias("__vec"),
+        F.posexplode(keys(F.col(vec_col))).alias("__band", "__key"),
     )
+    id_type = dict(df.dtypes)[id_col]
+    verify = _bucket_cosine_verify(threshold)
+    pairs_v = banded.groupBy("__band", "__key").applyInPandas(
+        verify, schema=f"id_a {id_type}, id_b {id_type}, __cos double"
+    )
+    # the same pair from different bands carries the identical double
+    # (same arithmetic on the same vectors), so distinct dedups bands
+    pairs = pairs_v.distinct().select(
+        "id_a", "id_b", F.round("__cos", round_to).alias("cos_sim")
+    )
+    if members is not None and threshold <= 1.0:
+        # self-pairs of heavy representatives: identical non-zero
+        # vectors score 1.0 on the direct path (num == den up to
+        # rounding); a zero vector verifies NaN there and never passes
+        sq = F.aggregate(
+            F.col(vec_col).cast("array<double>"), F.lit(0.0),
+            lambda acc, x: acc + x * x,
+        )
+        pairs = pairs.unionByName(
+            base.join(
+                _heavy_reps(members, id_col).select(id_col), id_col, "left_semi"
+            ).filter(sq > 0).select(
+                F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+                F.lit(1.0).alias("cos_sim"),
+            )
+        )
+    return _fan_out(pairs, members)
 
 
 # hops per connected-components block: the convergence check rides on
@@ -1693,19 +1444,14 @@ def dedup_against(
 
     ``duplicate_collapse`` (``method='near'`` only; the exact path is
     already hash-collapsed by construction): a match is a function of
-    the normalized text alone, so on duplicate-heavy corpora the whole
-    candidate+verify pipeline runs on one representative per distinct
-    text PER SIDE and every member of a matched new-side representative
-    is removed — without it, a duplicated text pays its cross-side
-    bucket product and a shingle verify per member pair for an ANY-match
-    answer the first pair already settles (the skewed-replica bench
-    measured 3.8× uniform time). Result-exact on every input (see
-    :func:`_fan_out`); ``"auto"`` uses the pair family's max-group
-    probe on the pooled corpora (see ``PAIR_COLLAPSE_BETA``): banding
-    is linear in corpus size and in-bucket work parallelizes across
-    groups, so only one group's
-    serial hotspot, not uniform duplication, pays for the collapse
-    machinery.
+    the normalized text alone, so each side routes its exact-duplicate
+    groups of at least H copies through one representative (see
+    :func:`_rep_groups`; "auto" H = ``_MIN_COPIES``) and every
+    member of a matched new-side representative is removed — without
+    it, a duplicated text pays its cross-side bucket product and a
+    shingle verify per member pair for an ANY-match answer the first
+    pair already settles (the skewed-replica bench measured 3.8×
+    uniform time). Result-exact on every input (see :func:`_fan_out`).
 
     ``method='exact'``: content-hash left-anti join — one shuffle on the
     hash, ref side reduced to distinct hashes first.
@@ -1719,12 +1465,7 @@ def dedup_against(
     once over each corpus.
 
     Returns the surviving ``new_df`` rows (original columns); a doc
-    with a NULL id or a NULL text never matches, so it survives. Auto
-    probe results are cached per (session, plan, column): if this
-    session OVERWRITES the files behind either corpus and re-runs on an
-    identical plan, call :func:`clear_dup_stats_cache` first or the
-    auto switch plans from stale stats (plan choice only — both plans
-    are result-exact).
+    with a NULL id or a NULL text never matches, so it survives.
     """
     if method == "exact":
         rh = ref_df.select(content_hash(F.col(text_col)).alias("__h")).distinct()
@@ -1735,16 +1476,9 @@ def dedup_against(
         )
     if method != "near":
         raise ValueError(f"method must be 'exact' or 'near', got {method!r}")
-    # auto probes the POOLED corpora (new ∪ ref on the text column)
-    new_in, ref_in, members = new_df, ref_df, None
-    if _resolve_pair_collapse(
-        new_df.select(text_col).unionAll(ref_df.select(text_col)),
-        text_col,
-        duplicate_collapse,
-        beta=AGAINST_COLLAPSE_BETA,
-    ):
-        new_in, members = _rep_groups(new_df, text_col, id_col)
-        ref_in, _ = _rep_groups(ref_df, text_col, id_col)
+    min_copies = _min_copies(duplicate_collapse)
+    new_in, members = _rep_groups(new_df, text_col, id_col, min_copies)
+    ref_in, _ = _rep_groups(ref_df, text_col, id_col, min_copies)
 
     sig_udf = minhash_text_udf(num_hashes, shingle_n)
     tagged = new_in.select(
@@ -1829,9 +1563,7 @@ def dedup_against(
     )
     if members is not None:
         # matched representatives -> every member of their group
-        matched = members.join(
-            matched.select(F.col(id_col).alias("__rep")), "__rep"
-        ).select(F.col("__m").alias(id_col))
+        matched = _member_ids(matched, members, id_col)
     return new_df.join(matched, id_col, "left_anti")
 
 
@@ -1892,8 +1624,6 @@ def duplicate_substring_spans(
     Returns (id, start_pos, end_pos, span_tokens), positions 1-based
     over whitespace tokens of the normalized text.
     """
-    from pyspark.sql import Window
-
     if scope not in ("cross", "any"):
         raise ValueError(f"scope must be cross/any, got {scope!r}")
     # the posting table feeds TWO consumers (the shared-gram aggregate

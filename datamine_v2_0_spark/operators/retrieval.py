@@ -26,19 +26,17 @@ equality join on ``term`` — never all-pairs.
 Duplicate-heavy corpora (the round-7 weak mark): a pre-dedup crawl
 duplicates documents AND probes simultaneously, so posting lists, the
 matched slice, and the query count all grow together — measured n^~1.15
-(4.9× time at 4× duplicated data). The fix is representative collapse:
-score each distinct normalized text ONCE (exact-duplicate groups share an
-identical tf vector and doc length, hence identical BM25 scores), with
-document frequency / n_docs / avgdl weighted by group multiplicity so the
-statistics still describe the full corpus, then fan the per-representative
-scores back out to member doc_ids for the final top-k. An exact
-cumulative-multiplicity threshold prunes the representative lists before
-fan-out (keep a rep iff its score ties or beats the score at cumulative
-member count k), so the fan-out join is top-k-sized, not corpus-sized.
-Duplicate probes collapse the same way (distinct query fingerprints score
-once, qids re-attach at the end). On a duplicate-free corpus the collapse
-adds one map-side-combinable shuffle; on a duplicate-heavy one every
-downstream stage shrinks by the duplication factor.
+(4.9× time at 4× duplicated data). The plan therefore routes every
+exact-duplicate group of at least H documents through one
+representative (dedup._rep_groups): members of a group share an
+identical tf vector and doc length, hence identical BM25 scores, so
+the representative is scored ONCE, with document frequency / n_docs /
+avgdl weighted by group multiplicity so the statistics still describe
+the full corpus, and its score fans back out to member doc_ids for the
+final top-k. An exact cumulative-multiplicity threshold prunes each
+query's candidates before fan-out (keep a doc iff its score ties or
+beats the score at cumulative member count k), so the fan-out join is
+top-k-sized, not corpus-sized.
 """
 
 from __future__ import annotations
@@ -46,15 +44,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from datamine_v2_0_spark.operators.ckpt import iter_checkpoint
-from datamine_v2_0_spark.operators.dedup import normalize_text
+from datamine_v2_0_spark.operators.dedup import (
+    _cluster_pair_stream,
+    _heavy_reps,
+    _member_ids,
+    _min_copies,
+    _rep_groups,
+    _spread,
+    normalize_text,
+)
 
 
-def _tokens(df: DataFrame, text_col: str, id_col: str, out: str) -> DataFrame:
-    """(id, term) posting rows; normalization shared with the dedup/tfidf
-    family so fingerprints and indexes agree on tokenization."""
+def _tokens(df: DataFrame, text_col: str, id_col: str, out_id: str) -> DataFrame:
+    """(out_id, term) posting rows; normalization shared with the
+    dedup/tfidf family so fingerprints and indexes agree on tokenization."""
     return (
-        df.select(F.col(id_col), F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias(out))
-        .filter(F.col(out) != "")
+        df.select(
+            F.col(id_col).alias(out_id),
+            F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("term"),
+        )
+        .filter(F.col("term") != "")
     )
 
 
@@ -92,104 +101,60 @@ def bm25_topk(
     break on ``doc_id`` identically across engines (same recipe as
     tfidf_top_terms).
 
-    ``duplicate_collapse``: ``"always"`` scores one representative per
-    distinct normalized text with multiplicity-weighted corpus statistics
-    (result-exact — see module docstring — and sub-linear on duplicate-
-    heavy corpora, the round-7 weak mark: direct scoring measured n^~1.15
-    there because posting lists AND probe count grow together);
-    ``"never"`` scores every document directly (cheapest when content is
-    unique); ``"auto"`` (default) decides from the PRODUCT of the
-    doc-side TRIMMED blowup and the query-side FULL blowup (exact probe
-    — see dedup._dup_stats and the threshold block above
-    dedup.POSTING_COLLAPSE_BLOWUP): the direct path's matched posting
-    join is sized by doc-side multiplicity × query-side multiplicity (a
-    duplicated doc lengthens every matched posting list, a duplicated
-    probe re-pays each list), so neither side's statistic alone prices
-    the plan — the round-8 4x replica (both sides 4x, product 16)
-    measured collapse 2.3x faster while a constant-probe corpus at the
-    same doc blowup 4 measures a tie (tools/collapse_band.py,
-    SCALING.md). The doc side trims its largest group (a lone viral
-    text lengthens only its own lists — a localized cost priced by the
-    cmax ceiling); the query side must NOT trim (a duplicated probe
-    multiplies every matched row — always a global multiplier). Both
-    paths produce identical results on every input — the switch is a
-    physical-plan choice, the exactness does not depend on which side
-    of the threshold a corpus lands.
-
-    Auto probes go through dedup's session probe cache, so composed
-    flows — rrf_fuse calling bm25 on the same corpus another operator
-    already probed — pay one probe per corpus, not one per call. If this
-    session OVERWRITES the files behind ``docs``/``queries`` and
-    re-runs an identical plan, call dedup.clear_dup_stats_cache() first
-    or the auto switch plans from stale stats (plan choice only — both
-    plans are result-exact).
+    ``duplicate_collapse`` sets H, the group size from which an exact
+    duplicate group of documents is scored through one representative
+    with multiplicity-weighted corpus statistics (see the module
+    docstring and dedup._rep_groups): "auto" H = dedup._MIN_COPIES,
+    "always" 2, "never" no routing. Every H gives the same rows.
+    Documents and probes with a NULL id take no part.
 
     Reference parity: the reference has no retrieval operator — this is
     part of the beyond-reference LLM-data surface (SURVEY.md §2 extension),
     built per Robertson et al., "Okapi at TREC-3" (1994).
     """
-    from datamine_v2_0_spark.operators.dedup import (
-        BM25_COLLAPSE_BLOWUP, POSTING_COLLAPSE_CMAX,
-        _dup_stats, _resolve_posting_collapse,
+    docs, doc_members = _rep_groups(
+        _spread(docs), text_col, id_col, _min_copies(duplicate_collapse)
     )
+    # probes are few by contract, so they are scored as they come
+    queries = queries.filter(F.col(query_id_col).isNotNull())
+    heavy = None if doc_members is None else _heavy_reps(doc_members, "doc_id")
 
-    if duplicate_collapse == "auto":
-        _, blow_q, _ = _dup_stats(queries, query_text_col)
-        # The product rule trimmed_d · blow_q >= BM25_COLLAPSE_BLOWUP
-        # is routed through the shared posting resolver as a doc-side
-        # trimmed threshold of BM25_COLLAPSE_BLOWUP / blow_q. blow_q = 0
-        # only for an empty query corpus, where the result is empty
-        # under either plan: score direct.
-        collapse = blow_q > 0 and _resolve_posting_collapse(
-            docs,
-            text_col,
-            "auto",
-            cmax_ceiling=POSTING_COLLAPSE_CMAX,
-            blowup_threshold=BM25_COLLAPSE_BLOWUP / blow_q,
+    def copies(df: DataFrame) -> DataFrame:
+        """``df`` with ``__w``, the number of documents each routed doc
+        stands for — its group size for a heavy representative, else 1."""
+        if heavy is None:
+            return df.withColumn("__w", F.lit(1))
+        return df.join(heavy, "doc_id", "left").withColumn(
+            "__w", F.coalesce("__cnt", F.lit(1))
         )
-    elif duplicate_collapse in ("always", "never"):
-        collapse = duplicate_collapse == "always"
-    else:
-        raise ValueError(f"duplicate_collapse: {duplicate_collapse!r}")
-    impl = _bm25_collapsed if collapse else _bm25_direct
-    return impl(
-        docs, queries, text_col, id_col, query_text_col, query_id_col,
-        k, k1, b, round_to,
-    )
 
-
-def _bm25_direct(
-    docs, queries, text_col, id_col, query_text_col, query_id_col,
-    k, k1, b, round_to,
-) -> DataFrame:
-    """Direct per-document scoring (unique-content fast path)."""
-    from datamine_v2_0_spark.operators.dedup import _cluster_pair_stream, _spread
-
-    tok = _tokens(_spread(docs), text_col, id_col, "term")
     # the TF table is the inverted index: dl, dfreq, corpus stats, and the
     # posting join all branch from it. Catalyst gets no exchange reuse
     # across those branches (different downstream groupings), so without
     # materialization the corpus scan+tokenize+TF shuffle runs 4x (plan-
     # audited: 5 scans, 0 ReusedExchange). Build the index ONCE.
     tf = iter_checkpoint(
-        tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+        _tokens(docs, text_col, id_col, "doc_id")
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
     # doc length = sum of term frequencies; re-agg of tf, not a new scan.
     # Materialized because BOTH the corpus stats and the scoring join
     # consume it — unmaterialized, each consumer re-aggregates the full
     # posting table (plan-audited: two O(postings) passes for one
     # O(docs) relation).
-    dl = iter_checkpoint(tf.groupBy(id_col).agg(F.sum("tf").alias("dl")))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
+    dl = iter_checkpoint(tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")))
+    # each routed doc counts for its group, so n_docs / avgdl describe
+    # the FULL corpus (exact: integer sums, one division)
+    stats = copies(dl).agg(
+        F.sum("__w").alias("n_docs"),
+        (F.sum(F.col("dl") * F.col("__w")) / F.sum("__w")).alias("avgdl"),
     )
     # distinct query terms (BM25 query-side tf saturates to presence here)
     qterms = (
-        _tokens(queries, query_text_col, query_id_col, "term")
-        .select(F.col(query_id_col).alias("query_id"), "term")
-        .distinct()
+        _tokens(queries, query_text_col, query_id_col, "query_id").distinct()
     )
+    terms = F.broadcast(qterms.select("term").distinct())
     # document frequency is only ever consumed for query-matching terms
     # (inner join on term downstream), so pre-filter the posting table
     # with the broadcast DISTINCT term set ONCE (no query fan-out yet):
@@ -197,9 +162,9 @@ def _bm25_direct(
     # all of it. df per surviving term is counted over the FULL corpus —
     # result-exact.
     dfreq = (
-        tf.join(F.broadcast(qterms.select("term").distinct()), "term")
+        copies(tf.join(terms, "term"))
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
+        .agg(F.sum("__w").alias("df"))
     )
     # the SCORING slice is additionally doc-clustered in the broadcast
     # regime (dedup._cluster_pair_stream): the (query_id, doc_id) score
@@ -209,180 +174,57 @@ def _bm25_direct(
     # exchange measured at sf0.1. dfreq deliberately stays on the direct
     # tf probe: its term aggregation gains nothing from doc clustering,
     # and the branches' different column pruning defeats exchange reuse.
-    pruned = _cluster_pair_stream(
-        tf.join(F.broadcast(qterms.select("term").distinct()), "term"),
-        id_col,
-    )
-    idf = dfreq.crossJoin(F.broadcast(stats)).select(
-        "term",
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        ).alias("idf"),
-        "avgdl",
+    pruned = _cluster_pair_stream(tf.join(terms, "term"), "doc_id")
+    # one row per distinct query term: broadcast like the term set (the
+    # weight join above leaves dfreq without a usable size estimate)
+    idf = F.broadcast(
+        dfreq.crossJoin(F.broadcast(stats)).select(
+            "term",
+            F.log(
+                F.lit(1.0)
+                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+            ).alias("idf"),
+            "avgdl",
+        )
     )
     # fan out per query AFTER the prune/cluster (see pruned above)
     matched = pruned.join(F.broadcast(qterms), "term")
     scored = (
         matched.join(idf, "term")
-        .join(dl, id_col)
-        .select(
-            "query_id",
-            F.col(id_col).alias("doc_id"),
-            _bm25_score(k1, b).alias("score"),
-        )
+        .join(dl, "doc_id")
+        .select("query_id", "doc_id", _bm25_score(k1, b).alias("score"))
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("score"), round_to).alias("score"))
     )
+    if doc_members is not None:
+        # exact per-query prune before the fan-out: a routed doc can only
+        # reach the final top-k if its score ties or beats the score at
+        # cumulative member count k (ties kept, so doc_id tiebreaks stay
+        # exact). Both windows share one per-query partition — bounded,
+        # never a global single-task window, and no self-join (that would
+        # evaluate the whole scored subtree twice; plan-audited).
+        w_rep = Window.partitionBy("query_id").orderBy(
+            F.desc("score"), F.col("doc_id")
+        )
+        before = F.coalesce(
+            F.sum("__w").over(w_rep.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0),
+        )
+        kth = F.min(F.when(F.col("__before") < k, F.col("score"))).over(
+            Window.partitionBy("query_id")
+        )
+        scored = _member_ids(
+            copies(scored)
+            .withColumn("__before", before)
+            .withColumn("__kth", kth)
+            .filter(F.col("score") >= F.col("__kth")),
+            doc_members, "doc_id",
+        )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("doc_id").asc())
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _bm25_collapsed(
-    docs, queries, text_col, id_col, query_text_col, query_id_col,
-    k, k1, b, round_to,
-) -> DataFrame:
-    """Representative-collapsed scoring (duplicate-heavy scale path).
-
-    Result-exact vs the direct path: members of an exact-duplicate group
-    share a tf vector and doc length, hence a score; df / n_docs / avgdl
-    are multiplicity-weighted so they describe the full corpus. The
-    collapse key is sha256 of the normalized text (the dedup family's
-    content_hash), not a 64-bit hash — a collision would silently merge
-    different documents.
-    """
-    from datamine_v2_0_spark.operators.dedup import _spread, content_hash
-
-    # the fingerprint map is NARROW (id, 64-char hash) — text itself never
-    # shuffles; checkpointed because both the group table and the final
-    # fan-out consume it
-    fpmap = iter_checkpoint(
-        _spread(docs).select(
-            F.col(id_col), content_hash(F.col(text_col)).alias("__fp")
-        )
-    )
-    # one group row per distinct text: representative = min member id,
-    # cnt = multiplicity (map-side combinable agg of two tiny columns)
-    groups = fpmap.groupBy("__fp").agg(
-        F.min(id_col).alias("__rep_id"), F.count(F.lit(1)).alias("cnt")
-    )
-    # tokenize exactly as the direct path does (one regexp pass, one
-    # (id, term) shuffle), then keep only REPRESENTATIVE postings: the
-    # rep's postings stand for its whole group. This join is the collapse
-    # point — everything downstream is sized by distinct content. The
-    # collapsed index is materialized once (same no-exchange-reuse
-    # rationale as the direct path).
-    tok = _tokens(_spread(docs), text_col, id_col, "term")
-    tf_all = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = iter_checkpoint(
-        tf_all.join(
-            groups.select(F.col("__rep_id").alias(id_col), "__fp", "cnt"),
-            id_col,
-        ).select("__fp", "term", "tf", "cnt")
-    )
-    # corpus stats weight each representative by its multiplicity so
-    # n_docs / avgdl / df still describe the FULL corpus. dl is
-    # materialized for the same reason as the direct path: stats and
-    # the scoring join both consume it.
-    dl = iter_checkpoint(
-        tf.groupBy("__fp").agg(
-            F.sum("tf").alias("dl"), F.first("cnt").alias("cnt")
-        )
-    )
-    stats = dl.agg(
-        F.sum("cnt").alias("n_docs"),
-        (
-            F.sum(F.col("dl").cast("double") * F.col("cnt"))
-            / F.sum(F.col("cnt").cast("double"))
-        ).alias("avgdl"),
-    )
-    # query side: duplicate probes collapse to distinct fingerprints,
-    # scored once; qids re-attach after the per-rep prune
-    qbase = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        content_hash(F.col(query_text_col)).alias("__qfp"),
-        normalize_text(F.col(query_text_col)).alias("__qnorm"),
-    )
-    qmap = qbase.select("__qfp", "query_id")
-    qterms = (
-        qbase.select("__qfp", "__qnorm")
-        .distinct()
-        .select("__qfp", F.explode(F.split(F.col("__qnorm"), " ")).alias("term"))
-        .filter(F.col("term") != "")
-        .distinct()
-    )
-    # document frequency only for query-matching terms (same pre-filter
-    # rationale as the direct path; multiplicity-weighted df per
-    # surviving term still counts the FULL corpus — result-exact)
-    dfreq = (
-        tf.join(F.broadcast(qterms.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.sum("cnt").alias("df"))
-    )
-    # the SCORING slice is rep-clustered in the broadcast regime so the
-    # (__qfp, __fp) score aggregation runs exchange-free — same layout
-    # as the direct path, keyed on the fingerprint (dfreq stays on the
-    # direct tf probe: see the direct path).
-    from datamine_v2_0_spark.operators.dedup import _cluster_pair_stream
-
-    pruned = _cluster_pair_stream(
-        tf.join(F.broadcast(qterms.select("term").distinct()), "term"),
-        "__fp",
-    )
-    idf = dfreq.crossJoin(F.broadcast(stats)).select(
-        "term",
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        ).alias("idf"),
-        "avgdl",
-    )
-    # fan out per query AFTER the prune/cluster (see pruned above)
-    matched = pruned.join(F.broadcast(qterms), "term")
-    scored = (
-        matched.join(idf, "term")
-        .join(dl.select("__fp", "dl"), "__fp")
-        .select("__qfp", "__fp", "cnt", _bm25_score(k1, b).alias("score"))
-        # cnt rides as a grouping key (functionally dependent on __fp,
-        # so groups are unchanged): no first() agg buffer
-        .groupBy("__qfp", "__fp", "cnt")
-        .agg(F.round(F.sum("score"), round_to).alias("score"))
-        .select("__qfp", "__fp", "score", "cnt")
-    )
-    # exact per-rep prune before fan-out: a representative can only reach
-    # the final top-k if its score ties or beats the score at cumulative
-    # member count k (ties kept, so doc_id tiebreaks stay exact). Window
-    # is per-query over its candidate reps — bounded, never a global
-    # single-task window.
-    w_rep = Window.partitionBy("__qfp").orderBy(F.desc("score"), F.col("__fp"))
-    cum_before = F.coalesce(
-        F.sum("cnt").over(w_rep.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0),
-    )
-    cand = scored.withColumn("__cum_before", cum_before)
-    # kth-boundary score as a second window over the SAME per-query
-    # partition (not a self-join — that would evaluate the whole scored
-    # subtree twice; plan-audited)
-    kth = F.min(
-        F.when(F.col("__cum_before") < k, F.col("score"))
-    ).over(Window.partitionBy("__qfp"))
-    kept = (
-        cand.withColumn("__kth_score", kth)
-        .filter(F.col("score") >= F.col("__kth_score"))
-        .select("__qfp", "__fp", "score")
-    )
-    # fan back out to member doc_ids and rank exactly as the direct path
-    fanned = (
-        kept.join(fpmap, "__fp")
-        .join(qmap, "__qfp")
-        .select("query_id", F.col(id_col).alias("doc_id"), "score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("doc_id").asc())
-    return (
-        fanned.withColumn("rank", F.row_number().over(w))
+        scored.select("query_id", "doc_id", "score")
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 

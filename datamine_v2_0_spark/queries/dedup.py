@@ -6,40 +6,11 @@ lines); registry order lives in contract.py and is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datamine_v2_0_spark.functions.scalars import (
-    bool_from_text,
-    clamp,
-    device_date,
-    json_string_literal,
-    null_if_outside,
-    parse_position,
-    pg_timestamptz_text,
-    raw_event_hash_id,
-    validate_json,
-)
-from datamine_v2_0_spark.operators import aggregates as agg
-from datamine_v2_0_spark.operators import bpe
 from datamine_v2_0_spark.operators import dedup as dd
-from datamine_v2_0_spark.operators import filters as flt
-from datamine_v2_0_spark.operators import joins as jn
-from datamine_v2_0_spark.operators import sets as st
-from datamine_v2_0_spark.operators import similarity as sim
-from datamine_v2_0_spark.operators import smoothing as sm
 from datamine_v2_0_spark.operators import text as tx
-from datamine_v2_0_spark.operators import windows as win
-from datamine_v2_0_spark.operators.joins import resolve_priority
-from datamine_v2_0_spark.pipeline import cpd
-from datamine_v2_0_spark.pipeline.curation import curate_corpus
-from datamine_v2_0_spark.pipeline.features import build_features
-from datamine_v2_0_spark.pipeline.silver import silver_transform
-from datamine_v2_0_spark.queries.base import (  # noqa: F401
-    _PG_TS_SQL,
-    _events_window,
-    _t,
-)
+from datamine_v2_0_spark.queries.base import _t
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -239,11 +210,12 @@ def q_dedup_groups(spark, sf_dir):
     closure over the same exact-Jaccard pair set. Every doc appears
     once; group_id = min doc_id of its component (own id if unpaired).
 
-    When the Jaccard operator collapses exact duplicates, the components
-    run over representative pairs plus one star edge (representative,
-    member) per member of a paired representative, never over the
-    fanned-out member pairs: a g-copy group costs g-1 edges instead of
-    g(g-1)/2, with the same components (operators/dedup._star_edges).
+    The Jaccard operator routes each heavy exact-duplicate group through
+    its representative, so the components run over the routed pairs
+    plus one star edge (representative, member) per member of a paired
+    representative, never over the fanned-out member pairs: a g-copy
+    group costs g-1 edges instead of g(g-1)/2, with the same components
+    (operators/dedup._star_edges).
 
     Side effect: persists the result under an (applicationId, sf_dir)
     memo so

@@ -6,40 +6,8 @@ lines); registry order lives in contract.py and is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from datamine_v2_0_spark.functions.scalars import (
-    bool_from_text,
-    clamp,
-    device_date,
-    json_string_literal,
-    null_if_outside,
-    parse_position,
-    pg_timestamptz_text,
-    raw_event_hash_id,
-    validate_json,
-)
-from datamine_v2_0_spark.operators import aggregates as agg
-from datamine_v2_0_spark.operators import bpe
-from datamine_v2_0_spark.operators import dedup as dd
-from datamine_v2_0_spark.operators import filters as flt
-from datamine_v2_0_spark.operators import joins as jn
-from datamine_v2_0_spark.operators import sets as st
 from datamine_v2_0_spark.operators import similarity as sim
-from datamine_v2_0_spark.operators import smoothing as sm
-from datamine_v2_0_spark.operators import text as tx
-from datamine_v2_0_spark.operators import windows as win
-from datamine_v2_0_spark.operators.joins import resolve_priority
-from datamine_v2_0_spark.pipeline import cpd
-from datamine_v2_0_spark.pipeline.curation import curate_corpus
-from datamine_v2_0_spark.pipeline.features import build_features
-from datamine_v2_0_spark.pipeline.silver import silver_transform
-from datamine_v2_0_spark.queries.base import (  # noqa: F401
-    _PG_TS_SQL,
-    _events_window,
-    _t,
-)
+from datamine_v2_0_spark.queries.base import _t
 
 
 def q_sim_cosine_topk(spark, sf_dir):

@@ -48,7 +48,6 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from datamine_v2_0_spark.sources.jdbc_io import read_jdbc_partitioned  # noqa: F401
 
 # Spark type -> Postgres DDL. Timestamps map to TIMESTAMPTZ (the session
 # timezone is UTC, so instants round-trip; the reference's schema is

@@ -2,9 +2,9 @@
 
 Lint: no other module cuts lineage itself, the cut takes no option, and
 no operator carries a ``reliable`` flag — durability comes from the
-session's checkpoint directory. Budget: the number of cuts each registry
-query makes while it is built is pinned, so every build-time job a cut
-launches is documented here.
+session's checkpoint directory. Budget: the cuts and the DataFrame
+actions each registry query issues while it is built are pinned, so
+every build-time job is documented here.
 """
 
 from __future__ import annotations
@@ -92,66 +92,96 @@ def test_cut_is_eager_and_durable_only_with_a_checkpoint_dir(
     assert local.count() == durable.count() == 10
 
 
-# Cuts (iter_checkpoint calls) made while each registry query is BUILT,
-# i.e. during fn(spark, sf) at sf0.001 with the memo caches cleared.
-# Every cut is one eager job before the DataFrame exists; a query not
-# listed makes none. Edit this table when a count moves, in either
-# direction, and say why in CHANGES.md.
-_CUTS = {
-    "agg_fraction": 1,  # grouped counts read twice
-    "agg_mannwhitney": 2,  # _dist_prefix_sums: input + buckets
-    "dedup_against": 1,  # cross-side candidates
-    "dedup_canonical": 3,  # posting table + CC edges + one CC block
-    "dedup_containment": 1,  # posting table
-    "dedup_groups": 3,  # posting table + CC edges + one CC block
-    "dedup_jaccard": 1,  # LSH candidates
-    "dedup_jaccard_inverted": 1,  # posting table
-    "dedup_minhash_lsh": 1,  # LSH candidates
-    "dedup_substring": 1,  # k-gram posting table
-    "dedup_substring_strip": 1,  # k-gram posting table
-    "graph_pagerank": 4,  # edges, nodes, edge+degree, ranks at iter 3
-    "scalar_quantile_bins": 2,  # _dist_prefix_sums: input + buckets
-    "stat_auc": 2,  # _dist_prefix_sums: input + buckets
-    "stat_chi2": 1,  # observed cells
-    "stat_kappa": 1,  # label-pair cells
-    "stat_ks": 2,  # _dist_prefix_sums: input + buckets
-    "text_bm25": 2,  # BM25 TF index + doc lengths
-    "text_lm_bigram": 1,  # bigram counts
-    "text_retrieval_eval": 2,  # BM25 TF index + doc lengths
-    "text_rrf": 2,  # BM25 TF index + doc lengths
-    "text_tfidf": 1,  # TF index
-    "val_candidate_clustering": 1,  # truth windows with stable __wid
+# Actions each registry query issues while it is BUILT, i.e. during
+# fn(spark, sf) at sf0.001 with the memo caches cleared: lineage cuts
+# (iter_checkpoint: one eager job each) and DataFrame actions (first,
+# take, collect, count, toPandas), an action that another one issues
+# internally (first -> take -> collect) counted once. A query not listed
+# issues none. Edit this table when a count moves, in either direction,
+# and say why in CHANGES.md.
+_ACTIONS = {
+    "agg_fraction": {"cut": 1},  # grouped counts read twice
+    "agg_mannwhitney": {"cut": 2},  # _dist_prefix_sums: input + buckets
+    "agg_tdigest": {"count": 1},  # non-null values size the centroid cap
+    "dedup_against": {"cut": 3},  # member map per side + cross-side candidates
+    "dedup_canonical": {"cut": 4},  # member map + posting table + CC edges + one CC block
+    "dedup_containment": {"cut": 2},  # member map + posting table
+    "dedup_embedding": {"cut": 1},  # member map
+    "dedup_groups": {"cut": 4},  # member map + posting table + CC edges + one CC block
+    "dedup_jaccard": {"cut": 2},  # member map + LSH candidates
+    "dedup_jaccard_inverted": {"cut": 2},  # member map + posting table
+    "dedup_minhash_lsh": {"cut": 2},  # member map + LSH candidates
+    "dedup_semantic": {"collect": 1},  # initial k-means centroids
+    "dedup_substring": {"cut": 1},  # k-gram posting table
+    "dedup_substring_strip": {"cut": 1},  # k-gram posting table
+    "graph_pagerank": {"cut": 4},  # edges, nodes, edge+degree, ranks at iter 3
+    "join_bloom": {"collect": 1},  # bloom-filter words of the build keys
+    "scalar_quantile_bins": {"cut": 2},  # _dist_prefix_sums: input + buckets
+    "sim_ivf_topk": {"collect": 1, "take": 1},  # cell-count probe + centroid sample
+    "sim_pq_topk": {"collect": 2, "count": 1, "take": 1},  # rerank depth, codebook sample, query bound + rows
+    "stat_auc": {"cut": 2},  # _dist_prefix_sums: input + buckets
+    "stat_chi2": {"cut": 1},  # observed cells
+    "stat_kappa": {"cut": 1},  # label-pair cells
+    "stat_ks": {"cut": 2},  # _dist_prefix_sums: input + buckets
+    "text_bm25": {"cut": 3},  # member map + BM25 TF index + doc lengths
+    "text_bpe": {"collect": 1},  # word frequencies for merge training
+    "text_decontaminate_embed": {"collect": 1, "count": 1},  # eval-set size + vectors
+    "text_lm_bigram": {"cut": 1},  # bigram counts
+    "text_retrieval_eval": {"cut": 3},  # member map + BM25 TF index + doc lengths
+    "text_rrf": {"cut": 3},  # member map + BM25 TF index + doc lengths
+    "text_tfidf": {"cut": 1},  # TF index
+    "val_candidate_clustering": {"count": 1, "cut": 1},  # candidate total; truth windows with stable __wid
+}
+
+# DataFrame methods counted, by the name the table uses
+_COUNTED = {
+    "localCheckpoint": "cut", "checkpoint": "cut", "first": "first",
+    "take": "take", "collect": "collect", "count": "count",
+    "toPandas": "toPandas",
 }
 
 
-def test_build_time_cut_budget(spark, sf_dir, monkeypatch):
+def build_time_actions(spark, sf_dir, patch) -> dict:
+    """{query: {action: n}} for every registry query that issues an
+    action while it is built; ``patch(obj, name, value)`` installs the
+    counting wrappers (pytest's monkeypatch.setattr)."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     from datamine_v2_0_spark.contract import QUERIES
-    from datamine_v2_0_spark.operators import dedup as dd
     from datamine_v2_0_spark.queries import dedup as qd
 
-    if not Path(sf_dir).exists():
-        pytest.skip(f"no test data at {sf_dir}")
-    assert set(_CUTS) <= set(QUERIES), set(_CUTS) - set(QUERIES)
-    cuts = [0]
-    for meth in ("localCheckpoint", "checkpoint"):
+    seen: list[str] = []
+    depth = [0]
+    for meth, kind in _COUNTED.items():
         real = getattr(ClassicDataFrame, meth)
 
-        def counting(self, *args, _real=real, **kwargs):
-            cuts[0] += 1
-            return _real(self, *args, **kwargs)
+        def counting(self, *args, _real=real, _kind=kind, **kwargs):
+            if depth[0] == 0:
+                seen.append(_kind)
+            depth[0] += 1
+            try:
+                return _real(self, *args, **kwargs)
+            finally:
+                depth[0] -= 1
 
-        monkeypatch.setattr(ClassicDataFrame, meth, counting)
+        patch(ClassicDataFrame, meth, counting)
     got = {}
     try:
         for name, (fn, _sql) in QUERIES.items():
             qd.clear_groups_cache()
-            dd.clear_dup_stats_cache()
-            before = cuts[0]
+            del seen[:]
             fn(spark, sf_dir)
-            if cuts[0] != before:
-                got[name] = cuts[0] - before
+            if seen:
+                got[name] = {k: seen.count(k) for k in sorted(set(seen))}
     finally:
         qd.clear_groups_cache()
-    assert got == _CUTS
+    return got
+
+
+def test_build_time_cut_budget(spark, sf_dir, monkeypatch):
+    from datamine_v2_0_spark.contract import QUERIES
+
+    if not Path(sf_dir).exists():
+        pytest.skip(f"no test data at {sf_dir}")
+    assert set(_ACTIONS) <= set(QUERIES), set(_ACTIONS) - set(QUERIES)
+    assert build_time_actions(spark, sf_dir, monkeypatch.setattr) == _ACTIONS

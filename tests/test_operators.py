@@ -1892,128 +1892,16 @@ def _dup_corpus(spark, group_sizes):
 def test_dup_blowup_exact(spark):
     # Σ|g|²/n: groups [4,1,1,1,1] over n=8 -> (16+4)/8 = 2.5
     df = _dup_corpus(spark, [4, 1, 1, 1, 1])
-    assert dd._dup_stats(df, "text")[1] == pytest.approx(2.5)
+    assert dd.dup_stats(df, "text")[1] == pytest.approx(2.5)
     # unique corpus -> 1.0
     uniq = _dup_corpus(spark, [1] * 6)
-    assert dd._dup_stats(uniq, "text")[1] == pytest.approx(1.0)
+    assert dd.dup_stats(uniq, "text")[1] == pytest.approx(1.0)
 
 
 def test_dup_stats_exact(spark):
-    n, blowup, cmax = dd._dup_stats(_dup_corpus(spark, [4, 1, 1, 1, 1]), "text")
+    n, blowup, cmax = dd.dup_stats(_dup_corpus(spark, [4, 1, 1, 1, 1]), "text")
     assert (n, cmax) == (8, 4)
     assert blowup == pytest.approx(2.5)
-
-
-def test_pair_collapse_auto_decision(spark):
-    # the scale-aware crossover: calibrated anchor (n=5000, P=32 ->
-    # ~1500, the measured h20/h40 bracket midpoint), falls as sqrt(1/P)
-    # when the cluster grows, floored for trivial corpora
-    assert dd._pair_cmax_threshold(5000, 32) == pytest.approx(1500, rel=0.01)
-    assert dd._pair_cmax_threshold(5000, 128) == pytest.approx(750, rel=0.01)
-    assert dd._pair_cmax_threshold(5, 32) == dd.PAIR_COLLAPSE_CMAX_MIN
-    # mega-group corpus past an explicit crossover: auto must collapse
-    # even though the docs-per-distinct ratio is small
-    hot = _dup_corpus(spark, [80] + [1] * 120)
-    assert dd._resolve_pair_collapse(hot, "text", "auto", cmax_threshold=64)
-    assert not dd._resolve_pair_collapse(hot, "text", "auto", cmax_threshold=81)
-    # default auto path end-to-end: one group past sqrt(beta*n/P)
-    thr = dd._pair_cmax_threshold(5000, spark.sparkContext.defaultParallelism)
-    if thr < 4500:  # feasible only when the group fits the corpus
-        g = int(thr) + 1
-        big = _dup_corpus(spark, [g] + [1] * (5000 - g))
-        assert dd._resolve_pair_collapse(big, "text", "auto")
-    # uniform 4x duplication (ratio 4.0, blowup 4, cmax 4): the pair
-    # family must stay direct — in-bucket verify parallelizes across
-    # small groups; the collapse fan-out joins would cost more
-    uni = _dup_corpus(spark, [4] * 50)
-    assert not dd._resolve_pair_collapse(uni, "text", "auto")
-    # posting family: a uniform 8x corpus must collapse (direct
-    # self-join measured 4.7x slower there); uniform 2x stays direct
-    # (measured 2-3x faster direct)
-    uni8 = _dup_corpus(spark, [8] * 50)
-    assert dd._resolve_posting_collapse(uni8, "text", "auto")
-    assert not dd._resolve_posting_collapse(
-        _dup_corpus(spark, [2] * 50), "text", "auto"
-    )
-    # posting TRIMMED rule: one mega group with unique remainder has
-    # huge raw blowup but ~zero trimmed blowup -> direct (its pairs
-    # spread over its own shingle keys; measured 2x faster direct)
-    hot_only = _dup_corpus(spark, [100] + [1] * 200)
-    assert not dd._resolve_posting_collapse(hot_only, "text", "auto")
-
-
-
-
-def test_dup_stats_probe_cache_and_supplied_stats(spark):
-    """The probe-sharing contract (one probe per corpus in composed
-    flows): repeat probes on a semantically identical frame hit the
-    session cache, and a caller-supplied stats tuple skips the probe
-    entirely — DUP_STATS_PROBE_RUNS counts executed scans only."""
-    df = _dup_corpus(spark, [3, 2, 1, 1])
-    dd.clear_dup_stats_cache()
-    before = dd.DUP_STATS_PROBE_RUNS
-    s1 = dd.dup_stats(df, "text")
-    s2 = dd.dup_stats(df, "text")
-    assert s1 == s2 == (7, pytest.approx((9 + 4 + 1 + 1) / 7), 3)
-    assert dd.DUP_STATS_PROBE_RUNS == before + 1
-    # auto resolution with supplied stats: zero new probe scans
-    assert not dd._resolve_pair_collapse(df, "text", "auto", stats=s1)
-    assert not dd._resolve_posting_collapse(df, "text", "auto", stats=s1)
-    assert dd.DUP_STATS_PROBE_RUNS == before + 1
-    # a different corpus is a different plan -> a fresh probe
-    dd.dup_stats(_dup_corpus(spark, [5, 1]), "text")
-    assert dd.DUP_STATS_PROBE_RUNS == before + 2
-
-
-def test_dup_stats_cache_overwrite_staleness(spark, tmp_path):
-    """The documented cache hazard (round-11 verdict #4): overwriting
-    the files behind an identical plan serves stale probe stats until
-    clear_dup_stats_cache() — the exact flow the consuming operators'
-    docstrings now point at."""
-    path = str(tmp_path / "docs.parquet")
-    _dup_corpus(spark, [1] * 20).write.mode("overwrite").parquet(path)
-    dd.clear_dup_stats_cache()
-    first = dd.dup_stats(spark.read.parquet(path), "text")
-    assert first[2] == 1  # all unique
-    # overwrite with a duplicate-heavy corpus behind the SAME plan
-    _dup_corpus(spark, [15, 5]).write.mode("overwrite").parquet(path)
-    stale = dd.dup_stats(spark.read.parquet(path), "text")
-    assert stale == first  # cache cannot see the overwrite
-    dd.clear_dup_stats_cache()
-    fresh = dd.dup_stats(spark.read.parquet(path), "text")
-    assert fresh[0] == 20 and fresh[2] == 15
-
-
-def test_auto_operators_share_one_probe_per_corpus(spark):
-    """The plan-keyed cache is the only probe-sharing mechanism: an auto
-    operator's first call runs exactly one probe scan per frame it
-    probes, and a repeat call — or another operator over the SAME
-    corpus — runs none."""
-    from datamine_v2_0_spark.operators.retrieval import bm25_topk
-
-    df = _dup_corpus(spark, [2] * 10)
-    ref = _dup_corpus(spark, [3] * 4)
-    docs = _dup_corpus(spark, [1] * 12)
-    queries = spark.createDataFrame(
-        [(1, "group 0 body"), (2, "alpha beta gamma")], "qid long, qtext string"
-    )
-    dd.clear_dup_stats_cache()
-
-    def probes(build) -> int:
-        before = dd.DUP_STATS_PROBE_RUNS
-        build()
-        return dd.DUP_STATS_PROBE_RUNS - before
-
-    assert probes(lambda: dd.minhash_near_dup_pairs(df, "text", "doc_id").count()) == 1
-    assert probes(lambda: dd.jaccard_pairs_inverted(df, "text", "doc_id").count()) == 0
-    # dedup_against probes the pooled new ∪ ref corpus: one frame
-    against = lambda: dd.dedup_against(df, ref, "text", "doc_id")  # noqa: E731
-    assert probes(against) == 1
-    assert probes(against) == 0
-    # bm25 probes the doc side and the query side: two frames
-    bm25 = lambda: bm25_topk(docs, queries, "text", "doc_id", "qtext", "qid")  # noqa: E731
-    assert probes(bm25) == 2
-    assert probes(bm25) == 0
 
 
 def test_collapsed_dedup_reliable_checkpoint_parity(spark, durable_checkpoints):
@@ -2111,6 +1999,88 @@ def test_collapse_null_inputs_match_direct(spark, op, mode):
     assert got
     assert all(a is not None and b is not None for a, b, *_ in got)
     assert all(a != b for a, b, *_ in got)
+
+
+_HEAVY = "one viral text copied many times over the whole crawl today"
+
+
+def _mixed_text_corpus(spark):
+    """One heavy group (40 copies, above both families' routing size,
+    one copy with a NULL id and one upper-cased), light duplicate
+    groups of 2 and 3 copies, a near-duplicate of the heavy text,
+    singletons and NULL ids."""
+    rows = [(i, _HEAVY) for i in range(1, 39)]
+    rows += [(39, _HEAVY.upper()), (None, _HEAVY), (50, _HEAVY + " again")]
+    rows += [(60, _QUAD), (61, _QUAD), (62, _QUAD), (63, _QUAD + " today")]
+    rows += [(70, _BASE), (71, _BASE), (None, _BASE + " x")]
+    rows += [(80 + i, f"singleton {i} words alpha{i} beta{i} gamma{i} delta") for i in range(4)]
+    rows += [(90, None), (None, None)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _mixed_vec_corpus(spark):
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    hv, lv = rng.standard_normal(16), rng.standard_normal(16)
+    vec = lambda x: [float(t) for t in x]  # noqa: E731
+    rows = [(i, vec(hv)) for i in range(1, 40)] + [(None, vec(hv))]
+    rows += [(50, vec(hv + rng.standard_normal(16) * 0.01))]
+    rows += [(60, vec(lv)), (61, vec(lv)), (62, vec(lv))]
+    rows += [(70 + i, vec(rng.standard_normal(16))) for i in range(4)]
+    rows += [(80, [0.0] * 16), (81, [0.0] * 16), (90, None), (None, None)]
+    return spark.createDataFrame(rows, "doc_id long, embedding array<float>")
+
+
+def _mixed_bm25(s, m):
+    from datamine_v2_0_spark.operators.retrieval import bm25_topk
+
+    queries = s.createDataFrame(
+        [(1, "viral text crawl"), (2, "viral text crawl"), (3, "rivers hills"),
+         (4, "singleton alpha1"), (None, "viral")],
+        "qid long, qtext string",
+    )
+    return bm25_topk(
+        _mixed_text_corpus(s), queries, "text", "doc_id", "qtext", "qid",
+        k=5, duplicate_collapse=m,
+    )
+
+
+_MIXED_OPS = {
+    "jaccard": lambda s, m: dd.jaccard_pairs_inverted(
+        _mixed_text_corpus(s), "text", "doc_id", duplicate_collapse=m),
+    "containment": lambda s, m: dd.containment_pairs_inverted(
+        _mixed_text_corpus(s), "text", "doc_id", duplicate_collapse=m),
+    "minhash": lambda s, m: dd.minhash_near_dup_pairs(
+        _mixed_text_corpus(s), "text", "doc_id", num_hashes=32, bands=8,
+        duplicate_collapse=m),
+    "dedup_against": lambda s, m: dd.dedup_against(
+        _mixed_text_corpus(s),
+        s.createDataFrame(
+            [(100, _HEAVY), (101, _QUAD)] + [(102 + i, _BASE) for i in range(40)],
+            "doc_id long, text string"),
+        "text", "doc_id", threshold=0.5, duplicate_collapse=m),
+    "bm25": _mixed_bm25,
+    "embedding": lambda s, m: dd.embedding_neardup_pairs(
+        _mixed_vec_corpus(s), "embedding", "doc_id", dim=16, num_planes=16,
+        bands=8, duplicate_collapse=m),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_MIXED_OPS))
+def test_routed_plan_mixed_corpus_same_rows_in_every_mode(spark, op):
+    """One plan per operator: ``duplicate_collapse`` only sets the group
+    size H from which a group routes through its representative. On a
+    corpus with a heavy group (routed under auto and always), light
+    duplicate groups (routed only under always), singletons and NULL
+    ids, every H gives the same rows."""
+    run = lambda m: sorted(map(tuple, _MIXED_OPS[op](spark, m).collect()), key=repr)  # noqa: E731
+    never = run("never")
+    assert never
+    assert run("auto") == never
+    assert run("always") == never
+    plan = _MIXED_OPS[op](spark, "auto")._jdf.queryExecution().analyzed().toString()
+    assert "__rep" in plan
 
 
 @pytest.mark.parametrize(
@@ -2284,27 +2254,6 @@ def test_pq_rerank_duplicate_collapse_semantics(spark):
         )
 
 
-def test_containment_cmax_ceiling_is_lower_than_jaccard(spark):
-    """The round-10 h60/h80 band bracket: at (n=5000, cmax=4000,
-    trimmed ~0.2) containment must auto-collapse while jaccard stays
-    direct; at cmax=3000 both stay direct. Decision checked through
-    the supplied-stats path (no probe scan)."""
-    inside = (5000, 3200.2, 4000)   # the measured h80 composition
-    below = (5000, 1800.4, 3000)    # the measured h60 composition
-    assert dd._resolve_posting_collapse(
-        None, "text", "auto", stats=inside,
-        cmax_ceiling=dd.CONTAINMENT_COLLAPSE_CMAX,
-    )
-    assert not dd._resolve_posting_collapse(
-        None, "text", "auto", stats=inside,
-    )  # jaccard/bm25 ceiling: direct measured winning at cmax 4000
-    assert not dd._resolve_posting_collapse(
-        None, "text", "auto", stats=below,
-        cmax_ceiling=dd.CONTAINMENT_COLLAPSE_CMAX,
-    )
-    assert 3000 < dd.CONTAINMENT_COLLAPSE_CMAX < 4000
-
-
 def test_cosine_topk_duplicate_collapse_exact_with_ties(spark):
     """Distinct-vector collapse for the EXACT tier: the group-cover
     bound must hold under rounded-score ties ACROSS groups (two
@@ -2420,45 +2369,12 @@ def test_embedding_neardup_duplicate_collapse_parity(spark):
     assert (0, 1) in got and (10, 11) in got
     assert (30, 31) not in got
     assert (0, 20) in got  # near-dup of the mass vector, via rep fan-out
-    # auto on this tiny fixture (cmax 12 < the 64-floor threshold)
-    # picks direct and must equal both plans
+    # auto routes the 12-copy group as always does and must equal both
+    # plans
     auto = sorted(map(tuple, dd.embedding_neardup_pairs(
         emb, "embedding", "vec_id", duplicate_collapse="auto", **kw
     ).collect()))
     assert auto == direct
-    # the calibrated affine crossover (round-11 three-n fit, see the
-    # EMBED_COLLAPSE_INTERCEPT block): the measured sf0.1 bracket is
-    # direct at g=300, collapse at 500 (n=2000, P=32 -> threshold ~358)
-    thr = dd._pair_cmax_threshold(
-        2000, 32, dd.EMBED_COLLAPSE_BETA, dd.EMBED_COLLAPSE_INTERCEPT
-    )
-    assert 300 < thr < 500
-    # and the other two measured brackets pin the affine form's n-shape
-    thr500 = dd._pair_cmax_threshold(
-        500, 32, dd.EMBED_COLLAPSE_BETA, dd.EMBED_COLLAPSE_INTERCEPT
-    )
-    assert 200 < thr500 < 300
-    thr8k = dd._pair_cmax_threshold(
-        8000, 32, dd.EMBED_COLLAPSE_BETA, dd.EMBED_COLLAPSE_INTERCEPT
-    )
-    assert 500 < thr8k < 800
-    # below the calibration parallelism the n/P premise inverts (the
-    # P=8 band measured collapse winning down to g=400 while n/P
-    # predicts 632): P clamps up to PAIR_CALIBRATION_P, so a P=8
-    # session keeps the P=32 threshold (~358) and all four measured
-    # P=8 cells (collapse wins at 400/600/800/1000) resolve correctly
-    thr_p8 = dd._pair_cmax_threshold(
-        2000, 8, dd.EMBED_COLLAPSE_BETA, dd.EMBED_COLLAPSE_INTERCEPT
-    )
-    assert thr_p8 == thr and thr_p8 < 400
-    assert dd._resolve_pair_collapse(
-        None, "embedding", "auto", cmax_threshold=thr,
-        stats=(2000, 180.0, 600),
-    )
-    assert not dd._resolve_pair_collapse(
-        None, "embedding", "auto", cmax_threshold=thr,
-        stats=(2000, 50.0, 300),
-    )
     with pytest.raises(ValueError):
         dd.embedding_neardup_pairs(
             emb, "embedding", "vec_id", dim=16, duplicate_collapse="bogus"

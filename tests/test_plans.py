@@ -258,6 +258,7 @@ def test_pair_stream_clustering_removes_pair_exchange(spark):
     # the stream-side repartition is the ONLY hashpartitioning exchange,
     # keyed on the doc id — no exchange keyed on the pair alias columns
     assert "Exchange hashpartitioning(doc_id" in plan, plan
+    assert "REPARTITION_BY_COL" in plan, plan
     assert "Exchange hashpartitioning(id_a" not in plan, plan
     expect = {tuple(r) for r in pairs.collect()}
 
@@ -268,8 +269,10 @@ def test_pair_stream_clustering_removes_pair_exchange(spark):
             docs, "text", "doc_id", threshold=0.2
         )
         smj_plan = executed_plan(smj_pairs)
-        # no broadcast -> the gate must not add the doc-keyed shuffle
-        assert "Exchange hashpartitioning(doc_id" not in smj_plan, smj_plan
+        # no broadcast -> the gate must not add its doc-keyed
+        # repartition (the duplicate routing's anti join on doc_id
+        # shuffles in this regime too, as a join requirement)
+        assert "REPARTITION_BY_COL" not in smj_plan, smj_plan
         assert {tuple(r) for r in smj_pairs.collect()} == expect
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)

@@ -1,12 +1,13 @@
 """Reachability lint: every public library function is run by something.
 
 A static name closure over the package (AST only, no Spark). The roots
-are every top-level function in ``queries/``, ``pipeline/``,
-``streaming/``, ``session.py`` and ``contract.py``, plus every name that
-``perfbench/``, ``bench.py``, ``__spark_entry__.py`` and ``tools/``
-mention. From a reached definition the closure follows its Name,
-Attribute, import and identifier-string references to any top-level
-definition of that name in the package. Tests are not roots: a function
+are every top-level function in ``queries/``, ``streaming/``,
+``session.py`` and ``contract.py``, every name that ``perfbench/``,
+``bench.py``, ``__spark_entry__.py`` and ``tools/`` mention, and what
+module-level code runs on import; a ``pipeline/`` function is reached
+only through them. From a reached definition the closure follows its
+Name, Attribute, import and identifier-string references to any
+top-level definition of that name in the package. Tests are not roots: a function
 that only a test calls is a second implementation unless README's table
 "Surface the registry does not exercise" lists it with its reason.
 
@@ -25,7 +26,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "datamine_v2_0_spark"
-ROOT_DIRS = ("queries", "pipeline", "streaming")
+ROOT_DIRS = ("queries", "streaming")
 ROOT_MODULES = ("session.py", "contract.py")
 OUTSIDE_ROOTS = ("perfbench", "tools", "bench.py", "__spark_entry__.py")
 TABLE_HEADING = "## Surface the registry does not exercise"
@@ -55,9 +56,9 @@ def _definitions() -> tuple[dict[str, list[tuple[Path, ast.AST]]], frozenset[str
     """Top-level definitions by name, and the root references.
 
     A definition is a function, a class or a module-level assignment
-    target. Module-level code that is not a definition (imports, bare
-    statements) is part of no definition: re-exporting a name from an
-    ``__init__`` does not reach it.
+    target. Imports are part of no definition: re-exporting a name from
+    an ``__init__`` does not reach it. Other module-level statements run
+    when the module is imported, so what they reference is a root.
     """
     defs: dict[str, list[tuple[Path, ast.AST]]] = {}
     roots: set[str] = set()
@@ -77,7 +78,8 @@ def _definitions() -> tuple[dict[str, list[tuple[Path, ast.AST]]], frozenset[str
                             defs.setdefault(n.id, []).append((path, node))
                 if is_root:
                     roots |= _referenced(node)
-            elif is_root and not isinstance(node, (ast.Import, ast.ImportFrom)):
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                # module-level code that is no definition runs on import
                 roots |= _referenced(node)
     for name in OUTSIDE_ROOTS:
         p = ROOT / name

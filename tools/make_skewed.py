@@ -11,13 +11,12 @@ tie-handling, per-key window blowups, salting, duplicate-collapse and
 AQE skew-split paths all get exercised where they actually matter.
 
 The documents replica of sf0.01 has dup_stats (n, blowup, cmax) =
-(500, 80.6, 200): one 200-copy viral group and a trimmed blowup of
-0.6. That is below every ``duplicate_collapse='auto'`` threshold
-(posting trimmed 4.5, pair-family cmax ~474, dedup_against ~221), so
-auto picks the DIRECT plan for every collapse-capable query here
-(minhash, dedup_against, jaccard, containment, bm25, embedding). The
-collapsed plans are checked against the direct ones by the
-'always'/'never' parity tests.
+(500, 80.6, 200): one 200-copy viral group. It is larger than the
+``duplicate_collapse='auto'`` routing size (operators/dedup
+``_MIN_COPIES``), so every
+collapse-capable query (minhash, dedup_against, jaccard, containment,
+bm25, embedding) routes it through one representative, and a verify
+sweep here checks the routed plans against the oracle.
 
 Hot-slice membership is modulo-on-id (deterministic, layout-free):
 

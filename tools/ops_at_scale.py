@@ -131,16 +131,14 @@ def main() -> None:
     )
 
     if "--skip-minhash" not in sys.argv:
-        # pair-emitting near-dedup on the no-viral shape; auto runs the
-        # exact probe once and picks direct (cmax = 10 << the ~51k
-        # threshold). The generated texts are
+        # pair-emitting near-dedup on the no-viral shape; its 10-copy
+        # groups are below the pair family's routing size, so every doc
+        # stands for itself. The generated texts are
         # single 224-char tokens — unshingleable at word 3-grams — so
         # the pair test spaces them into 8-char words on the fly
         # (duplicates stay duplicates, uniques stay unique): the 10k
         # pockets of 10 then yield 10,000 x C(10,2) = 450,000 true
         # near-dup pairs for the banding + verify machinery to find.
-        dd.clear_dup_stats_cache()
-        probes0 = dd.DUP_STATS_PROBE_RUNS
         wordy = no_viral.withColumn(
             "text", F.regexp_replace("text", "(.{8})", "$1 ")
         )
@@ -153,7 +151,6 @@ def main() -> None:
         results["minhash_near_dup_5.88m"] = {
             "wall_sec": dt,
             "out_rows": n_pairs,
-            "probe_runs": dd.DUP_STATS_PROBE_RUNS - probes0,
         }
         print(f"minhash_near_dup_5.88m: {dt}s, {n_pairs} pairs", flush=True)
 

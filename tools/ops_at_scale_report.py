@@ -6,8 +6,8 @@ runs (out_rows 0: the generated texts were single unshingleable
 tokens) precede the post-fix row (43.9 s) — so a reader re-deriving
 throughput from the raw JSONL inherits a 9x error. This is the same
 artifact-reads-alone standard applied to SCALING.md (round 10) and
-EMBED_BAND.jsonl (round 11, tools/embed_band_report.py, whose
-supersession discipline this mirrors).
+EMBED_BAND.jsonl (round 11, by a band report tool since deleted,
+whose supersession discipline this mirrors).
 
 Supersession rules:
 - rows carrying an explicit ``commit`` field (round 13+, written by

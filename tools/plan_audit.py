@@ -33,13 +33,6 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-# max executed duplication-probe scans per query under a fresh cache
-# (see the probes column note): default 2 covers the bm25 family's
-# doc-corpus + probe-set pair; single-corpus dedup flows read 1 and a
-# regression to per-operator re-probing would push a composed flow
-# past 2.
-PROBES_OK: dict[str, int] = {}
-
 # queries whose BroadcastNestedLoopJoins are deliberate 1-row or
 # tiny-literal fold-ins (corpus stats, thresholds) — linear, not
 # all-pairs. Value = audited maximum; one more than audited is a flag.
@@ -448,22 +441,29 @@ def main() -> None:
 
         cls.localCheckpoint = recording_ckpt
 
-    spark = get_spark("plan_audit")
+    # duplication probes run while a query is BUILT: none since the
+    # collapse routing moved inside the plans; a probe coming back flags
     from datamine_v2_0_spark.operators import dedup as _dd
+
+    probes = [0]
+    real_dup_stats = _dd.dup_stats
+
+    def counting_dup_stats(*args, **kwargs):
+        probes[0] += 1
+        return real_dup_stats(*args, **kwargs)
+
+    _dd.dup_stats = counting_dup_stats
+
+    spark = get_spark("plan_audit")
 
     rows = []
     flags = []
     for name, (fn, _sql) in QUERIES.items():
         try:
             captured.clear()
-            # probe-count audit (round-11 verdict task 6): executed
-            # duplication-probe scans during plan
-            # construction under a FRESH cache — composed flows that
-            # share one probe per corpus show it here, not in prose
-            _dd.clear_dup_stats_cache()
-            probes0 = _dd.DUP_STATS_PROBE_RUNS
+            probes0 = probes[0]
             df = fn(spark, sf_dir)
-            n_probes = _dd.DUP_STATS_PROBE_RUNS - probes0
+            n_probes = probes[0] - probes0
             p = df._jdf.queryExecution().executedPlan().toString()
             n_sub = len(captured)
             if n_sub:
@@ -516,11 +516,10 @@ def main() -> None:
                 f"{name}: single-task ordered window x{stats['win1']} "
                 "(Exchange SinglePartition -> Sort -> Window)"
             )
-        if stats["probes"] > PROBES_OK.get(name, 2):
+        if stats["probes"]:
             flags.append(
-                f"{name}: {stats['probes']} duplication-probe scans under a "
-                "fresh cache — probe sharing broke (contract: one per corpus; "
-                "bm25-family reads 2 for doc corpus + probe set)"
+                f"{name}: {stats['probes']} duplication probes (dedup.dup_stats) "
+                "while the query is built"
             )
         if stats["ubc"] > BROADCAST_OK.get(name, 0):
             flags.append(
@@ -548,15 +547,10 @@ def main() -> None:
         "nonzero entries are audited bounded-relation stitches (the\n"
         "_dist_prefix_sums bucket-offsets window: exactly `buckets` rows\n"
         "by construction — see GLOBAL_WIN_OK). The probes column counts\n"
-        "EXECUTED duplication-probe scans during plan\n"
-        "construction under a fresh cache — the probe-sharing contract\n"
-        "is one scan per corpus per composed flow: dedup_minhash_lsh /\n"
-        "dedup_against / the jaccard family read 1, bm25-family queries\n"
-        "read 2 (doc corpus + probe set), and pipeline_curation reads 0\n"
-        "(its stages — quality gate, EXACT hash dedup, n-gram\n"
-        "decontamination — are not collapse-capable, so no probe exists\n"
-        "to share; the round-10 probe-sharing work lives in the\n"
-        "minhash/bm25 flows above).\n\n"
+        "the duplication probes (dedup.dup_stats) a query runs while it\n"
+        "is built; any is flagged: every collapse-capable operator routes\n"
+        "its duplicate groups inside its plan. tests/test_ckpt.py pins\n"
+        "every build-time action per query.\n\n"
         "| query | exch | bhj | smj | bnlj | cartesian | arrow-py | row-py | scans | ckpt-subplans | 1task-win | unbounded-bcast | probes |\n"
         "|---|---|---|---|---|---|---|---|---|---|---|---|---|\n"
     )

