@@ -516,16 +516,21 @@ def _rep_groups(
     non-NULL-id rows and ``members`` is None.
 
     One window over the thin (id, fingerprint) pairs counts the groups.
-    The member map is cut (one eager job): the routing, the self-pairs
-    and the fan-out read it in different jobs. The non-representative copies — heavy groups only, few on all
-    but duplicate-dominated corpora — leave by a left anti join, which
-    keeps ``df``'s size estimate; an outer join would estimate the
-    product of both sides and turn every later join of the operator
+    The member map is cut (one eager job), because the routing, the
+    self-pairs and the fan-out read it in different jobs. The same job
+    counts the member rows (``DataFrame.observe``). When there are none,
+    no group is heavy and the result is the unrouted plan of
+    ``min_copies=None``: no routing join, no fan-out, no extra job.
+
+    The non-representative copies of heavy groups leave by a left anti
+    join. It keeps ``df``'s size estimate; an outer join would estimate
+    the product of both sides and turn every later join of the operator
     into a sort-merge join."""
     df = df.filter(F.col(id_col).isNotNull())
     if min_copies is None:
         return df, None
     w = Window.partitionBy("__fp")
+    obs = Observation()
     members = iter_checkpoint(
         df.select(
             F.col(id_col).alias("__m"), fingerprint(F.col(key_col)).alias("__fp")
@@ -536,7 +541,10 @@ def _rep_groups(
             F.count(F.lit(1)).over(w).alias("__cnt"),
         )
         .filter(F.col("__cnt") >= min_copies)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
     )
+    if obs.get["n"] == 0:
+        return df, None
     copies = members.filter(F.col("__m") != F.col("__rep"))
     routed = df.join(copies.select(F.col("__m").alias(id_col)), id_col, "left_anti")
     return routed, members
@@ -752,7 +760,8 @@ def _jaccard_pairs_core(
 ) -> tuple[DataFrame, DataFrame | None]:
     """:func:`jaccard_pairs_inverted` before the member fan-out:
     ``(pairs, members)`` — pairs of the routed corpus, ``id_a <= id_b``,
-    and :func:`_rep_groups`' member map (None under "never")."""
+    and :func:`_rep_groups`' member map (None under "never" and when no
+    group is heavy)."""
     df, members = _rep_groups(
         _spread(df), text_col, id_col,
         _min_copies(duplicate_collapse),
@@ -774,7 +783,8 @@ def _star_edges(pairs: DataFrame, members: DataFrame | None) -> DataFrame:
     pair graph, in O(Σ|g|) rows instead of O(Σ|g|²).
 
     ``(pairs, members)`` is what :func:`_jaccard_pairs_core` returns;
-    ``pairs`` pass through unchanged when ``members`` is None ("never").
+    ``pairs`` pass through unchanged when ``members`` is None ("never",
+    or no heavy group).
     Otherwise the edges are every routed pair ``(r, s)`` with ``r < s``,
     plus one star edge ``(r, m)`` for each member ``m != r`` of a heavy
     representative ``r`` that appears in any pair, its self-pair

@@ -16,6 +16,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Driver JIT policy: two JIT compiler threads, one C1 and one C2
+# (HotSpot gives a 4-core host three, two of them C2). At the default, C2
+# is the largest consumer of a warm pass's CPU (5.6 s of a warm dedup_hot
+# pass's 11.1 s, local[4]), compiling the driver's planning and
+# code-generation stack, which a pass runs too few times to repay the
+# compile. With one C2 thread the C2 queue backs up during a pass, and
+# HotSpot's own tiered policy then raises the tier-4 thresholds with the
+# queue's length (Tier4LoadFeedback) and drops queued compiles whose
+# method went cold (TieredCompileTaskTimeout): lukewarm planner code stays
+# in C1, while code that stays hot, such as task loops, still reaches C2
+# at the default thresholds. Raising those thresholds outright (x3, x10)
+# cut about as much CPU but made bench.py's short queries slower, because
+# code that waits for C2 runs as profiled tier-3 code. SCALING.md "Driver
+# JIT policy" has the measurements (4-core host only).
+# spark.driver.defaultJavaOptions goes in front of a caller's
+# spark.driver.extraJavaOptions, so setting those keeps the policy. It
+# replaces a site-wide spark.driver.defaultJavaOptions (spark-defaults.conf:
+# GC logging, tmpdir, security properties); to keep those, pass them
+# together with this one as that option in extra_conf, which replaces the
+# policy. Like spark.driver.memory it takes effect only when get_spark
+# launches the JVM (a session started elsewhere, e.g. a notebook's, keeps
+# HotSpot's defaults), and it reaches the driver JVM only: local mode runs
+# its tasks there, cluster executors keep the defaults.
+DRIVER_JIT_OPTIONS = "-XX:CICompilerCount=2"
+
 
 def get_spark(
     app_name: str = "datamine_v2_0_spark",
@@ -131,6 +156,7 @@ def get_spark(
         # assigns (GeneratedIteratorForCodegenStage9 vs ...Stage15), so
         # identical code misses the cache whenever that numbering shifts.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
     )
     if driver_mem and SparkSession.getActiveSession() is None:
         builder = builder.config("spark.driver.memory", driver_mem)

@@ -2004,13 +2004,13 @@ def test_collapse_null_inputs_match_direct(spark, op, mode):
 _HEAVY = "one viral text copied many times over the whole crawl today"
 
 
-def _mixed_text_corpus(spark):
-    """One heavy group (40 copies, above both families' routing size,
-    one copy with a NULL id and one upper-cased), light duplicate
-    groups of 2 and 3 copies, a near-duplicate of the heavy text,
-    singletons and NULL ids."""
-    rows = [(i, _HEAVY) for i in range(1, 39)]
-    rows += [(39, _HEAVY.upper()), (None, _HEAVY), (50, _HEAVY + " again")]
+def _mixed_text_corpus(spark, copies=39):
+    """One big group (``copies`` non-NULL ids: by default 40 copies,
+    above both families' routing size; one copy with a NULL id and one
+    upper-cased), light duplicate groups of 2 and 3 copies, a
+    near-duplicate of the big group's text, singletons and NULL ids."""
+    rows = [(i, _HEAVY) for i in range(1, copies)]
+    rows += [(copies, _HEAVY.upper()), (None, _HEAVY), (50, _HEAVY + " again")]
     rows += [(60, _QUAD), (61, _QUAD), (62, _QUAD), (63, _QUAD + " today")]
     rows += [(70, _BASE), (71, _BASE), (None, _BASE + " x")]
     rows += [(80 + i, f"singleton {i} words alpha{i} beta{i} gamma{i} delta") for i in range(4)]
@@ -2018,13 +2018,13 @@ def _mixed_text_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _mixed_vec_corpus(spark):
+def _mixed_vec_corpus(spark, copies=39):
     import numpy as np
 
     rng = np.random.RandomState(7)
     hv, lv = rng.standard_normal(16), rng.standard_normal(16)
     vec = lambda x: [float(t) for t in x]  # noqa: E731
-    rows = [(i, vec(hv)) for i in range(1, 40)] + [(None, vec(hv))]
+    rows = [(i, vec(hv)) for i in range(1, copies + 1)] + [(None, vec(hv))]
     rows += [(50, vec(hv + rng.standard_normal(16) * 0.01))]
     rows += [(60, vec(lv)), (61, vec(lv)), (62, vec(lv))]
     rows += [(70 + i, vec(rng.standard_normal(16))) for i in range(4)]
@@ -2032,7 +2032,7 @@ def _mixed_vec_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, embedding array<float>")
 
 
-def _mixed_bm25(s, m):
+def _mixed_bm25(s, m, c=39):
     from datamine_v2_0_spark.operators.retrieval import bm25_topk
 
     queries = s.createDataFrame(
@@ -2041,46 +2041,56 @@ def _mixed_bm25(s, m):
         "qid long, qtext string",
     )
     return bm25_topk(
-        _mixed_text_corpus(s), queries, "text", "doc_id", "qtext", "qid",
+        _mixed_text_corpus(s, c), queries, "text", "doc_id", "qtext", "qid",
         k=5, duplicate_collapse=m,
     )
 
 
+# op -> fn(spark, duplicate_collapse, c): the operator over the mixed
+# corpus whose big group has c non-NULL ids (dedup_against's reference
+# side a group of c + 1)
 _MIXED_OPS = {
-    "jaccard": lambda s, m: dd.jaccard_pairs_inverted(
-        _mixed_text_corpus(s), "text", "doc_id", duplicate_collapse=m),
-    "containment": lambda s, m: dd.containment_pairs_inverted(
-        _mixed_text_corpus(s), "text", "doc_id", duplicate_collapse=m),
-    "minhash": lambda s, m: dd.minhash_near_dup_pairs(
-        _mixed_text_corpus(s), "text", "doc_id", num_hashes=32, bands=8,
+    "jaccard": lambda s, m, c=39: dd.jaccard_pairs_inverted(
+        _mixed_text_corpus(s, c), "text", "doc_id", duplicate_collapse=m),
+    "containment": lambda s, m, c=39: dd.containment_pairs_inverted(
+        _mixed_text_corpus(s, c), "text", "doc_id", duplicate_collapse=m),
+    "minhash": lambda s, m, c=39: dd.minhash_near_dup_pairs(
+        _mixed_text_corpus(s, c), "text", "doc_id", num_hashes=32, bands=8,
         duplicate_collapse=m),
-    "dedup_against": lambda s, m: dd.dedup_against(
-        _mixed_text_corpus(s),
+    "dedup_against": lambda s, m, c=39: dd.dedup_against(
+        _mixed_text_corpus(s, c),
         s.createDataFrame(
-            [(100, _HEAVY), (101, _QUAD)] + [(102 + i, _BASE) for i in range(40)],
+            [(100, _HEAVY), (101, _QUAD)] + [(102 + i, _BASE) for i in range(c + 1)],
             "doc_id long, text string"),
         "text", "doc_id", threshold=0.5, duplicate_collapse=m),
     "bm25": _mixed_bm25,
-    "embedding": lambda s, m: dd.embedding_neardup_pairs(
-        _mixed_vec_corpus(s), "embedding", "doc_id", dim=16, num_planes=16,
+    "embedding": lambda s, m, c=39: dd.embedding_neardup_pairs(
+        _mixed_vec_corpus(s, c), "embedding", "doc_id", dim=16, num_planes=16,
         bands=8, duplicate_collapse=m),
 }
 
 
-@pytest.mark.parametrize("op", sorted(_MIXED_OPS))
-def test_routed_plan_mixed_corpus_same_rows_in_every_mode(spark, op):
+@pytest.mark.parametrize(
+    "op,copies",
+    [pytest.param(op, 39, id=op) for op in sorted(_MIXED_OPS)]
+    + [pytest.param(op, dd._MIN_COPIES - 2, id=f"{op}-no_heavy") for op in sorted(_MIXED_OPS)],
+)
+def test_routed_plan_mixed_corpus_same_rows_in_every_mode(spark, op, copies):
     """One plan per operator: ``duplicate_collapse`` only sets the group
     size H from which a group routes through its representative. On a
     corpus with a heavy group (routed under auto and always), light
     duplicate groups (routed only under always), singletons and NULL
-    ids, every H gives the same rows."""
-    run = lambda m: sorted(map(tuple, _MIXED_OPS[op](spark, m).collect()), key=repr)  # noqa: E731
+    ids, every H gives the same rows. With the big group shrunk below
+    ``_MIN_COPIES`` ("no_heavy": 6 copies with an id, the reference
+    side's 7), the member map's job finds no heavy row and "auto" builds
+    the plan of "never": no routing join, no fan-out, no ``__rep``."""
+    run = lambda m: sorted(map(tuple, _MIXED_OPS[op](spark, m, copies).collect()), key=repr)  # noqa: E731
     never = run("never")
     assert never
     assert run("auto") == never
     assert run("always") == never
-    plan = _MIXED_OPS[op](spark, "auto")._jdf.queryExecution().analyzed().toString()
-    assert "__rep" in plan
+    plan = _MIXED_OPS[op](spark, "auto", copies)._jdf.queryExecution().analyzed().toString()
+    assert ("__rep" in plan) == (copies >= dd._MIN_COPIES)
 
 
 @pytest.mark.parametrize(

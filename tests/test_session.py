@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -31,6 +35,62 @@ def _compiles(spark) -> int:
         spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME().getCount()
     )
+
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def _jit(spark) -> dict[str, str]:
+    """The running JVM's JIT compiler thread count and where it came
+    from, as HotSpot reports them (VM_CREATION: the command line;
+    ERGONOMIC: sized from the host's cores)."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    opt = bean.getVMOption("CICompilerCount")
+    return {"value": opt.getValue(), "origin": opt.getOrigin().toString()}
+
+
+def _jit_in_new_jvm(extra_conf: dict) -> dict[str, str]:
+    """_jit of a JVM that get_spark(extra_conf=...) launches in a fresh
+    Python process."""
+    code = (
+        "import json, sys\n"
+        "from datamine_v2_0_spark.session import get_spark\n"
+        "from tests.test_session import _jit\n"
+        "conf = json.loads(sys.argv[1])\n"
+        "spark = get_spark('jit', master='local[1]', extra_conf=conf)\n"
+        "print(json.dumps(_jit(spark)))\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYTHONPATH=str(ROOT))
+    out = subprocess.run(
+        [sys.executable, "-c", code, json.dumps(extra_conf)],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+POLICY = {"value": "2", "origin": "VM_CREATION"}
+
+
+def test_driver_jit_policy(spark):
+    assert _jit(spark) == POLICY
+
+
+def test_driver_jit_policy_survives_extra_java_options():
+    """perfbench's shape: a caller's extraJavaOptions add to the policy."""
+    conf = {"spark.driver.extraJavaOptions": "-Xms1g"}
+    assert _jit_in_new_jvm(conf) == POLICY
+
+
+def test_driver_jit_policy_override_restores_defaults():
+    """Setting defaultJavaOptions through extra_conf replaces the policy:
+    HotSpot sizes the compiler threads from the cores again."""
+    conf = {"spark.driver.defaultJavaOptions": ""}
+    assert _jit_in_new_jvm(conf)["origin"] == "ERGONOMIC"
 
 
 def test_codegen_cache_confs(spark):

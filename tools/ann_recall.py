@@ -29,7 +29,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from datamine_v2_0_spark.operators import similarity as sim
 from datamine_v2_0_spark.session import get_spark
@@ -232,7 +233,7 @@ def main() -> None:
         mode = "a"
     else:
         mode = "w"
-    with open("/root/repo/ANN.md", mode) as f:
+    with open(os.path.join(REPO, "ANN.md"), mode) as f:
         f.write("\n".join(out) + "\n")
     n_pts = len(uni_rows)
     print(f"wrote ANN.md ({n_pts} operating points"

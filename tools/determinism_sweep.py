@@ -20,10 +20,12 @@ Exits nonzero listing every query whose two runs differ.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.verify_local import value_hash  # noqa: E402
 

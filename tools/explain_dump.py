@@ -14,7 +14,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from datamine_v2_0_spark.contract import QUERIES  # noqa: E402
 from datamine_v2_0_spark.session import get_spark  # noqa: E402
@@ -26,7 +27,7 @@ def main() -> None:
 
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r14")
+    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR", os.path.join(REPO, "plans/r14"))
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("explain_dump")
     for name in names:

@@ -18,7 +18,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from datamine_v2_0_spark.contract import QUERIES  # noqa: E402
 from datamine_v2_0_spark.session import get_spark  # noqa: E402

@@ -10,9 +10,11 @@ Usage: python tools/make_scaled.py [src_sf_dir] [N] [out_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 OFFSET = 1_000_000_000
 # per-table columns that carry entity identity and must shift per copy

@@ -28,12 +28,15 @@ import time
 
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
 SRC = "/tmp/probe6m/documents.parquet"
-OUT = os.environ.get("OPS_AT_SCALE_OUT", "/root/repo/OPS_AT_SCALE_r13.json")
+OUT = os.environ.get(
+    "OPS_AT_SCALE_OUT", os.path.join(REPO, "OPS_AT_SCALE_r13.json")
+)
 
 
 def build_corpus(spark) -> None:
@@ -80,7 +83,7 @@ def _read_commit_sha() -> str:
     import subprocess
 
     return subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+        ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip()
 

@@ -32,7 +32,8 @@ superseded readings it displaced, then the superseded rows with the
 reason. Exits nonzero if any op has NO authoritative reading.
 
 Usage: python tools/ops_at_scale_report.py [jsonl ...]
-       (default: /root/repo/OPS_AT_SCALE_r12.json + _r13.json if present)
+       (default: OPS_AT_SCALE_r12.json + _r13.json at the repository root,
+        if present)
 """
 
 from __future__ import annotations
@@ -41,9 +42,10 @@ import json
 import os
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT = [
-    "/root/repo/OPS_AT_SCALE_r12.json",
-    "/root/repo/OPS_AT_SCALE_r13.json",
+    os.path.join(REPO, "OPS_AT_SCALE_r12.json"),
+    os.path.join(REPO, "OPS_AT_SCALE_r13.json"),
 ]
 
 # (file basename, row index) -> reason a row (or one op inside it) is

@@ -28,10 +28,12 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # queries whose BroadcastNestedLoopJoins are deliberate 1-row or
 # tiny-literal fold-ins (corpus stats, thresholds) — linear, not
@@ -560,7 +562,7 @@ def main() -> None:
         f"| {s['sub']} | {s['win1']} | {s['ubc']} | {s['probes']} |"
         for n, s in rows
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(hdr + "\n".join(lines) + "\n")
     print(f"{len(rows)} plans audited, {len(flags)} flags")
     for fl in flags:

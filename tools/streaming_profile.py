@@ -24,12 +24,13 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 OUT = os.environ.get(
-    "STREAMING_PROFILE_OUT", "/root/repo/STREAMING_PROFILE_r14.json"
+    "STREAMING_PROFILE_OUT", os.path.join(REPO, "STREAMING_PROFILE_r14.json")
 )
 
 

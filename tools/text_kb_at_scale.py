@@ -45,15 +45,18 @@ import time
 
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from pyspark.sql import functions as F
 
 from ops_at_scale import commit_sha
 
 SRC = "/tmp/textkb/documents.parquet"
-OUT = os.environ.get("OPS_AT_SCALE_OUT", "/root/repo/OPS_AT_SCALE_r13.json")
+OUT = os.environ.get(
+    "OPS_AT_SCALE_OUT", os.path.join(REPO, "OPS_AT_SCALE_r13.json")
+)
 N = 1_000_000
 N_POCKETS = 10_000
 POCKET_COPIES = 10

@@ -11,13 +11,15 @@ from __future__ import annotations
 
 import decimal
 import hashlib
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -63,7 +65,6 @@ def main() -> None:
     import __spark_entry__ as e
 
     spark = get_spark("verify_local")
-    import os
 
     con = duckdb.connect()
     for t in TABLES:
