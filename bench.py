@@ -19,7 +19,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datamine_v2_0_spark.contract import QUERIES  # noqa: E402
-from datamine_v2_0_spark.session import get_spark  # noqa: E402
+from datamine_v2_0_spark.session import default_cpus, get_spark  # noqa: E402
 
 # Representative of every operator family; ordered cheap → expensive.
 HEADLINE = [
@@ -165,7 +165,7 @@ def main() -> None:
         # session honored $SPARK_GRAFT_CPUS instead of inferring it from
         # timing ratios (which are overhead-bound at sf0.1 and false-
         # positive on a loud host).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": default_cpus(),
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(

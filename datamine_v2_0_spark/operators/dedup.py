@@ -790,6 +790,18 @@ def _star_edges(pairs: DataFrame, members: DataFrame | None) -> DataFrame:
     representative ``r`` that appears in any pair, its self-pair
     ``(r, r)`` included.
 
+    One pass over ``pairs`` builds both: a left join of the
+    non-representative members on ``id_a = id_b = __rep`` turns each
+    heavy self-pair ``(r, r)`` into its star ``(r, m)``, every other
+    pair meets no member and keeps ``id_b``, and ``id_a < id_b`` then
+    drops the self-pairs (a star edge passes it: the representative is
+    its group's minimum id). That a heavy ``r`` appears in some pair
+    exactly when ``(r, r)`` is present holds because a pair ``(r, s)``
+    means ``r`` shingles (over the capped universe, when there is a
+    cap), and a heavy representative that shingles pairs with itself at
+    Jaccard 1 (:func:`_posting_pairs`). So ``pairs``, whose posting
+    self-join is the costly part of the plan, is read once.
+
     Why the components are identical: :func:`_fan_out` turns a pair
     ``(r, s)`` into all of ``members(r) × members(s)`` (a light
     document's members are itself) and a self-pair ``(r, r)`` into a
@@ -805,18 +817,12 @@ def _star_edges(pairs: DataFrame, members: DataFrame | None) -> DataFrame:
     singletons in both graphs."""
     if members is None:
         return pairs
-    paired = pairs.select(F.col("id_a").alias("__rep")).union(
-        pairs.select(F.col("id_b").alias("__rep"))
-    )
-    star = (
-        members.join(paired, "__rep", "left_semi")
-        .filter(F.col("__m") != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col("__m").alias("id_b"))
-    )
+    copies = members.filter(F.col("__m") != F.col("__rep")).select("__rep", "__m")
+    self_pair = (F.col("id_a") == F.col("id_b")) & (F.col("id_a") == F.col("__rep"))
     return (
-        pairs.filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .union(star)
+        pairs.join(copies, self_pair, "left")
+        .select("id_a", F.coalesce("__m", "id_b").alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
     )
 
 
@@ -1041,11 +1047,16 @@ def embedding_neardup_pairs(
 _CC_BLOCK_HOPS = 2
 
 
-def _cc_hop(edges: DataFrame, lab: DataFrame) -> DataFrame:
+def _cc_hop(edges: DataFrame, lab: DataFrame | None) -> DataFrame:
     """One min-label propagation hop: every node adopts the minimum of
     its own label and its 1-hop neighborhood's labels. Returns
     ``(node, comp, old_comp)``, where ``old_comp`` is the node's label
     before this hop, so ``comp < old_comp`` counts this hop's changes.
+
+    ``lab`` None is the first hop, from the labelling every node starts
+    with, its own id: the neighborhood's labels are then the neighbors'
+    ids, so the hop is one aggregate of ``edges`` by ``src``,
+    ``least(node, min(dst))``, with no join and no distinct node list.
 
     ``edges`` is the symmetrized edge set that
     :func:`connected_components` cuts once with an eager checkpoint;
@@ -1059,6 +1070,11 @@ def _cc_hop(edges: DataFrame, lab: DataFrame) -> DataFrame:
     ``comp < old_comp`` convergence check. True by construction for the
     one caller (:func:`connected_components` symmetrizes edges and
     derives labels from src); any new caller must guarantee it."""
+    if lab is None:
+        return edges.groupBy(F.col("src").alias("node")).agg(
+            F.least("src", F.min("dst")).alias("comp"),
+            F.col("src").alias("old_comp"),
+        )
     # neighbor labels UNIONed with each node's own row, then ONE min
     # aggregate: min over (own ∪ neighborhood) == least(own,
     # min(neighbors)) exactly, so this folds the old `lab LEFT JOIN
@@ -1067,14 +1083,23 @@ def _cc_hop(edges: DataFrame, lab: DataFrame) -> DataFrame:
     # old_comp rides as max-ignoring-nulls: each node has exactly one
     # own row carrying it; neighbor rows contribute null.
     comp_t = dict(lab.dtypes)["comp"]
+    # a shuffled hash join built on the labels (one row per node, so a
+    # partition's table is bounded by nodes / partitions; the edge set
+    # streams and is never sorted). Unhinted, AQE broadcasts whichever
+    # side's shuffle stage finishes first: the first hop's aggregate
+    # does not wait for the edge shuffle, so that race flipped the build
+    # side, and the row order every later shuffle writes, between runs
     nbr = edges.join(
-        lab.select(F.col("node").alias("dst"), F.col("comp").alias("__c")),
+        lab.select(F.col("node").alias("dst"), F.col("comp").alias("__c")).hint("shuffle_hash"),
         "dst",
     ).select(
         F.col("src").alias("node"), "__c",
         F.lit(None).cast(comp_t).alias("old_comp"),
     )
-    own = lab.select(
+    # the join infers isnotnull(dst) on the neighbor read of lab; the same
+    # (always true) filter here makes both reads plan alike, so when lab
+    # is the first hop's aggregate AQE shuffles it once and reuses it
+    own = lab.filter(F.col("node").isNotNull()).select(
         "node", F.col("comp").alias("__c"), F.col("comp").alias("old_comp")
     )
     return nbr.unionAll(own).groupBy("node").agg(
@@ -1109,8 +1134,12 @@ def connected_components(
     wrong groups.
 
     The symmetrized edge set — the LARGEST relation here, touched by
-    every hop's join on ``dst`` — is cut once with an eager
-    checkpoint and the hops read its blocks. A checkpoint, not
+    every hop's join on ``dst`` — reads ``pairs`` once: each pair
+    explodes into both of its directions (a union of two reads would
+    plan and run the whole pair subtree twice). It is cut once with an
+    eager checkpoint and the hops read its blocks. The first hop starts
+    from every node labelled with its own id, so it is one aggregate of
+    the edge set (see :func:`_cc_hop`). A checkpoint, not
     ``persist``: a persisted frame keeps the whole pair-graph subtree
     in the logical plan and re-pays its analysis/AQE cost on every
     block's job (measured +~1.4 s per run at sf0.1), while the
@@ -1125,17 +1154,17 @@ def connected_components(
     returned DataFrame."""
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
+    both = F.array(
+        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+    )
     edges = iter_checkpoint(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.explode(both).alias("__e"))
+        .select("__e.src", "__e.dst")
         .dropna()
         .distinct()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
+    labels = None
     hops = 0
     while hops < max_iterations:
         for _ in range(min(_CC_BLOCK_HOPS, max_iterations - hops)):

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datamine_v2_0_spark.operators import windows as win
+from datamine_v2_0_spark.sources.parquet_io import read_parquet_memo
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -20,6 +21,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a long (legacy conf) and truncate to microseconds with integer
     division (a double division would lose precision above 2^53 ns).
     Newer generations store plain TIMESTAMP(MICROS) — pass through.
+
+    Each table's schema is inferred once per session
+    (:func:`~datamine_v2_0_spark.sources.parquet_io.read_parquet_memo`),
+    so after a table's first read its reads launch no job.
     """
     # the driver supplies its own SparkSession; epoch-bucketing queries
     # (gapfill/hopping/cohort/range-bin) and NTZ->TIMESTAMP casts are only
@@ -28,7 +33,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet_memo(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type in ("bigint", "long"):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -37,7 +42,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # and matches DuckDB's naive read of the same parquet
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet_memo(spark, f"{sf_dir}/{name}.parquet")
 
 def _events_window():
     return win.ordered_window(["user_id"], ["ts", "event_id"])

@@ -42,6 +42,19 @@ from pyspark.sql import SparkSession
 DRIVER_JIT_OPTIONS = "-XX:CICompilerCount=2"
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask, which a container's cpuset narrows; not the host's
+    count), so an unset variable never oversubscribes the host."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS, Windows)
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "datamine_v2_0_spark",
     master: str | None = None,
@@ -50,14 +63,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Defaults are sized for ``local[$SPARK_GRAFT_CPUS]`` test runs but
+    Defaults are sized for ``local[$SPARK_GRAFT_CPUS]`` test runs
+    (:func:`default_cpus` when the variable is unset) but
     every choice is the one you'd also make on a 1000-executor
     cluster: AQE on (coalesce + skew-join), Arrow on, UTC session
     timezone (the reference stores TIMESTAMPTZ and renders in UTC),
     shuffle partitions ~ cores locally (on a real cluster leave the
     default / let AQE coalesce).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(cpus))

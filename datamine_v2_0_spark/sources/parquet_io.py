@@ -14,6 +14,7 @@ declarative; `read_parquet_pruned` just pins the idiom.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -37,6 +38,68 @@ def write_parquet_partitioned(
         .partitionBy(*partition_cols)
         .parquet(path)
     )
+
+
+# Reader confs that change the schema Spark infers from parquet footers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (applicationId, path, confs, listing) -> inferred schema. A miss
+# evicts the entries of other applications (a stopped session's) and the
+# path's entry for an older listing under the same confs. Queries may be
+# built from several threads, so the miss's evict-and-insert holds a lock.
+_SCHEMAS: dict = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _listing(spark: SparkSession, path: str) -> tuple | None:
+    """(path, length, modification time) of every file under ``path``
+    through the Hadoop FileSystem API (so s3a://, hdfs:// paths work
+    too), or None when ``path`` does not exist."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return None
+    out = []
+    it = fs.listFiles(hpath, True)  # recursive
+    while it.hasNext():
+        st = it.next()
+        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    session. Without a schema every read runs a schema-inference job
+    (``mergeSchemasInParallel``), even for one file; a read whose memo
+    key is unchanged passes the remembered schema instead and launches
+    no job.
+
+    The key holds the application id, the reader confs that change
+    inference and the file listing (path, length, modification time),
+    so a rewritten file or a toggled conf is inferred again: a stale
+    schema could change a result. For inputs rewritten on every use
+    the memo would always miss, so those read without it
+    (:func:`read_parquet_pruned`)."""
+    listing = _listing(spark, path)
+    if listing is None:
+        return spark.read.parquet(path)  # raises the reader's own error
+    app = spark.sparkContext.applicationId
+    key = (app, path, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS), listing)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        for k in [k for k in _SCHEMAS if k[0] != app or k[1:3] == key[1:3]]:
+            del _SCHEMAS[k]
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def read_parquet_pruned(

@@ -7,6 +7,7 @@ dims broadcast, window stacks share exchanges, projections prune columns.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -120,6 +121,53 @@ def test_group_resolution_plans_stay_equi_join(spark):
     assert not has_cartesian(
         dd.ngram_jaccard_pairs(cands, docs, "text", "doc_id", threshold=0.2)
     )
+
+
+def _joins(df) -> list[str]:
+    """The Join nodes of ``df``'s optimized logical plan, one line each."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if re.search(r"\bJoin [A-Z]", ln)]
+
+
+def test_dedup_groups_plans_the_pair_graph_once(spark, monkeypatch):
+    """dedup_groups' edge set reads the Jaccard pairs once: one posting
+    self-join (the join on ``__s``), however many relations the star
+    edges and the symmetrized edge set derive from it. The first label
+    block joins once, for its second hop; the first hop is an aggregate
+    of the edge set, shuffled once and reused by both of the second
+    hop's reads of it. The second hop's join stays a shuffled hash
+    join: AQE would otherwise broadcast whichever side's shuffle
+    finished first, so the plan, and the row order it writes, changed
+    from run to run."""
+    from datamine_v2_0_spark.operators import dedup as dd
+
+    cuts = []
+    real = dd.iter_checkpoint
+
+    def spy(df):
+        cuts.append(df)
+        return real(df)
+
+    monkeypatch.setattr(dd, "iter_checkpoint", spy)
+    base = "the quick brown fox jumps over the lazy dog near the river"
+    rows = [(i, base) for i in range(dd._MIN_COPIES + 2)]
+    rows += [(100, base + " bank"), (101, "a b c d e f g h"), (102, "a b c d e f g x")]
+    rows += [(200 + i, f"solo{i} alpha{i} beta{i} gamma{i}") for i in range(3)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs, members = dd._jaccard_pairs_core(docs, "text", "doc_id", threshold=0.2)
+    assert members is not None
+    groups = dd.dedup_groups(docs, "doc_id", dd._star_edges(pairs, members))
+    got = {r.doc_id: r.group_id for r in groups.collect()}
+    assert got[100] == got[dd._MIN_COPIES + 1] == 0 and got[102] == 101
+
+    edge_set = next(df for df in cuts if df.columns == ["src", "dst"])
+    posting = [j for j in _joins(edge_set) if re.search(r"__s#\d+ = __s#\d+", j)]
+    assert len(posting) == 1, _joins(edge_set)
+    first_block = next(df for df in cuts if "old_comp" in df.columns)
+    assert len(_joins(first_block)) == 1, _joins(first_block)
+    final = first_block._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in final, final
+    assert "ShuffledHashJoin" in final and "BroadcastHashJoin" not in final, final
 
 
 def test_corpus_curation_plans(spark):

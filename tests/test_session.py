@@ -93,6 +93,29 @@ def test_driver_jit_policy_override_restores_defaults():
     assert _jit_in_new_jvm(conf)["origin"] == "ERGONOMIC"
 
 
+def test_cpus_default_to_the_affinity_mask():
+    """Without $SPARK_GRAFT_CPUS a session runs as many task threads as
+    this process may use CPUs, never a fixed count."""
+    code = (
+        "import json\n"
+        "from datamine_v2_0_spark.session import default_cpus, get_spark\n"
+        "spark = get_spark('cpus')\n"
+        "print(json.dumps([default_cpus(), spark.sparkContext.master,\n"
+        "    spark.conf.get('spark.sql.shuffle.partitions')]))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k not in (
+        "SPARK_GRAFT_CPUS", "SPARK_MASTER", "SPARK_SHUFFLE_PARTITIONS")}
+    env.update(SPARK_DRIVER_MEM="1g", PYTHONPATH=str(ROOT))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    n = len(os.sched_getaffinity(0))
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == [n, f"local[{n}]", str(n)]
+
+
 def test_codegen_cache_confs(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
     assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"

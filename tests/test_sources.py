@@ -4,6 +4,7 @@ Label Studio JSON flattening, VALUES view."""
 from __future__ import annotations
 
 import json
+import uuid
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -18,6 +19,7 @@ from datamine_v2_0_spark.sources.annotations import (
     flatten_label_studio,
     read_label_studio_json,
 )
+from datamine_v2_0_spark.queries.base import _t
 from datamine_v2_0_spark.sources.parquet_io import (
     list_partitions,
     read_parquet_pruned,
@@ -86,6 +88,59 @@ def test_parquet_partitioned_roundtrip_and_pruning(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "ReadSchema: struct<v:double>" in plan
+
+
+def _jobs(spark, fn):
+    """(fn(), the number of jobs fn launched), counted by the status
+    tracker under a job group of fn's own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_registry_read_infers_a_schema_once(spark, tmp_path):
+    """A table's first read in a session infers its schema (one job);
+    every later read passes the remembered schema and launches none."""
+    spark.range(5).write.parquet(str(tmp_path / "t.parquet"))
+    first, cold = _jobs(spark, lambda: _t(spark, str(tmp_path), "t"))
+    second, warm = _jobs(spark, lambda: _t(spark, str(tmp_path), "t"))
+    assert cold >= 1
+    assert warm == 0
+    assert second.schema == first.schema
+    assert second.count() == 5
+
+
+def test_rewritten_table_is_inferred_again(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert _t(spark, str(tmp_path), "t").columns == ["id"]
+    spark.createDataFrame([("x",)], "b string").write.mode("overwrite").parquet(path)
+    again = _t(spark, str(tmp_path), "t")
+    assert again.dtypes == [("b", "string")]
+    assert [r.b for r in again.collect()] == ["x"]
+
+
+def test_toggled_reader_conf_misses_the_schema_memo(spark, tmp_path):
+    """spark.sql.legacy.parquet.nanosAsLong changes what a TIMESTAMP(NANOS)
+    column infers to, so it is part of the memo key."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
+    read = lambda: _t(spark, str(tmp_path), "t")  # noqa: E731
+    read()
+    assert _jobs(spark, read)[1] == 0
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false" if prev == "true" else "true")
+    try:
+        assert _jobs(spark, read)[1] >= 1
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_csv_partitioned_export(spark, tmp_path):
