@@ -1057,6 +1057,14 @@ def _cc_hop(edges: DataFrame, lab: DataFrame | None) -> DataFrame:
     with, its own id: the neighborhood's labels are then the neighbors'
     ids, so the hop is one aggregate of ``edges`` by ``src``,
     ``least(node, min(dst))``, with no join and no distinct node list.
+    That aggregate carries a ``shuffle_hash`` hint, which plans the next
+    hop's join as a shuffled hash join built on it (one row per node, so
+    a partition's table is bounded by nodes / partitions; the edge set
+    streams and is not sorted). Its shuffle stage runs at the same time
+    as that join's edge shuffle, and unhinted AQE broadcasts whichever
+    side finishes first, so the build side, and the row order every
+    later shuffle writes, changed between runs. Later hops read a
+    checkpointed or join-fed ``lab`` and leave the strategy to AQE.
 
     ``edges`` is the symmetrized edge set that
     :func:`connected_components` cuts once with an eager checkpoint;
@@ -1074,7 +1082,7 @@ def _cc_hop(edges: DataFrame, lab: DataFrame | None) -> DataFrame:
         return edges.groupBy(F.col("src").alias("node")).agg(
             F.least("src", F.min("dst")).alias("comp"),
             F.col("src").alias("old_comp"),
-        )
+        ).hint("shuffle_hash")
     # neighbor labels UNIONed with each node's own row, then ONE min
     # aggregate: min over (own ∪ neighborhood) == least(own,
     # min(neighbors)) exactly, so this folds the old `lab LEFT JOIN
@@ -1083,14 +1091,8 @@ def _cc_hop(edges: DataFrame, lab: DataFrame | None) -> DataFrame:
     # old_comp rides as max-ignoring-nulls: each node has exactly one
     # own row carrying it; neighbor rows contribute null.
     comp_t = dict(lab.dtypes)["comp"]
-    # a shuffled hash join built on the labels (one row per node, so a
-    # partition's table is bounded by nodes / partitions; the edge set
-    # streams and is never sorted). Unhinted, AQE broadcasts whichever
-    # side's shuffle stage finishes first: the first hop's aggregate
-    # does not wait for the edge shuffle, so that race flipped the build
-    # side, and the row order every later shuffle writes, between runs
     nbr = edges.join(
-        lab.select(F.col("node").alias("dst"), F.col("comp").alias("__c")).hint("shuffle_hash"),
+        lab.select(F.col("node").alias("dst"), F.col("comp").alias("__c")),
         "dst",
     ).select(
         F.col("src").alias("node"), "__c",

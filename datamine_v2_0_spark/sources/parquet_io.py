@@ -14,6 +14,7 @@ declarative; `read_parquet_pruned` just pins the idiom.
 
 from __future__ import annotations
 
+import re
 import threading
 from collections.abc import Sequence
 
@@ -56,21 +57,56 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict = {}
 _SCHEMAS_LOCK = threading.Lock()
 
+# A hit repeats the listing Spark makes to plan the scan, which grows
+# with the file count, to save a schema job, which does not. On a local
+# 4-core host a hit reads a one-file table in a quarter of a plain
+# read's time, breaks even at 100 files and is slower from a few hundred
+# on (SCALING.md "Registry read listing"), so a table of more files is
+# read without the memo: (applicationId, path) lands here on its first
+# read, and later reads skip the listing.
+_MEMO_MAX_FILES = 100
+_UNMEMOIZED: set = set()
+
+# FileStatus.toString of one entry: "FileStatus{path=...; isDirectory=
+# false; length=...; replication=...; blocksize=...; modification_time=
+# ...; access_time=...; owner=...; ...}"; a directory has no length.
+# Each lazy group stops inside its own entry, so a scan is linear.
+_STATUS = re.compile(
+    r"path=(.*?); isDirectory=(true|false)(?:; length=(\d+))?;.*?modification_time=(\d+);"
+)
+
 
 def _listing(spark: SparkSession, path: str) -> tuple | None:
     """(path, length, modification time) of every file under ``path``
     through the Hadoop FileSystem API (so s3a://, hdfs:// paths work
-    too), or None when ``path`` does not exist."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    too), sorted, or None when ``path`` does not exist.
+
+    Each directory costs a few Py4J round trips whatever it holds: its
+    ``listStatusIterator`` is collected into one Java list, rendered to
+    one string JVM-side and parsed here. Not ``listFiles``: on the local
+    filesystem its
+    ``LocatedFileStatus`` loads each file's permissions with a shell
+    command (~3 ms a file, seconds on a directory of thousands of part
+    files; SCALING.md has the timings). The access time the rendering
+    also carries is left out, since reading a file may change it. A
+    rendering that does not parse into one entry per status raises
+    rather than key the memo on a partial listing."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
         return None
-    out = []
-    it = fs.listFiles(hpath, True)  # recursive
-    while it.hasNext():
-        st = it.next()
-        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
-    return tuple(sorted(out))
+    files, dirs = [], [hpath]
+    while dirs:
+        statuses = jvm.org.apache.hadoop.util.functional.RemoteIterators.toList(
+            fs.listStatusIterator(dirs.pop())
+        )
+        found = _STATUS.findall(statuses.toString())
+        if len(found) != statuses.size():
+            raise RuntimeError(f"unparsed FileStatus rendering in the listing of {path}")
+        files += [(p, n, t) for p, d, n, t in found if d == "false"]
+        dirs += [jvm.org.apache.hadoop.fs.Path(p) for p, d, _, _ in found if d == "true"]
+    return tuple(sorted(files))
 
 
 def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
@@ -85,11 +121,23 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     so a rewritten file or a toggled conf is inferred again: a stale
     schema could change a result. For inputs rewritten on every use
     the memo would always miss, so those read without it
-    (:func:`read_parquet_pruned`)."""
+    (:func:`read_parquet_pruned`).
+
+    Every memoized read lists ``path`` once more than a plain read does
+    (Spark lists it again to plan the scan). A table of more than
+    ``_MEMO_MAX_FILES`` files, where that listing costs more than the
+    job it saves, is read plainly from its first read on."""
+    app = spark.sparkContext.applicationId
+    if (app, path) in _UNMEMOIZED:
+        return spark.read.parquet(path)
     listing = _listing(spark, path)
     if listing is None:
         return spark.read.parquet(path)  # raises the reader's own error
-    app = spark.sparkContext.applicationId
+    if len(listing) > _MEMO_MAX_FILES:
+        with _SCHEMAS_LOCK:
+            _UNMEMOIZED.difference_update([k for k in _UNMEMOIZED if k[0] != app])
+            _UNMEMOIZED.add((app, path))
+        return spark.read.parquet(path)
     key = (app, path, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS), listing)
     schema = _SCHEMAS.get(key)
     if schema is not None:
@@ -273,18 +321,7 @@ def compact_parquet_partitions(
         # Hadoop FileSystem API, not os.walk: the lake paths this job
         # exists for (s3a://, hdfs://) are invisible to local os.walk,
         # which would silently report 0 files while the rewrite ran.
-        jvm = spark._jvm
-        jsc = spark._jsc
-        hpath = jvm.org.apache.hadoop.fs.Path(root)
-        fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return 0
-        n = 0
-        it = fs.listFiles(hpath, True)  # recursive
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
+        return sum(p.endswith(".parquet") for p, _, _ in _listing(spark, root) or ())
 
     df = spark.read.parquet(src_path)
     rows = df.count()

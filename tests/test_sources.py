@@ -4,6 +4,7 @@ Label Studio JSON flattening, VALUES view."""
 from __future__ import annotations
 
 import json
+import os
 import uuid
 
 import pytest
@@ -141,6 +142,46 @@ def test_toggled_reader_conf_misses_the_schema_memo(spark, tmp_path):
         assert _jobs(spark, read)[1] >= 1
     finally:
         spark.conf.set(key, prev)
+
+
+def test_table_of_many_files_reads_without_the_memo(spark, tmp_path, monkeypatch):
+    """Above the file-count bound the memo's listing costs more than the
+    schema job it saves: every read infers, and after the first none
+    lists the table."""
+    from datamine_v2_0_spark.sources import parquet_io
+
+    monkeypatch.setattr(parquet_io, "_MEMO_MAX_FILES", 2)
+    spark.range(9).repartition(3).write.parquet(str(tmp_path / "t.parquet"))
+    listed = []
+    listing = parquet_io._listing
+    monkeypatch.setattr(
+        parquet_io, "_listing", lambda s, p: listed.append(p) or listing(s, p)
+    )
+    _t(spark, str(tmp_path), "t")
+    again, jobs = _jobs(spark, lambda: _t(spark, str(tmp_path), "t"))
+    assert jobs >= 1
+    assert len(listed) == 1
+    assert again.count() == 9
+
+
+def test_memo_listing_walks_partition_directories(spark, tmp_path):
+    """The memo key's listing, parsed from one rendering per directory,
+    holds every data file under a partitioned table with its size."""
+    from datamine_v2_0_spark.sources.parquet_io import _listing
+
+    out = str(tmp_path / "p")
+    df = spark.range(12).selectExpr("id", "id % 3 AS k").repartition(2)
+    df.write.partitionBy("k").parquet(out)
+    got = {(p.split(str(tmp_path), 1)[1], int(n)) for p, n, _ in _listing(spark, out)}
+    want = {
+        (os.path.join(d, f)[len(str(tmp_path)):], os.path.getsize(os.path.join(d, f)))
+        for d, _, fs in os.walk(out)
+        for f in fs
+        if not f.endswith(".crc")  # the checksummed local FS hides them
+    }
+    assert got == want
+    assert sum(p.endswith(".parquet") for p, _ in got) >= 3
+    assert _listing(spark, str(tmp_path / "missing")) is None
 
 
 def test_csv_partitioned_export(spark, tmp_path):
